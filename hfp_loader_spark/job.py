@@ -153,9 +153,12 @@ def hfp_load(
     # Concurrent group loads (guide §2.6): each group gets its OWN report
     # so no thread shares mutable state; the per-table rows merge after —
     # table sets are disjoint across groups, so the merge is a plain
-    # union.  Errors propagate exactly as the sequential loop's did: the
-    # first failing group raises after the in-flight groups finish
-    # (pool shutdown joins them), nothing is silently swallowed.
+    # union.  Failure is NOT the sequential loop's: every group starts at
+    # once, so a failing group stops none of the others.  They run to
+    # completion and commit their appends; the first failure in group
+    # order raises only after the pool joins them (shutdown on exit), and
+    # the committed groups' counts are lost with it.  Nothing is
+    # swallowed, and a re-run's anti-join blocks the rows they committed.
     from concurrent.futures import ThreadPoolExecutor
 
     def run_group(group: str) -> LoadReport:

@@ -53,9 +53,14 @@ def anti_join_existing(
     """Keep incoming rows whose ``key`` is not in ``existing_keys`` (J1).
 
     ``existing_keys`` is pruned to the key column so Catalyst ships only
-    uuids.  AQE picks broadcast vs shuffled anti-join by size at runtime; a
-    caller that already knows the key side is small can force it via
-    ``broadcast_threshold_rows=0`` (always broadcast).
+    uuids.  It must be a file scan or a local relation (or a union of
+    them): the planner sizes a file scan from its statistics and
+    broadcasts a small one, and a provably empty local relation (see
+    ``sink.empty_key_set``) removes the join from the plan.  A key side
+    without statistics (``createDataFrame``, an RDD) plans a sort-merge
+    join that shuffles both sides before AQE can re-plan it.  A caller
+    that already knows the key side is small can force a broadcast via
+    ``broadcast_threshold_rows=0``.
     """
     keys = existing_keys.select(key).where(
         F.col(key).isNotNull() & (F.length(key) > 0)

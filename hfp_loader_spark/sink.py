@@ -44,9 +44,10 @@ def with_id_column(df: DataFrame) -> DataFrame:
 #: read surfaces it).  Pinning this on the ``existing_keys`` read skips
 #: Spark's eager footer-schema job — measured 2-3 metadata jobs per
 #: ``spark.read.parquet`` on a partitioned table vs 0 with an explicit
-#: schema, and a steady-state day-load fires 4 existing-keys reads, so
-#: this was ~40% of the e2e load's job count (VERDICT r14 #5: the
-#: ``hfp_load_day_e2e`` bench entry is local-mode job-scheduling floor).
+#: schema.  A re-load of a day that the sink already holds fires one
+#: existing-keys read per sink table (4), and a fresh day fires none that
+#: reach a file (see :meth:`ParquetSink.existing_keys`), so the load's
+#: jobs stay its write jobs.
 #: Safe because every file under a sink table was written by
 #: :meth:`ParquetSink.write` from this exact projection — asserted
 #: against the inferred schema in tests/test_etl_golden.py.
@@ -55,6 +56,36 @@ SINK_SCHEMA = T.StructType(
     + [f for f in TYPED_SCHEMA.fields if f.name != "oday"]
     + [T.StructField("oday", T.DateType(), True)]
 )
+
+
+def empty_key_set(spark: SparkSession) -> DataFrame:
+    """A ``uuid string`` key set that Catalyst can prove empty.
+
+    A local relation under ``WHERE false`` optimizes to an empty
+    ``LocalRelation``, so ``PropagateEmptyRelation`` removes an anti-join
+    against it (and its shuffles) at plan time.  ``createDataFrame([])``
+    does not: it is a ``LogicalRDD`` without statistics, and the join
+    shuffles the whole incoming side before AQE sees 0 key rows.
+    """
+    return spark.sql("SELECT CAST(NULL AS STRING) AS uuid WHERE false")
+
+
+def _no_unpartitioned_files(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` is missing or holds no data file of its own,
+    only ``_``/``.`` metadata files beside its partition directories —
+    the layout :meth:`ParquetSink.write` makes.  Lists only the files
+    directly in the table directory (the listing skips directories), so
+    the cost does not grow with the number of days held."""
+    from hfp_loader_spark.versioned import _fs
+
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)):
+        return True
+    files = fs.listFiles(P(path), False)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return False
+    return True
 
 
 class ParquetSink:
@@ -79,21 +110,36 @@ class ParquetSink:
     ) -> DataFrame:
         """Day-scoped uuid scan (S4 analog).
 
-        The oday filter prunes to one partition and Catalyst prunes columns
-        to just ``uuid`` — the Spark translation of
-        ``SELECT uuid FROM <t> WHERE oday = $1``.  The read pins
-        ``SINK_SCHEMA`` (our own write projection) so no footer-schema
-        job runs at plan-build time.
-        Missing table (first load) → empty key set; any OTHER read error
-        (corrupt footer, permission denial) propagates — swallowing it
-        would silently re-insert the whole day.
+        Reads only the day's ``oday=<date>`` partition directory (with the
+        table as ``basePath``, so ``oday`` still surfaces as a partition
+        column) and Catalyst prunes columns to just ``uuid`` — the Spark
+        translation of ``SELECT uuid FROM <t> WHERE oday = $1``.  The read
+        pins ``SINK_SCHEMA`` (our own write projection) so no footer-schema
+        job runs at plan-build time.  The date is re-parsed here because it
+        becomes part of a path.
+        Missing table (first load) or no partition for the day in a table
+        of our layout → the provably empty :func:`empty_key_set`, so the
+        anti-join drops out of the plan.  A table directory with data
+        files of its own, outside any partition directory (a corrupt or
+        older unpartitioned layout), is read whole, as one table, so
+        its read errors and the null-uuid backstop below still fire; any
+        OTHER read error (corrupt footer, permission denial) propagates —
+        swallowing it would silently re-insert the whole day.
         """
+        date = datetime.date.fromisoformat(date).isoformat()
+        path = self.table_path(table)
         try:
-            df = spark.read.schema(SINK_SCHEMA).parquet(self.table_path(table))
+            df = (
+                spark.read.option("basePath", path)
+                .schema(SINK_SCHEMA)
+                .parquet(f"{path}/oday={date}")
+            )
         except AnalysisException as e:
-            if is_path_not_found(e):
-                return spark.createDataFrame([], "uuid string")
-            raise
+            if not is_path_not_found(e):
+                raise
+            if _no_unpartitioned_files(spark, path):
+                return empty_key_set(spark)
+            df = spark.read.schema(SINK_SCHEMA).parquet(path)
         # Fail-loud backstop (ADVICE r15): a pinned read schema NULLs any
         # column the on-disk files lack instead of erroring, so a sink
         # table written by an older layout without ``uuid`` would yield
@@ -222,7 +268,7 @@ class VersionedParquetSink:
         from hfp_loader_spark.versioned import latest_version, read_snapshot
 
         if latest_version(spark, self.table_path(table)) is None:
-            return spark.createDataFrame([], "uuid string")
+            return empty_key_set(spark)
         df = read_snapshot(spark, self.table_path(table))
         return df.where(F.col("oday") == F.to_date(F.lit(date))).select("uuid")
 

@@ -24,7 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hfp_loader_spark.operators.dedup import anti_join_existing, filter_valid_uuid
+from hfp_loader_spark.operators.dedup import (
+    anti_join_existing,
+    filter_valid_uuid,
+    union_key_sets,
+)
 from hfp_loader_spark.operators.routing import (
     TARGET_COL,
     routed_tables,
@@ -91,10 +95,10 @@ def hfp_stream_load(
     tables = routed_tables(event_group)
 
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        fresh = batch_df
-        for t in tables:
-            fresh = anti_join_existing(fresh, sink.existing_keys(spark, t, date))
-        fresh = fresh.persist()
+        existing = union_key_sets(
+            *[sink.existing_keys(spark, t, date) for t in tables]
+        )
+        fresh = anti_join_existing(batch_df, existing).persist()
         try:
             for t in tables:
                 sink.write(

@@ -71,3 +71,11 @@ def test_jdbc_existing_keys_validates_date():
     sink = JdbcSink("jdbc:postgresql://localhost/nope")
     with pytest.raises(ValueError):
         sink.existing_keys(None, "vehicleposition", "2021-02-09'; DROP TABLE x--")
+
+
+def test_parquet_existing_keys_validates_date():
+    """The date names the partition directory read, so a non-ISO date
+    must raise before it becomes part of a path."""
+    sink = ParquetSink("/nonexistent/stage")
+    with pytest.raises(ValueError):
+        sink.existing_keys(None, "vehicleposition", "2021-02-09/../x")

@@ -102,6 +102,31 @@ def test_vp_union_keyset_blocks_across_tables(spark, fixture_root, tmp_path):
     assert second.total_inserted == 0
 
 
+def test_second_day_loads_beside_the_first(spark, tmp_path):
+    """Day B into a sink holding day A: B inserts in full, A is untouched,
+    and a re-load of B inserts nothing.  The fixture repeats A's uuids on
+    B, so only the day-scoped key set (hfpTask.ts:97) lets B's rows in."""
+    day_b = "2021-02-10"
+    root = tmp_path / "blobs"
+    write_fixture(root, date=DATE)
+    rows_b = write_fixture(root, date=day_b)
+    sink = ParquetSink(str(tmp_path / "stage"))
+    first = hfp_load(spark, str(root), DATE, sink)
+
+    def rows_of_day_a(table):
+        return (
+            spark.read.parquet(sink.table_path(table))
+            .where(f"oday = DATE '{DATE}'")
+            .count()
+        )
+
+    day_a_rows = {t: rows_of_day_a(t) for t in first.inserted_by_table}
+    report = hfp_load(spark, str(root), day_b, sink)
+    assert report.inserted_by_table == expected_counts(rows_b)
+    assert {t: rows_of_day_a(t) for t in day_a_rows} == day_a_rows
+    assert hfp_load(spark, str(root), day_b, sink).total_inserted == 0
+
+
 def test_multiline_quoted_newline_parity(spark, tmp_path):
     """Opt-in multiLine matches the reference's quote-aware-across-newlines
     csv-parse; the default (splittable scan) documents the divergence."""

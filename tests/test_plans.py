@@ -78,6 +78,60 @@ def test_staging_sink_partition_prunes(spark, tmp_path):
     assert "lat" not in read_schema  # pruned to the key column
 
 
+def _vp_dedup_against(spark, root, sink, date):
+    """The VehiclePosition group's dedup plan, as job.load_event_group
+    builds it: typed day anti-joined against the union of its key sets."""
+    from hfp_loader_spark.operators.dedup import (
+        anti_join_existing,
+        filter_valid_uuid,
+        union_key_sets,
+    )
+    from hfp_loader_spark.operators.routing import routed_tables
+    from hfp_loader_spark.operators.transform import typed_projection
+    from hfp_loader_spark.sources.csv_source import read_hfp_group
+
+    group = "vehiclePosition"
+    typed = filter_valid_uuid(
+        typed_projection(read_hfp_group(spark, root, group, date))
+    )
+    keys = union_key_sets(
+        *[sink.existing_keys(spark, t, date) for t in routed_tables(group)]
+    )
+    return anti_join_existing(typed, keys)
+
+
+@pytest.mark.parametrize("prior", ["missing_table", "other_day_only"])
+def test_known_empty_key_set_drops_the_anti_join(spark, tmp_path, prior):
+    """A sink without rows for the day yields a key set Catalyst can prove
+    empty, so the anti-join and its whole-day shuffle leave the plan."""
+    from hfp_fixtures import write_fixture
+
+    from hfp_loader_spark.job import hfp_load
+    from hfp_loader_spark.sink import ParquetSink
+
+    write_fixture(tmp_path, date="2021-02-09")
+    sink = ParquetSink(str(tmp_path / "stage"))
+    if prior == "other_day_only":
+        write_fixture(tmp_path, date="2021-02-08")
+        assert hfp_load(spark, str(tmp_path), "2021-02-08", sink).total_inserted
+    df = _vp_dedup_against(spark, str(tmp_path), sink, "2021-02-09")
+    assert "Join" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Exchange" not in _executed_plan(df)
+
+
+def test_prior_rows_for_the_day_keep_the_anti_join(spark, tmp_path):
+    from hfp_fixtures import write_fixture
+
+    from hfp_loader_spark.job import hfp_load
+    from hfp_loader_spark.sink import ParquetSink
+
+    write_fixture(tmp_path, date="2021-02-09")
+    sink = ParquetSink(str(tmp_path / "stage"))
+    hfp_load(spark, str(tmp_path), "2021-02-09", sink)
+    df = _vp_dedup_against(spark, str(tmp_path), sink, "2021-02-09")
+    assert "LeftAnti" in _executed_plan(df)
+
+
 def test_brute_force_topk_broadcasts_queries(spark, sf_dir):
     plan = _executed_plan(REGISTRY["sim_cosine_topk"].builder(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
