@@ -580,12 +580,13 @@ def _lifecycle_landing_dir(spark, sf_dir: str) -> str:
 
     from pyspark.sql import functions as F
 
-    from hfp_loader_spark.plans.geo_queries import _events_stat_stamp
+    from hfp_loader_spark.memo import stamp, table_paths
 
-    # the events stat stamp joins the cache key: regenerated testdata
+    # the events content stamp joins the cache key: regenerated testdata
     # under the same path must re-stage, not stream the old slice
+    events_stamp = stamp(table_paths(sf_dir, "events"))
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{_events_stat_stamp(sf_dir)}".encode()
+        f"{os.path.abspath(sf_dir)}:{events_stamp}".encode()
     ).hexdigest()[:8]
     cache = f"/tmp/hfp_bench_landing_{key}"
     done = os.path.join(cache, "_DONE")

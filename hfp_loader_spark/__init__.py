@@ -19,6 +19,8 @@ Layout
                 analysis, multimodal binary columns
 - ``errors``    error classification shared by sources/sinks/job
 - ``plans``     the declared query catalog (Spark impl + DuckDB oracle SQL)
+- ``memo``      the one in-process cache for catalog artifacts (stamped,
+                session-scoped where it holds DataFrames)
 - ``streaming`` Structured Streaming variants (windows, sessions, dedup)
 - ``sink``      routed append writes (parquet staging or JDBC)
 - ``job``       the end-to-end HFP load orchestration

@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hfp_loader_spark.memo import memo
+
 TABLES = [
     "region",
     "nation",
@@ -90,52 +92,18 @@ def _micros(iso_ts: str) -> int:
     return int(dt.timestamp() * 1_000_000)
 
 
-#: path → (stamp, probed StructType).  A bare ``spark.read.parquet``
-#: fires 2-3 eager metadata jobs (footer schema + listing) PER CALL,
-#: and every builder calls load_table 1-6 times — across a bench run
-#: that is hundreds of pure-scheduling jobs.  The stat stamp
-#: invalidates when the driver regenerates testdata in place; keying by
-#: path (stamp in the VALUE) means a regenerated table REPLACES its
-#: stale entry instead of accreting one per generation (ADVICE r15).
-#: StructType is pure Python, so the cache survives JVM restarts.
-#: Bounded: ~10 tables × the SFs touched in one process.
-_TABLE_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
-
-
-def _path_stamp(path: str) -> tuple:
-    """Per-FILE stamp of ``path``, RECURSIVE for directories: rewriting
-    a leaf part in place changes that file's mtime but neither its
-    parent directory's mtime nor (for a nested partition dir) the
-    subdirectory's size — a dir-level or top-level-only stat would
-    serve a stale schema after in-place regeneration (ADVICE r15: the
-    non-recursive stamp had the same one-level blind spot the per-file
-    stamp was built to close)."""
-    import os
-
-    st = os.stat(path)
-    if not os.path.isdir(path):
-        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-    out = []
-    for root, dirs, files in os.walk(path):
-        dirs.sort()
-        rel = os.path.relpath(root, path)
-        for n in sorted(files):
-            fst = os.stat(os.path.join(root, n))
-            out.append((os.path.join(rel, n), fst.st_size, fst.st_mtime_ns))
-    return tuple(out)
-
-
 def _table_schema(spark: SparkSession, path: str):
-    try:
-        stamp = _path_stamp(path)
-    except OSError:  # remote / unstat-able source — probe live
-        return spark.read.parquet(path).schema
-    got = _TABLE_SCHEMA_CACHE.get(path)
-    if got is not None and got[0] == stamp:
-        return got[1]
-    schema = spark.read.parquet(path).schema
-    _TABLE_SCHEMA_CACHE[path] = (stamp, schema)
-    return schema
+    """The parquet schema at ``path``, probed once per file generation.
+    A bare ``spark.read.parquet`` fires 2-3 eager metadata jobs (footer
+    schema + listing) per call, and every builder calls load_table 1-6
+    times.  Process-wide: a StructType holds no session handle."""
+    return memo(
+        "table_schema",
+        None,
+        [path],
+        None,
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def load_table(
@@ -204,6 +172,10 @@ def load_table(
     return df
 
 
+#: Per-SparkSession temp-view state, not an artifact cache, so it stays
+#: outside ``memo``: sessions from ``newSession()`` share one
+#: ``applicationId`` but not their temp views, so only the session
+#: object's identity can key it.
 _VIEWS_REGISTERED: dict[int, str] = {}
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hfp_loader_spark import memo
 from hfp_loader_spark.operators.dedup import exact_dedup
 from hfp_loader_spark.operators.neardup import (
     jaccard_pairs,
@@ -229,34 +230,26 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "blaming the operator after a corpus regen.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Memoized PLAN per (session, corpus) — VERDICT r16 #6: building
-    # the 32-permutation hash expression tree + banded self-join costs
-    # ~2 s of pure py4j plan CONSTRUCTION per call (BENCH_DETAIL
-    # queries_build), re-paid inside every timed run.  The memo holds
-    # the UNEXECUTED DataFrame only: every action still computes the
-    # pair list from the parquet inputs (the shingle/signature persists
-    # inside minhash_lsh_pairs are the documented within-computation
-    # reuse, unchanged).  Keyed on applicationId (never reused by a
-    # successor session) + the corpus content stamp, so a regenerated
-    # corpus rebuilds the plan against the new file set.
-    from hfp_loader_spark.plans.model_queries import _corpus_stamp
-
-    try:
-        stamp = _corpus_stamp(sf_dir, "documents")
-    except OSError:
-        stamp = None  # unstat-able corpus (remote path)
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    plan = _LSH_PAIRS_PLAN.get(key)
-    if plan is None:
-        plan = minhash_lsh_pairs(
+    # Memoized PLAN per (session, documents generation) — VERDICT r16
+    # #6: building the 32-permutation hash expression tree + banded
+    # self-join costs ~2 s of pure py4j plan CONSTRUCTION per call
+    # (BENCH_DETAIL queries_build), re-paid inside every timed run.  The
+    # memo holds the UNEXECUTED DataFrame only, so no pair list is
+    # cached: every action recomputes the candidate and verified pairs.
+    # It does not re-read the documents parquet, though —
+    # minhash_lsh_pairs persists the shingled corpus and the signatures
+    # (MEMORY_AND_DISK, filled when the plan is built) for the session,
+    # and every action on the memoized plan reads those.  A regenerated
+    # corpus misses the memo and gets a plan over the new file set.
+    return memo.memo(
+        "lsh_pairs_plan",
+        spark,
+        memo.table_paths(sf_dir, "documents"),
+        "threshold=0.8",
+        lambda: minhash_lsh_pairs(
             _t(spark, sf_dir, "documents"), "doc_id", "text", threshold=0.8
-        )
-        _LSH_PAIRS_PLAN[key] = plan
-    return plan
-
-
-#: see dedup_minhash_lsh — unexecuted-plan memo, never results
-_LSH_PAIRS_PLAN: dict[tuple[str, str, str | None], DataFrame] = {}
+        ),
+    )
 
 
 @defquery(
@@ -484,20 +477,15 @@ def dedup_minhash_selfmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memo retention contract (both dicts): the cached frame is a LAZY
-#: scan over the committed snapshot's files, so it stays correct only
-#: while that version survives.  ``stamped_snapshot`` retains the head
-#: plus ONE predecessor, so a corpus regenerated mid-process serves the
-#: memoized frame intact for one generation.  The memo key INCLUDES
-#: the corpus content stamp, so a corpus regenerated mid-process
-#: simply misses the memo and re-serves/re-mines — a fresh stamp can
+#: Memo retention contract (the edge list and the CC labels): the
+#: memoized frame is a LAZY scan over the committed snapshot's files, so
+#: it stays correct only while that version survives.
+#: ``stamped_snapshot`` retains the head plus ONE predecessor, and the
+#: memo entry carries the corpus content stamp, so a corpus regenerated
+#: mid-process misses the memo and re-serves/re-mines — a fresh stamp can
 #: never be paired with stale memoized content (the poisoning vector:
 #: _components committing CC labels computed from a stale edge memo
 #: UNDER the new stamp, which every later process would then serve).
-_CLUSTER_COMPONENTS: dict[tuple, DataFrame] = {}
-
-
-_DUP_EDGES: dict[tuple, DataFrame] = {}
 
 
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,53 +495,25 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive computation in the dedup tier; a production pipeline
     builds this edge list once and PERSISTS it next to the corpus — as
     of r16 this function does exactly that (VERDICT r15 #2): the edge
-    list commits as a corpus-stamped versioned snapshot under the serve
-    artifact root, so a fresh process serves it with one manifest read
-    instead of re-mining (~2.5 s of the dedup-cluster first-call build).
-    Stale-safe: the stamp covers the documents table's per-file content
-    stamp AND the edge definition (threshold + the shared shingle SQL) —
-    a regenerated corpus or a changed definition re-mines.  Both
-    branches serve from the committed parquet, so consumer plans are
-    identical warm and cold."""
-    import hashlib
-
-    from hfp_loader_spark.plans.model_queries import (
-        _INDEX_BASE,
-        _corpus_key,
-        _corpus_stamp,
+    list commits as a corpus-stamped snapshot under the serve artifact
+    root (``memo.artifact``), so a fresh process serves it with one
+    manifest read instead of re-mining (~2.5 s of the dedup-cluster
+    first-call build).  Stale-safe: the stamp covers the documents
+    table's per-file content stamp AND the edge definition (threshold +
+    the shared shingle SQL) — a regenerated corpus or a changed
+    definition re-mines.  Both branches serve from the committed
+    parquet, so consumer plans are identical warm and cold."""
+    return memo.artifact(
+        "dup_edges",
+        spark,
+        sf_dir,
+        ["documents"],
+        f"jaccard>=0.8|{_SHINGLES_SQL}",
+        lambda: jaccard_pairs(
+            shingle_docs(_t(spark, sf_dir, "documents"), "doc_id", "text"),
+            threshold=0.8,
+        ).select("doc_a", "doc_b"),
     )
-    from hfp_loader_spark.versioned import stamped_snapshot
-
-    try:
-        stamp = _corpus_stamp(sf_dir, "documents")
-    except OSError:
-        stamp = None  # unstat-able corpus (remote path)
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    edges = _DUP_EDGES.get(key)
-    if edges is None:
-
-        def mine() -> DataFrame:
-            return jaccard_pairs(
-                shingle_docs(_t(spark, sf_dir, "documents"), "doc_id", "text"),
-                threshold=0.8,
-            ).select("doc_a", "doc_b")
-
-        if stamp is None:
-            # no content identity to stamp — mine live, don't persist
-            edges = mine().localCheckpoint()
-            _DUP_EDGES[key] = edges
-            return edges
-        defn = hashlib.md5(
-            f"jaccard>=0.8|{_SHINGLES_SQL}".encode()
-        ).hexdigest()
-        edges = stamped_snapshot(
-            spark,
-            f"{_INDEX_BASE}/dup_edges_{_corpus_key(sf_dir)}",
-            {"kind": "dup_edge_index", "corpus_stamp": stamp, "defn": defn},
-            mine,
-        ).select("doc_a", "doc_b")
-        _DUP_EDGES[key] = edges
-    return edges
 
 
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -564,65 +524,32 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline is the most expensive computation in the dedup tier, and
     the clustering entries (clusters, keep-list, cluster sizes) all
     consume the same labels.  Like :func:`_dup_edges`, the labels
-    commit as a corpus-stamped versioned snapshot: the alternating-star
-    loop runs to its fixed point ONCE per corpus generation (it is a
-    driver-paced iteration — unbounded rounds, a convergence check per
-    round), and every later process serves the labels with one manifest
-    read (~4.5 s → ~0.3 s first-call build for
-    ``dedup_duplicate_clusters``).  This is the SemDeDup/near-dup
-    production shape: cluster assignments are pipeline artifacts
-    persisted next to the corpus, not per-query recomputation.  The
-    stamp pairs the corpus content stamp with the full edge definition,
-    so a regenerated corpus or a changed threshold/shingle recipe
-    re-runs CC; the oracle replays the whole computation from raw
-    documents, so a stale serve would fail the gate rather than pass
-    silently."""
+    commit as a corpus-stamped snapshot: the alternating-star loop runs
+    to its fixed point ONCE per corpus generation (it is a driver-paced
+    iteration — unbounded rounds, a convergence check per round), and
+    every later process serves the labels with one manifest read
+    (~4.5 s → ~0.3 s first-call build for ``dedup_duplicate_clusters``).
+    This is the SemDeDup/near-dup production shape: cluster assignments
+    are pipeline artifacts persisted next to the corpus, not per-query
+    recomputation.  The stamp pairs the corpus content stamp with the
+    full edge definition, so a regenerated corpus or a changed
+    threshold/shingle recipe re-runs CC; the oracle replays the whole
+    computation from raw documents, so a stale serve would fail the gate
+    rather than pass silently."""
     from hfp_loader_spark.operators.graph import (
         connected_components_alternating,
     )
 
-    # applicationId is stable for the session's lifetime and never reused
-    # by a successor (id(...) values can be — a GC'd session could alias a
-    # fresh one onto a cache entry bound to a dead SparkContext)
-    import hashlib
-
-    from hfp_loader_spark.plans.model_queries import (
-        _INDEX_BASE,
-        _corpus_key,
-        _corpus_stamp,
+    return memo.artifact(
+        "dup_cc",
+        spark,
+        sf_dir,
+        ["documents"],
+        f"cc_labels|jaccard>=0.8|{_SHINGLES_SQL}",
+        lambda: connected_components_alternating(
+            _dup_edges(spark, sf_dir), src="doc_a", dst="doc_b"
+        ),
     )
-    from hfp_loader_spark.versioned import stamped_snapshot
-
-    try:
-        stamp = _corpus_stamp(sf_dir, "documents")
-    except OSError:
-        stamp = None  # unstat-able corpus
-    key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    comp = _CLUSTER_COMPONENTS.get(key)
-    if comp is None:
-
-        def run_cc() -> DataFrame:
-            return connected_components_alternating(
-                _dup_edges(spark, sf_dir), src="doc_a", dst="doc_b"
-            )
-
-        if stamp is None:
-            # no content identity — compute live (the CC loop's own
-            # localCheckpoint backs the frame), don't persist
-            comp = run_cc()
-            _CLUSTER_COMPONENTS[key] = comp
-            return comp
-        defn = hashlib.md5(
-            f"cc_labels|jaccard>=0.8|{_SHINGLES_SQL}".encode()
-        ).hexdigest()
-        comp = stamped_snapshot(
-            spark,
-            f"{_INDEX_BASE}/dup_cc_{_corpus_key(sf_dir)}",
-            {"kind": "dup_cc_labels", "corpus_stamp": stamp, "defn": defn},
-            run_cc,
-        ).select("id", "component")
-        _CLUSTER_COMPONENTS[key] = comp
-    return comp
 
 
 @defquery(

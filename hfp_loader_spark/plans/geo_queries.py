@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hfp_loader_spark import memo
 from hfp_loader_spark.operators.geo import (
     grid_cell,
     headways_at_cells,
@@ -229,52 +230,31 @@ def geo_leg_speed_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingest test), the log is published as the cell-partitioned lake
 # (materialize_position_lake_from_log); the measured entry reads ONLY
 # the queried cells' partition directories.  Roots are keyed by a
-# corpus stamp (row count + max event id), so regenerated testdata gets
-# a fresh build instead of serving a stale lake.
+# corpus stamp (the events file stamp + row count + max event id), so
+# regenerated testdata gets a fresh build instead of serving a stale
+# lake.
 
 _GEO_LAKE_CPD = 20
-_GEO_LAKE_READY: dict[str, tuple[tuple, str]] = {}
-
-
-def _events_stat_stamp(sf_dir: str) -> tuple:
-    """Cheap filesystem identity of the events table: (path, size,
-    mtime_ns) per file — regenerated testdata under the SAME sf_dir
-    changes it without running a Spark job (ADVICE r13: the old
-    process-lifetime cache served a stale lake to geo_lake_cells_served
-    while the oracle read the new events)."""
-    import os
-
-    target = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    paths = [target]
-    if os.path.isdir(target):
-        paths = sorted(
-            os.path.join(target, p) for p in os.listdir(target)
-        )
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((p, -1, -1))
-    return tuple(out)
 
 
 def _ensure_position_lake(spark: SparkSession, sf_dir: str) -> str:
-    stamp = _events_stat_stamp(sf_dir)
-    cached = _GEO_LAKE_READY.get(sf_dir)
-    if cached is not None and cached[0] == stamp:
-        return cached[1]
-    import hashlib
-    import os
+    events = memo.table_paths(sf_dir, "events")
+    return memo.memo(
+        "geo_lake",
+        None,
+        events,
+        _GEO_LAKE_CPD,
+        lambda: _build_position_lake(spark, sf_dir, memo.stamp(events)),
+    )
 
+
+def _build_position_lake(spark: SparkSession, sf_dir: str, stamp) -> str:
     from hfp_loader_spark.operators.geo import (
         _log_meta,
         materialize_position_lake_from_log,
         rebuild_positions,
     )
     from hfp_loader_spark.operators.similarity import read_index_manifest
-    from hfp_loader_spark.plans.model_queries import _INDEX_BASE
     from hfp_loader_spark.versioned import _read_manifest, latest_version
 
     ev = _t(spark, sf_dir, "events")
@@ -282,11 +262,8 @@ def _ensure_position_lake(spark: SparkSession, sf_dir: str) -> str:
     # the file stat stamp joins the corpus key (not only the memo):
     # regenerated testdata with the SAME row count and max event_id but
     # different values must get a fresh root, not re-serve the old lake
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{n}:{mx}:{stamp}".encode()
-    ).hexdigest()[:12]
-    log_root = f"{_INDEX_BASE}/geo_poslog_{key}"
-    lake_root = f"{_INDEX_BASE}/geo_lake_{key}"
+    log_root = memo.index_root("geo_poslog", sf_dir, n, mx, stamp)
+    lake_root = memo.index_root("geo_lake", sf_dir, n, mx, stamp)
     want = _log_meta(_GEO_LAKE_CPD, "lat", "lng")
     head = latest_version(spark, log_root)
     log_ok = False
@@ -337,7 +314,6 @@ def _ensure_position_lake(spark: SparkSession, sf_dir: str) -> str:
                 and doc.get("cells_per_deg") == _GEO_LAKE_CPD
             ):
                 raise
-    _GEO_LAKE_READY[sf_dir] = (stamp, lake_root)
     return lake_root
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hfp_loader_spark import memo
 from hfp_loader_spark.operators.graph import pagerank
 from hfp_loader_spark.operators.relational import merge_upsert, scd2_intervals
 from hfp_loader_spark.plans.catalog import _t, defquery
@@ -229,17 +230,6 @@ def _pagerank_oracle() -> str:
     return "\n".join(parts)
 
 
-#: (applicationId, sf_dir) → checkpointed (edge-with-degree, vertex)
-#: split of the served shipment-graph artifact: repeated builder calls
-#: in one process (bench's build + timed runs) reuse ONE materialization
-#: instead of re-checkpointing the artifact per call.  The key
-#: includes the input content stamp (same contract as
-#: dedup_queries._DUP_EDGES), so a corpus regenerated mid-process
-#: misses the memo and re-serves instead of pairing stale frames with
-#: a fresh generation.
-_CS_GRAPH: dict = {}
-
-
 @defquery(
     "graph_pagerank_cust_supp",
     _pagerank_oracle(),
@@ -305,44 +295,21 @@ def graph_pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a reloaded table or changed encoding re-mines.  The oracle replays
     # the whole computation from raw orders/lineitem, so a stale serve
     # fails the gate rather than passing silently.
-    import hashlib
-
-    from hfp_loader_spark.plans.model_queries import (
-        _INDEX_BASE,
-        _corpus_key,
-        _corpus_stamp,
-    )
-    from hfp_loader_spark.versioned import stamped_snapshot
-
-    try:
-        stamp = hashlib.md5(
-            (
-                _corpus_stamp(sf_dir, "orders")
-                + _corpus_stamp(sf_dir, "lineitem")
-            ).encode()
-        ).hexdigest()
-    except OSError:
-        stamp = None  # unstat-able inputs (remote path)
-    memo_key = (spark.sparkContext.applicationId, sf_dir, stamp)
-    split = _CS_GRAPH.get(memo_key)
-    if split is None:
-        if stamp is None:
-            # no content identity — mine live, don't persist
-            graph = mine()
-        else:
-            defn = "cust*2 -> supp*2+1 | distinct | _deg | +node rows"
-            graph = stamped_snapshot(
-                spark,
-                f"{_INDEX_BASE}/cs_edges_{_corpus_key(sf_dir)}",
-                {"kind": "cs_edge_index", "corpus_stamp": stamp, "defn": defn},
-                mine,
-            )
-        # ONE materialization of the served artifact, memoized: the
-        # edge/vertex splits are in-memory filters of the checkpointed
-        # frame, handed to pagerank under the prepared contract (the
-        # caller owns materialization, pagerank adds no checkpoint)
-        graph = graph.localCheckpoint()
-        split = (
+    def split() -> tuple[DataFrame, DataFrame]:
+        # ONE materialization of the served artifact per session and
+        # input generation: the edge/vertex splits are in-memory filters
+        # of the checkpointed frame, handed to pagerank under the
+        # prepared contract (the caller owns materialization, pagerank
+        # adds no checkpoint)
+        graph = memo.artifact(
+            "cs_edges",
+            spark,
+            sf_dir,
+            ["orders", "lineitem"],
+            "cust*2 -> supp*2+1 | distinct | _deg | +node rows",
+            mine,
+        ).localCheckpoint()
+        return (
             graph.where(F.col("role") == "e").select(
                 "e_src", "e_dst", "_deg"
             ),
@@ -350,13 +317,20 @@ def graph_pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("e_src").alias("id")
             ),
         )
-        _CS_GRAPH[memo_key] = split
+
+    edges, nodes = memo.memo(
+        "cs_graph",
+        spark,
+        memo.table_paths(sf_dir, "orders", "lineitem"),
+        None,
+        split,
+    )
     ranks = pagerank(
-        split[0],
+        edges,
         n_iter=_PR_ITER,
         damping=_DAMP,
         prepared=True,
-        nodes=split[1],
+        nodes=nodes,
     )
     node = (
         F.when(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hfp_loader_spark import memo
 from hfp_loader_spark.operators.ranking import (
     bm25_topk,
     hashed_linear_score,
@@ -696,77 +697,20 @@ def sim_ann_ivf_exact_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memoized pre-trained IVF model per corpus: (c_{iters-1}, c_iters) as
-#: sorted (cluster, quantized-centroid) lists — 2×nlist bounded rows
-#: collected once per sf_dir (an index is trained once and served many
-#: times; same rationale as the old float _IVF_CENTROIDS memo).
-_IVF_SERVE_MODEL: dict[str, tuple[list, list]] = {}
-
-#: Root for PERSISTED serve structures (cell-tag logs, cell-partitioned
-#: vector layouts, PQ code tables) — the train-once/serve-many artifacts
-#: the serve entries read INSTEAD of re-assigning/re-encoding the corpus
-#: per plan (VERDICT r11 #1).  Keyed by corpus dir; stale artifacts
-#: (regenerated testdata → new model fingerprint) rebuild themselves.
-#:
-#: DEFAULT = a fresh per-process temp dir (removed at interpreter exit):
-#: every bench/oracle invocation then derives every artifact from the
-#: parquet inputs within that invocation — nothing trained or mined in
-#: one process is ever served to a later one.  Cross-process
-#: train-once/serve-many (the production deployment shape: one builder
-#: job commits, N serve jobs read) is an explicit opt-in via
-#: ``SPARK_GRAFT_INDEX_DIR`` — a shared root must be a deliberate
-#: operational choice, never an ambient side effect of having run a
-#: benchmark on the same machine earlier.
-import hashlib as _hashlib
-import os as _os
-
-
-def _default_index_base() -> str:
-    import atexit as _atexit
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    d = _tempfile.mkdtemp(prefix="spark_graft_serve_index_")
-    _atexit.register(_shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
-_INDEX_BASE = (
-    _os.environ.get("SPARK_GRAFT_INDEX_DIR") or _default_index_base()
-)
-
-
-def _corpus_key(sf_dir: str) -> str:
-    return _hashlib.md5(
-        _os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:12]
-
-
-def _corpus_stamp(sf_dir: str, table: str = "embeddings") -> str:
-    """Content identity of the corpus a model was trained on: md5 over
-    the recursive per-file (name, size, mtime_ns) stamp of the table —
-    the same invalidation contract as the schema cache
-    (catalog._path_stamp).  Regenerated testdata under the same path →
-    different stamp → stored model is stale and retrains."""
-    from hfp_loader_spark.plans.catalog import _path_stamp
-
-    path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    return _hashlib.md5(repr(_path_stamp(path)).encode()).hexdigest()
-
-
 def _model_store(
     spark: SparkSession, sf_dir: str, name: str, train, defn: str
 ) -> tuple[list, list]:
-    """Cross-PROCESS train-once for the serve models (VERDICT r15 #2):
-    the in-process ``_IVF_SERVE_MODEL`` / ``_PQ_SERVE_MODEL`` memos
-    still paid the full Lloyd trajectory (4-6 s of localCheckpoint
-    rounds) once per fresh process — the single largest first-call
-    plan-build cost in BENCH_DETAIL.  A trained model is a bounded
-    integer table (≤ nlist·2 or m·ksub·2 rows), so it persists as ONE
-    versioned snapshot next to the other serve artifacts, stamped with
-    the corpus content stamp; a warm process loads it in ~0.2 s, a
-    regenerated corpus mismatches the stamp and retrains.  Fail-soft
-    only for an unstat-able corpus (remote path): train live.
+    """Train-once for the serve models, across sessions AND processes
+    (VERDICT r15 #2): the full Lloyd trajectory (4-6 s of
+    localCheckpoint rounds) was the single largest first-call plan-build
+    cost in BENCH_DETAIL.  A trained model is a bounded integer table
+    (≤ nlist·2 or m·ksub·2 rows), so it persists as ONE stamped
+    snapshot next to the other serve artifacts (``memo.artifact``); a
+    warm process loads it in ~0.2 s, a regenerated corpus mismatches
+    the stamp and retrains.  The decoded lists are memoized
+    process-wide (``memo.memo``, keyed on the embeddings' content
+    stamp), so a corpus rewritten in place retrains here too instead of
+    serving the old model.
 
     ``train`` returns ``(assign_frame, probe_frame)`` where each frame
     is a sorted list of ``(cluster, cq)`` (IVF) or ``(grp, cluster,
@@ -774,27 +718,17 @@ def _model_store(
     ``grp = -1`` and strips it back off on load.
 
     ``defn`` is the TRAINING DEFINITION (every hyperparameter the
-    trained frames depend on — k, iteration count, PQ geometry): it
-    rides the snapshot meta beside the corpus stamp, so changing a
-    hyperparameter retrains instead of serving the old-geometry model
-    (the same definition-hash contract the dup-edge/CC artifacts
-    carry).  The serve-or-build/stamp/truncate skeleton is
-    ``versioned.stamped_snapshot`` — this function only owns the
-    frame↔row codec.  Both branches decode from the committed snapshot
-    (not the in-memory trained lists), so a codec asymmetry would fail
-    the train-time caller immediately instead of surfacing one process
-    later.  A committed model missing either frame raises — the loud
-    twin of ``operators.similarity.load_fixed_point_model``'s
-    incomplete-frame check; silently retraining over a half-written
-    artifact would mask whatever produced it.
+    trained frames depend on — k, iteration count, PQ geometry), so
+    changing a hyperparameter retrains instead of serving the
+    old-geometry model.  This function only owns the frame↔row codec.
+    Both branches decode from the committed snapshot (not the in-memory
+    trained lists), so a codec asymmetry would fail the train-time
+    caller immediately instead of surfacing one process later.  A
+    committed model missing either frame raises — the loud twin of
+    ``operators.similarity.load_fixed_point_model``'s incomplete-frame
+    check; silently retraining over a half-written artifact would mask
+    whatever produced it.
     """
-    from hfp_loader_spark.versioned import stamped_snapshot
-
-    root = f"{_INDEX_BASE}/{name}_model_{_corpus_key(sf_dir)}"
-    try:
-        stamp = _corpus_stamp(sf_dir)
-    except OSError:
-        return train()
 
     def build():
         rows = []
@@ -806,40 +740,42 @@ def _model_store(
             rows, "role string, grp int, cluster int, cq array<long>"
         )
 
-    snap = stamped_snapshot(
-        spark,
-        root,
-        {
-            "kind": f"{name}_serve_model",
-            "scale": _KM_SCALE,
-            "corpus_stamp": stamp,
-            "defn": defn,
-        },
-        build,
-    )
-    frames: dict[str, list] = {"assign": [], "probe": []}
-    for r in snap.collect():
-        frames[r["role"]].append((r["grp"], r["cluster"], list(r["cq"])))
-    if not frames["assign"] or not frames["probe"]:
-        raise ValueError(
-            f"{name} serve model at {root} is missing a frame "
-            f"(assign={len(frames['assign'])}, "
-            f"probe={len(frames['probe'])} rows) — refusing to serve "
-            "an incomplete model"
+    def load() -> tuple[list, list]:
+        snap = memo.artifact(
+            f"{name}_model",
+            spark,
+            sf_dir,
+            ["embeddings"],
+            f"scale={_KM_SCALE}|{defn}",
+            build,
         )
+        frames: dict[str, list] = {"assign": [], "probe": []}
+        for r in snap.collect():
+            frames[r["role"]].append((r["grp"], r["cluster"], list(r["cq"])))
+        if not frames["assign"] or not frames["probe"]:
+            raise ValueError(
+                f"{name} serve model at "
+                f"{memo.index_root(f'{name}_model', sf_dir)} is missing a "
+                f"frame (assign={len(frames['assign'])}, "
+                f"probe={len(frames['probe'])} rows) — refusing to serve "
+                "an incomplete model"
+            )
 
-    def frame(role: str) -> list:
-        rows = sorted(frames[role])
-        if rows[0][0] == -1:  # IVF rows ride grp = -1
-            return [(cl, cq) for _, cl, cq in rows]
-        return rows
+        def frame(role: str) -> list:
+            rows = sorted(frames[role])
+            if rows[0][0] == -1:  # IVF rows ride grp = -1
+                return [(cl, cq) for _, cl, cq in rows]
+            return rows
 
-    return frame("assign"), frame("probe")
+        return frame("assign"), frame("probe")
 
-
-#: sf_dir → (index_root, model_fingerprint): the cell-partitioned serve
-#: layout validated/hydrated this process.
-_IVF_INDEX_READY: dict[str, tuple[str, str]] = {}
+    return memo.memo(
+        f"{name}_serve_model",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        defn,
+        load,
+    )
 
 
 def _ensure_ivf_tags(spark: SparkSession, sf_dir: str) -> tuple[str, int, str]:
@@ -855,7 +791,7 @@ def _ensure_ivf_tags(spark: SparkSession, sf_dir: str) -> tuple[str, int, str]:
 
     cent_assign, _ = _ivf_serve_model(spark, sf_dir)
     fp = _model_fingerprint(cent_assign)
-    tag_root = f"{_INDEX_BASE}/ivf_tags_{_corpus_key(sf_dir)}"
+    tag_root = memo.index_root("ivf_tags", sf_dir)
     head = latest_version(spark, tag_root)
     tags_ok = False
     if head is not None:
@@ -879,72 +815,69 @@ def _ivf_serve_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Ensure the PERSISTED IVF serve lifecycle for this corpus —
     tag log (versioned, O(delta)-appendable) + cell-partitioned vector
     layout — exists and is stamped with the CURRENT model generation;
-    returns ``(index_root, fingerprint)``.  Idempotent and cheap when
-    already materialized (two manifest reads); rebuilds from scratch
-    when absent or when the corpus changed (the memoized model's
-    fingerprint is corpus-derived, so regenerated testdata mismatches
-    and re-tags automatically — the fail-loud alternative would serve
-    stale cells)."""
-    got = _IVF_INDEX_READY.get(sf_dir)
-    if got is not None:
-        return got
-    from hfp_loader_spark.operators.similarity import (
-        materialize_cell_index,
-        read_index_manifest,
-    )
+    returns ``(index_root, fingerprint)``.  Memoized per embeddings
+    generation; a miss costs two manifest reads when the layout is
+    already materialized and rebuilds it from scratch when absent or
+    when the corpus changed (the model's fingerprint is corpus-derived,
+    so regenerated testdata mismatches and re-tags automatically — the
+    fail-loud alternative would serve stale cells)."""
+    index_root = memo.index_root("ivf_cells", sf_dir)
 
-    tag_root, head, fp = _ensure_ivf_tags(spark, sf_dir)
-    index_root = f"{_INDEX_BASE}/ivf_cells_{_corpus_key(sf_dir)}"
-    doc = read_index_manifest(spark, index_root)
-    if (
-        doc is None
-        or doc.get("model_fingerprint") != fp
-        or doc.get("scale") != _KM_SCALE
-        or doc.get("tag_version") != head
-    ):
-        materialize_cell_index(
-            spark,
-            tag_root,
-            _t(spark, sf_dir, "embeddings"),
-            index_root,
+    def build() -> tuple[str, str]:
+        from hfp_loader_spark.operators.similarity import (
+            materialize_cell_index,
+            read_index_manifest,
         )
-    _IVF_INDEX_READY[sf_dir] = (index_root, fp)
-    return index_root, fp
+
+        tag_root, head, fp = _ensure_ivf_tags(spark, sf_dir)
+        doc = read_index_manifest(spark, index_root)
+        if (
+            doc is None
+            or doc.get("model_fingerprint") != fp
+            or doc.get("scale") != _KM_SCALE
+            or doc.get("tag_version") != head
+        ):
+            materialize_cell_index(
+                spark,
+                tag_root,
+                _t(spark, sf_dir, "embeddings"),
+                index_root,
+            )
+        return index_root, fp
+
+    return memo.memo(
+        "ivf_cells",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        index_root,
+        build,
+    )
 
 
 def _ivf_serve_model(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """The pre-trained IVF model: (c_{iters-1}, c_iters) as sorted
+    (cluster, quantized-centroid) lists — 2×nlist bounded rows."""
     from hfp_loader_spark.operators.clustering import (
         kmeans_fixed_point_trajectory,
     )
 
-    model = _IVF_SERVE_MODEL.get(sf_dir)
-    if model is None:
-
-        def train() -> tuple[list, list]:
-            emb = _t(spark, sf_dir, "embeddings")
-            # ONE training run yields both lag frames (VERDICT r11 #2):
-            # collecting cent_prev materializes the checkpointed rounds
-            # 1..iters−1; the final round reuses them.
-            _, cent_prev, cent = kmeans_fixed_point_trajectory(
-                emb, _KM_K, _KM_ITERS, scale=_KM_SCALE
-            )
-
-            def rows(c) -> list[tuple[int, list[int]]]:
-                return sorted(
-                    (r["cluster"], list(r["cq"])) for r in c.collect()
-                )
-
-            return (rows(cent_prev), rows(cent))
-
-        model = _model_store(
-            spark,
-            sf_dir,
-            "ivf",
-            train,
-            defn=f"k={_KM_K}|iters={_KM_ITERS}",
+    def train() -> tuple[list, list]:
+        emb = _t(spark, sf_dir, "embeddings")
+        # ONE training run yields both lag frames (VERDICT r11 #2):
+        # collecting cent_prev materializes the checkpointed rounds
+        # 1..iters−1; the final round reuses them.
+        _, cent_prev, cent = kmeans_fixed_point_trajectory(
+            emb, _KM_K, _KM_ITERS, scale=_KM_SCALE
         )
-        _IVF_SERVE_MODEL[sf_dir] = model
-    return model
+
+        def rows(c) -> list[tuple[int, list[int]]]:
+            return sorted((r["cluster"], list(r["cq"])) for r in c.collect())
+
+        return (rows(cent_prev), rows(cent))
+
+    return _model_store(
+        spark, sf_dir, "ivf", train, defn=f"k={_KM_K}|iters={_KM_ITERS}"
+    )
 
 
 @defquery(
@@ -1145,83 +1078,66 @@ def sim_ann_pq_exact_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Memoized pre-trained PQ codebooks per corpus: (books_{iters-1},
-#: books_iters) as sorted (grp, cluster, quantized-subcentroid) triples
-#: — 2×m·ksub bounded rows collected once per sf_dir (same
-#: train-once/serve-many rationale as _IVF_SERVE_MODEL).
-_PQ_SERVE_MODEL: dict[str, tuple[list, list]] = {}
-
-
 def _pq_serve_model(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
+    """The pre-trained PQ codebooks: (books_{iters-1}, books_iters) as
+    sorted (grp, cluster, quantized-subcentroid) triples — 2×m·ksub
+    bounded rows."""
     from hfp_loader_spark.operators.clustering import (
         kmeans_fixed_point_grouped_trajectory,
         quantize_vec,
     )
 
-    model = _PQ_SERVE_MODEL.get(sf_dir)
-    if model is None:
-
-        def train() -> tuple[list, list]:
-            sub = _PQ_EX_DIM // _PQ_EX_M
-            sliced = (
-                _t(spark, sf_dir, "embeddings")
-                .where(F.size("embedding") == _PQ_EX_DIM)
-                .select(
-                    "vec_id",
-                    quantize_vec(F.col("embedding"), _KM_SCALE).alias("_q"),
-                )
-                .select(
-                    "vec_id",
-                    F.posexplode(
-                        F.array(
-                            *[
-                                F.slice("_q", j * sub + 1, sub)
-                                for j in range(_PQ_EX_M)
-                            ]
-                        )
-                    ).alias("grp", "q"),
-                )
+    def train() -> tuple[list, list]:
+        sub = _PQ_EX_DIM // _PQ_EX_M
+        sliced = (
+            _t(spark, sf_dir, "embeddings")
+            .where(F.size("embedding") == _PQ_EX_DIM)
+            .select(
+                "vec_id",
+                quantize_vec(F.col("embedding"), _KM_SCALE).alias("_q"),
             )
-
-            # ONE grouped training run yields both codebook generations
-            # (VERDICT r11 #2) — cent_prev is checkpointed at the
-            # final-round boundary, so both collects share the
-            # rounds-1..iters−1 work.
-            _, books_prev, books_last = (
-                kmeans_fixed_point_grouped_trajectory(
-                    sliced,
-                    _PQ_EX_KSUB,
-                    _KM_ITERS,
-                    group_col="grp",
-                    qvec_col="q",
-                )
+            .select(
+                "vec_id",
+                F.posexplode(
+                    F.array(
+                        *[
+                            F.slice("_q", j * sub + 1, sub)
+                            for j in range(_PQ_EX_M)
+                        ]
+                    )
+                ).alias("grp", "q"),
             )
-
-            def rows(b) -> list[tuple[int, int, list[int]]]:
-                return sorted(
-                    (r["grp"], r["cluster"], list(r["cq"]))
-                    for r in b.collect()
-                )
-
-            return (rows(books_prev), rows(books_last))
-
-        model = _model_store(
-            spark,
-            sf_dir,
-            "pq",
-            train,
-            defn=(
-                f"m={_PQ_EX_M}|ksub={_PQ_EX_KSUB}|dim={_PQ_EX_DIM}"
-                f"|iters={_KM_ITERS}"
-            ),
         )
-        _PQ_SERVE_MODEL[sf_dir] = model
-    return model
 
+        # ONE grouped training run yields both codebook generations
+        # (VERDICT r11 #2) — cent_prev is checkpointed at the
+        # final-round boundary, so both collects share the
+        # rounds-1..iters−1 work.
+        _, books_prev, books_last = kmeans_fixed_point_grouped_trajectory(
+            sliced,
+            _PQ_EX_KSUB,
+            _KM_ITERS,
+            group_col="grp",
+            qvec_col="q",
+        )
 
-#: sf_dir → (code_root, books_fingerprint): the persisted PQ code table
-#: validated/hydrated this process.
-_PQ_CODES_READY: dict[str, tuple[str, str]] = {}
+        def rows(b) -> list[tuple[int, int, list[int]]]:
+            return sorted(
+                (r["grp"], r["cluster"], list(r["cq"])) for r in b.collect()
+            )
+
+        return (rows(books_prev), rows(books_last))
+
+    return _model_store(
+        spark,
+        sf_dir,
+        "pq",
+        train,
+        defn=(
+            f"m={_PQ_EX_M}|ksub={_PQ_EX_KSUB}|dim={_PQ_EX_DIM}"
+            f"|iters={_KM_ITERS}"
+        ),
+    )
 
 
 def _pq_serve_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -1230,40 +1146,46 @@ def _pq_serve_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ``(code_root, fingerprint)``.  Same lifecycle as
     :func:`_ivf_serve_index`: cheap manifest check when hydrated,
     full re-encode (``rebuild_codes``) when absent or stale."""
-    got = _PQ_CODES_READY.get(sf_dir)
-    if got is not None:
-        return got
-    from hfp_loader_spark.operators.similarity import (
-        _books_fingerprint,
-        rebuild_codes,
-    )
-    from hfp_loader_spark.versioned import _read_manifest, latest_version
+    code_root = memo.index_root("pq_codes", sf_dir)
 
-    books_assign, _ = _pq_serve_model(spark, sf_dir)
-    fp = _books_fingerprint(books_assign)
-    code_root = f"{_INDEX_BASE}/pq_codes_{_corpus_key(sf_dir)}"
-    head = latest_version(spark, code_root)
-    ok = False
-    if head is not None:
-        meta = _read_manifest(spark, code_root, head).meta
-        ok = (
-            meta.get("model_fingerprint") == fp
-            and meta.get("scale") == _KM_SCALE
-            and meta.get("m") == _PQ_EX_M
-            and meta.get("dim") == _PQ_EX_DIM
+    def build() -> tuple[str, str]:
+        from hfp_loader_spark.operators.similarity import (
+            _books_fingerprint,
+            rebuild_codes,
         )
-    if not ok:
-        rebuild_codes(
-            spark,
-            _t(spark, sf_dir, "embeddings"),
-            code_root,
-            books_assign,
-            _KM_SCALE,
-            m=_PQ_EX_M,
-            dim=_PQ_EX_DIM,
-        )
-    _PQ_CODES_READY[sf_dir] = (code_root, fp)
-    return code_root, fp
+        from hfp_loader_spark.versioned import _read_manifest, latest_version
+
+        books_assign, _ = _pq_serve_model(spark, sf_dir)
+        fp = _books_fingerprint(books_assign)
+        head = latest_version(spark, code_root)
+        ok = False
+        if head is not None:
+            meta = _read_manifest(spark, code_root, head).meta
+            ok = (
+                meta.get("model_fingerprint") == fp
+                and meta.get("scale") == _KM_SCALE
+                and meta.get("m") == _PQ_EX_M
+                and meta.get("dim") == _PQ_EX_DIM
+            )
+        if not ok:
+            rebuild_codes(
+                spark,
+                _t(spark, sf_dir, "embeddings"),
+                code_root,
+                books_assign,
+                _KM_SCALE,
+                m=_PQ_EX_M,
+                dim=_PQ_EX_DIM,
+            )
+        return code_root, fp
+
+    return memo.memo(
+        "pq_codes",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        code_root,
+        build,
+    )
 
 
 @defquery(
@@ -1417,11 +1339,6 @@ def _ivfpq_oracle() -> str:
     )
 
 
-#: sf_dir → (index_root, model_fp, books_fp): the fused IVF-PQ layout
-#: validated/hydrated this process.
-_IVFPQ_INDEX_READY: dict[str, tuple[str, str, str]] = {}
-
-
 def _ivfpq_serve_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, str]:
@@ -1431,38 +1348,43 @@ def _ivfpq_serve_index(
     structures the single-path entries maintain — the versioned tag log
     and the versioned code table — so all three serve entries share one
     training and one tagging/encoding per corpus."""
-    got = _IVFPQ_INDEX_READY.get(sf_dir)
-    if got is not None:
-        return got
-    from hfp_loader_spark.operators.similarity import (
-        _books_fingerprint,
-        materialize_ivfpq_index,
-        read_index_manifest,
-    )
-    from hfp_loader_spark.versioned import latest_version
+    index_root = memo.index_root("ivfpq", sf_dir)
 
-    tag_root, t_head, model_fp = _ensure_ivf_tags(spark, sf_dir)
-    code_root, books_fp = _pq_serve_codes(spark, sf_dir)
-    c_head = latest_version(spark, code_root)
-    index_root = f"{_INDEX_BASE}/ivfpq_{_corpus_key(sf_dir)}"
-    doc = read_index_manifest(spark, index_root)
-    if (
-        doc is None
-        or doc.get("model_fingerprint") != model_fp
-        or doc.get("books_fingerprint") != books_fp
-        or doc.get("scale") != _KM_SCALE
-        or doc.get("tag_version") != t_head
-        or doc.get("code_version") != c_head
-    ):
-        materialize_ivfpq_index(
-            spark,
-            tag_root,
-            code_root,
-            _t(spark, sf_dir, "embeddings"),
-            index_root,
+    def build() -> tuple[str, str, str]:
+        from hfp_loader_spark.operators.similarity import (
+            materialize_ivfpq_index,
+            read_index_manifest,
         )
-    _IVFPQ_INDEX_READY[sf_dir] = (index_root, model_fp, books_fp)
-    return index_root, model_fp, books_fp
+        from hfp_loader_spark.versioned import latest_version
+
+        tag_root, t_head, model_fp = _ensure_ivf_tags(spark, sf_dir)
+        code_root, books_fp = _pq_serve_codes(spark, sf_dir)
+        c_head = latest_version(spark, code_root)
+        doc = read_index_manifest(spark, index_root)
+        if (
+            doc is None
+            or doc.get("model_fingerprint") != model_fp
+            or doc.get("books_fingerprint") != books_fp
+            or doc.get("scale") != _KM_SCALE
+            or doc.get("tag_version") != t_head
+            or doc.get("code_version") != c_head
+        ):
+            materialize_ivfpq_index(
+                spark,
+                tag_root,
+                code_root,
+                _t(spark, sf_dir, "embeddings"),
+                index_root,
+            )
+        return index_root, model_fp, books_fp
+
+    return memo.memo(
+        "ivfpq",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        index_root,
+        build,
+    )
 
 
 @defquery(

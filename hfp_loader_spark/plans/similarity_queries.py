@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hfp_loader_spark import memo
 from hfp_loader_spark.operators.similarity import (
     as_double_array,
     brute_force_top_k,
@@ -244,21 +245,20 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which trains and oracle-checks the float spherical cells.
 
 
-_PQ_BOOKS: dict[str, list[list[list[float]]]] = {}
-
-
 def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    """Memoized PQ codebooks per corpus (an index is trained once and
-    reused across searches — same rationale as _IVF_CENTROIDS)."""
+    """PQ codebooks per embeddings generation (an index is trained once
+    and reused across searches)."""
     from hfp_loader_spark.operators.similarity import train_pq_codebooks
 
-    books = _PQ_BOOKS.get(sf_dir)
-    if books is None:
-        books = train_pq_codebooks(
+    return memo.memo(
+        "pq_books",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        "m=8|ksub=16",
+        lambda: train_pq_codebooks(
             _t(spark, sf_dir, "embeddings"), m=8, ksub=16, fraction=1.0
-        )
-        _PQ_BOOKS[sf_dir] = books
-    return books
+        ),
+    )
 
 
 # sim_ann_pq moved to plans/model_queries.py (r11, VERDICT r10 #5):
@@ -521,16 +521,13 @@ _SEMDEDUP_T = 0.35  # tuned to the synthetic corpus's cosine range (max ≈ 0.51
 _SEMDEDUP_NLIST = 4
 
 
-_SEMDEDUP_CENTROIDS: dict[str, list[list[float]]] = {}
-
-
 # semdedup_keep_list moved to plans/model_queries.py (r11, VERDICT r10
 # #5 — the LAST rows-only entry): the catalog entry now runs the BLAS
 # per-cell prune over the exact fixed-point cells (full oracle = the
 # twin's training CTEs; the Arrow hot path stays the measured plan).
 # The float spherical variant (semdedup_contract below) keeps the
 # driver-trained cells oracle-checked via its precision/recall
-# contract, training through the shared _SEMDEDUP_CENTROIDS memo.
+# contract, its centroids trained once per corpus through memo.memo.
 
 
 @defquery(
@@ -596,16 +593,20 @@ def semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run the semdedup side on the SAME capped corpus (same memoized
     # centroids) — keep/prune decisions must not be influenced by
     # out-of-sample neighbors or precision_eq_1 would be unfalsifiable
-    from hfp_loader_spark.operators.similarity import semantic_dedup
+    from hfp_loader_spark.operators.similarity import (
+        semantic_dedup,
+        train_ivf_centroids,
+    )
 
-    cents = _SEMDEDUP_CENTROIDS.get(sf_dir)
-    if cents is None:
-        from hfp_loader_spark.operators.similarity import train_ivf_centroids
-
-        cents = train_ivf_centroids(
+    cents = memo.memo(
+        "semdedup_centroids",
+        None,
+        memo.table_paths(sf_dir, "embeddings"),
+        f"nlist={_SEMDEDUP_NLIST}",
+        lambda: train_ivf_centroids(
             _t(spark, sf_dir, "embeddings"), _SEMDEDUP_NLIST, fraction=1.0
-        )
-        _SEMDEDUP_CENTROIDS[sf_dir] = cents
+        ),
+    )
     sem_removed = (
         semantic_dedup(
             emb, threshold=_SEMDEDUP_T, nlist=_SEMDEDUP_NLIST, centroids=cents

@@ -25,10 +25,6 @@ import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
-
-from hfp_loader_spark.errors import is_path_not_found
-
 from pyspark.sql import types as T
 
 from hfp_loader_spark.schema import HFP_COLUMNS, TYPED_SCHEMA
@@ -126,19 +122,23 @@ class ParquetSink:
         OTHER read error (corrupt footer, permission denial) propagates —
         swallowing it would silently re-insert the whole day.
         """
+        from hfp_loader_spark.versioned import _fs
+
         date = datetime.date.fromisoformat(date).isoformat()
         path = self.table_path(table)
-        try:
+        day = f"{path}/oday={date}"
+        fs, P = _fs(spark, day)
+        # an existence check, not a read that fails: Spark logs a stack
+        # trace for every read of a missing path, even a caught one
+        if fs.exists(P(day)):
             df = (
                 spark.read.option("basePath", path)
                 .schema(SINK_SCHEMA)
-                .parquet(f"{path}/oday={date}")
+                .parquet(day)
             )
-        except AnalysisException as e:
-            if not is_path_not_found(e):
-                raise
-            if _no_unpartitioned_files(spark, path):
-                return empty_key_set(spark)
+        elif _no_unpartitioned_files(spark, path):
+            return empty_key_set(spark)
+        else:
             df = spark.read.schema(SINK_SCHEMA).parquet(path)
         # Fail-loud backstop (ADVICE r15): a pinned read schema NULLs any
         # column the on-disk files lack instead of erroring, so a sink

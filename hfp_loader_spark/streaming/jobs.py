@@ -56,37 +56,6 @@ def _as_source_dir(path: str) -> str:
     return d
 
 
-#: (source dir, file stat stamp) → probed StructType.  The batch schema
-#: probe fires 2-3 eager metadata jobs per call (footer read + listing),
-#: and every streaming entry's builder re-probes the same immutable
-#: events file — r15: cache on the files' (name, size, mtime_ns) stamp,
-#: which also invalidates correctly when the driver regenerates
-#: testdata under the same path.  StructType is pure Python (no py4j
-#: handle), so the cache is JVM-restart-safe.
-_SCHEMA_PROBE_CACHE: dict[tuple, object] = {}
-
-
-def _probe_schema(spark: SparkSession, path: str):
-    # RECURSIVE stamp (ADVICE r15, same fix as plans.catalog._path_stamp):
-    # a nested partition dir whose leaf is rewritten in place changes
-    # neither the subdir's size nor necessarily its mtime, so a
-    # top-level-only stamp would serve a stale schema one level down.
-    from hfp_loader_spark.plans.catalog import _path_stamp
-
-    try:
-        stamp = _path_stamp(path)
-    except OSError:
-        # non-local / unstat-able source (abfss:// etc.) — probe live
-        return spark.read.parquet(path).schema
-    key = (path, stamp)
-    schema = _SCHEMA_PROBE_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_PROBE_CACHE.clear()  # one live source per process is the case
-        _SCHEMA_PROBE_CACHE[key] = schema
-    return schema
-
-
 def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -98,7 +67,11 @@ def read_events_stream(
     # session tz so the ntz→timestamp cast below is the identity.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = _probe_schema(spark, path)
+    # the batch schema probe, once per file generation (the same memo
+    # kind load_table uses)
+    from hfp_loader_spark.plans.catalog import _table_schema
+
+    schema = _table_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

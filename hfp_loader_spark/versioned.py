@@ -234,7 +234,7 @@ def stamped_snapshot(
     are identical warm and cold.
 
     The caller's ``meta`` is the artifact's full identity: put the
-    input-content stamp (e.g. ``plans.catalog._path_stamp`` digest) AND
+    input-content stamp (e.g. ``memo.stamp`` of the inputs) AND
     a definition hash in it — a regenerated input or a changed
     definition then mismatches and rebuilds.  Concurrency inherits
     :func:`commit_snapshot`'s optimistic protocol: two racing builders

@@ -73,6 +73,28 @@ def test_jdbc_existing_keys_validates_date():
         sink.existing_keys(None, "vehicleposition", "2021-02-09'; DROP TABLE x--")
 
 
+@pytest.mark.parametrize("layout", ["missing_table", "other_day_only"])
+def test_missing_day_never_reads_parquet(spark, tmp_path, monkeypatch, layout):
+    """A key scan of a day the sink does not hold is decided by an
+    existence check, not by a read that fails: Spark logs a stack trace
+    for every failed read of a missing path, even a caught one."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sink = ParquetSink(str(tmp_path / "stage"))
+    if layout == "other_day_only":
+        spark.sql(
+            "SELECT 'u1' AS uuid, DATE '2021-02-08' AS oday"
+        ).write.partitionBy("oday").parquet(sink.table_path("vehicleposition"))
+    calls = []
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *p: calls.append(p)
+    )
+    keys = sink.existing_keys(spark, "vehicleposition", "2021-02-09")
+    assert calls == []
+    monkeypatch.undo()
+    assert keys.count() == 0
+
+
 def test_parquet_existing_keys_validates_date():
     """The date names the partition directory read, so a non-ISO date
     must raise before it becomes part of a path."""

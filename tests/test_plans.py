@@ -458,29 +458,34 @@ def test_registry_order_converges_to_full_external_coverage(monkeypatch):
         catalog._order_registry()
 
 
+def _schema_entries() -> dict:
+    """path → (stamp, schema) of the memo's table-schema entries."""
+    from hfp_loader_spark import memo
+
+    return {
+        key[2][0]: got
+        for key, got in memo._ENTRIES.items()
+        if key[0] == "table_schema"
+    }
+
+
 def test_table_schema_cache_matches_inferred(spark, sf_dir):
-    """load_table's stat-stamped schema cache (r15) must hand Spark the
+    """load_table's stamped schema memo (r15) must hand Spark the
     exact schema a bare inferred read would see — a drift would
     silently null out renamed columns rather than fail."""
     import os
 
-    from hfp_loader_spark.plans.catalog import (
-        _TABLE_SCHEMA_CACHE,
-        TABLES,
-        load_table,
-    )
+    from hfp_loader_spark import memo
+    from hfp_loader_spark.plans.catalog import TABLES, load_table
 
     for t in TABLES:
         path = f"{sf_dir.rstrip('/')}/{t}.parquet"
         if not os.path.exists(path):
             continue
         inferred = spark.read.parquet(path).schema
-        load_table(spark, sf_dir, t)  # populates the cache
-        stamp, cached = _TABLE_SCHEMA_CACHE[path]
-        st = os.stat(path)
-        assert stamp == (
-            (os.path.basename(path), st.st_size, st.st_mtime_ns),
-        ), t
+        load_table(spark, sf_dir, t)  # populates the memo
+        stamp, cached = _schema_entries()[path]
+        assert stamp == memo.stamp([path]), t
         assert cached == inferred, t
 
 
@@ -490,10 +495,7 @@ def test_table_schema_stamp_sees_nested_rewrite(spark, tmp_path):
     top-level listing, so a non-recursive stamp would serve the stale
     schema.  Also locks the path-keyed eviction: the regenerated table
     REPLACES its entry instead of accreting a second one."""
-    from hfp_loader_spark.plans.catalog import (
-        _TABLE_SCHEMA_CACHE,
-        _table_schema,
-    )
+    from hfp_loader_spark.plans.catalog import _table_schema
 
     root = str(tmp_path / "t.parquet")
     sub = tmp_path / "t.parquet" / "p=1"
@@ -502,7 +504,7 @@ def test_table_schema_stamp_sees_nested_rewrite(spark, tmp_path):
         "overwrite"
     ).parquet(str(sub / "leaf"))
     assert [f.name for f in _table_schema(spark, root).fields] == ["a", "p"]
-    n_entries = len(_TABLE_SCHEMA_CACHE)
+    n_entries = len(_schema_entries())
     # rewrite the nested leaf in place with a DIFFERENT schema
     spark.range(3).selectExpr(
         "id AS a", "id * 2 AS b"
@@ -512,4 +514,4 @@ def test_table_schema_stamp_sees_nested_rewrite(spark, tmp_path):
         "b",
         "p",
     ]
-    assert len(_TABLE_SCHEMA_CACHE) == n_entries  # replaced, not accreted
+    assert len(_schema_entries()) == n_entries  # replaced, not accreted

@@ -1107,6 +1107,7 @@ def test_model_store_serves_retrains_and_truncates(
     import shutil
     import os
 
+    from hfp_loader_spark import memo
     from hfp_loader_spark.plans import model_queries as mq
     from hfp_loader_spark.versioned import table_history
 
@@ -1114,7 +1115,7 @@ def test_model_store_serves_retrains_and_truncates(
     corpus.mkdir()
     src = f"{sf_dir}/embeddings.parquet"
     shutil.copyfile(src, corpus / "embeddings.parquet")
-    monkeypatch.setattr(mq, "_INDEX_BASE", str(tmp_path / "idx"))
+    monkeypatch.setattr(memo, "_INDEX_BASE", str(tmp_path / "idx"))
 
     calls = []
 
@@ -1161,8 +1162,68 @@ def test_model_store_serves_retrains_and_truncates(
     assert calls == ["ivf", "pq", "ivf", "ivf"]
 
     # cache semantics: history truncates to the head + one predecessor
-    root = f"{mq._INDEX_BASE}/tivf_model_{mq._corpus_key(str(corpus))}"
+    root = f"{memo._INDEX_BASE}/tivf_model_{memo._corpus_key(str(corpus))}"
     assert {s.version for s in table_history(spark, root)} == {2, 3}
+
+
+def test_ann_serve_follows_a_corpus_regenerated_in_place(
+    spark, sf_dir, tmp_path
+):
+    """A corpus rewritten in place under a live process (same path, same
+    ids, new vectors) must retrain and re-index: the served neighbor
+    lists match the DuckDB oracle over the NEW files, not the model
+    trained on the old ones.  ``sim_ann_ivfpq`` serves from the same two
+    models, so the IVF and PQ entries cover it."""
+    import os
+    import shutil
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hfp_loader_spark.plans.catalog import REGISTRY, TABLES
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    )
+    from check_correctness import _norm_rows as _norm
+
+    corpus = tmp_path / "sf"
+    shutil.copytree(sf_dir, corpus)
+    path = corpus / "embeddings.parquet"
+    os.chmod(path, 0o644)
+
+    def assert_oracle_equal(name: str) -> None:
+        sdf = REGISTRY[name].builder(spark, str(corpus))
+        got = _norm(sdf.columns, [tuple(r) for r in sdf.collect()])
+        con = duckdb.connect()
+        try:
+            for t in TABLES:
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM '{corpus}/{t}.parquet'"
+                )
+            cur = con.execute(REGISTRY[name].oracle)
+            want = _norm([d[0] for d in cur.description], cur.fetchall())
+        finally:
+            con.close()
+        assert got == want, name
+
+    for name in ("sim_ann_ivf", "sim_ann_pq"):
+        assert_oracle_equal(name)
+
+    # new vectors under the same ids: each id takes the next row's vector
+    t = pq.read_table(path)
+    vecs = t.column("embedding").to_pylist()
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        t.schema.field("embedding"),
+        pa.array(vecs[1:] + vecs[:1], type=t.schema.field("embedding").type),
+    )
+    pq.write_table(t, path)
+
+    for name in ("sim_ann_ivf", "sim_ann_pq"):
+        assert_oracle_equal(name)
 
 
 def test_index_base_defaults_to_fresh_per_process_dir():
@@ -1175,7 +1236,7 @@ def test_index_base_defaults_to_fresh_per_process_dir():
     import os
     import re
 
-    from hfp_loader_spark.plans import model_queries as mq
+    from hfp_loader_spark import memo as mq
 
     if os.environ.get("SPARK_GRAFT_INDEX_DIR"):
         assert mq._INDEX_BASE == os.environ["SPARK_GRAFT_INDEX_DIR"]
