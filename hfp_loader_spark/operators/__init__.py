@@ -60,6 +60,7 @@ from hfp_loader_spark.operators.decomposition import (  # noqa: F401
     centered_scatter,
     deflate_scatter,
     merge_scatter_stats,
+    power_iterate,
     power_iteration_pc1,
     project_pc1,
     scatter_stats,

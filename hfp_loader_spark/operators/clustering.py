@@ -137,11 +137,12 @@ def kmeans_fixed_point(
 
     ``checkpoint=True`` (the default since optimization r16) truncates
     lineage with a lazy ``localCheckpoint(eager=False)`` on the k-row
-    centroid frame per iteration.  ``eager=False`` keeps plan
-    construction job-free (a catalog builder must not run Spark jobs),
-    and the checkpoint changes NO value — it only pins each round's
-    centroids so round i+1 references them instead of replaying rounds
-    1..i: uncheckpointed, the unrolled recurrence re-executes earlier
+    centroid frame per iteration.  ``eager=False`` does NOT keep plan
+    construction job-free: under AQE the pin runs every exchange stage
+    of the pinned subtree when it is called, so each round's aggregate
+    runs inside the builder.  The checkpoint changes NO value — it only
+    pins each round's centroids so round i+1 references them instead of
+    replaying rounds 1..i: uncheckpointed, the unrolled recurrence re-executes earlier
     rounds' corpus aggregates inside every later round's broadcast (70
     parquet scans of the corpus at iters=3 in the sim_ann_ivf_exact_cells
     plan; 2.2 s → 0.49 s measured on the training subtree at sf0.1).

@@ -22,11 +22,15 @@ Scale shape: the only corpus-sized work is ONE pass that folds each
 Arrow batch into a d(d+1)/2-entry partial Gram matrix with numpy
 (`X.T @ X` — vectorized, no Python per-row work) plus per-dimension
 sums and a count; what shuffles is (#batches × d²/2) partial rows into
-a single (i, j)-keyed aggregate.  Everything after that — centering,
-power iteration, Rayleigh quotient — operates on a ≤d² frame that is
-lazily localCheckpoint-ed (d=64 → 2 145 rows) so its four consumers
-don't re-scan the corpus.  The iteration itself joins a d²-row frame
-with a d-row vector per step: driver-free, executor-trivial.
+a single (i, j)-keyed aggregate.  One global aggregate then collapses
+those stats into a single row, and everything after that — centering,
+power iteration, Rayleigh quotient, Hotelling deflation — is a
+projection of that row over an ``array<array<decimal(38,0)>>`` matrix
+(d=64 → 4 096 entries): no join, no further exchange, no pin, so a
+whole PCA entry stays one lazy plan whose first action runs it.  The
+array expressions are SQL text (``selectExpr`` / ``F.expr``): one py4j
+call each, where nested ``F.transform`` lambdas cost round trips per
+node at every plan build.
 
 Overflow audit (|q| ≤ scale·|x|, d dims, n rows, chunk ≤ _CHUNK):
 per-chunk int64 partials need chunk·q² < 2^63 (6e5² · 8192 ≈ 3e15 ✓);
@@ -39,7 +43,7 @@ digits with ten orders of margin.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hfp_loader_spark.operators.clustering import quantize_vec
@@ -50,14 +54,32 @@ _DEC = "decimal(38,0)"
 _CHUNK = 8192
 
 
-def _floor_div(a: Column, b: Column) -> Column:
-    """Exact floor division of integer-valued decimals, b > 0 — spelled
-    out as subtract-canonical-remainder-then-divide because engines
-    disagree on native integer division (Spark decimal ``/`` rounds,
-    DuckDB ``//`` truncates toward zero): ``(a − ((a%b)+b)%b) / b`` is
-    exactly divisible, so every engine's division agrees."""
-    r = ((a % b) + b) % b
-    return ((a - r) / b).cast(_DEC)
+def _floor_div(a: str, b: str) -> str:
+    """SQL text: exact floor division of integer-valued decimals, b > 0 —
+    spelled out as subtract-canonical-remainder-then-divide because
+    engines disagree on native integer division (Spark decimal ``/``
+    rounds, DuckDB ``//`` truncates toward zero): ``(a − ((a%b)+b)%b) / b``
+    is exactly divisible, so every engine's division agrees."""
+    r = f"(((({a}) % ({b})) + ({b})) % ({b}))"
+    return f"CAST((({a}) - {r}) / ({b}) AS {_DEC})"
+
+
+def _sum(arr: str) -> str:
+    """SQL text: exact sum of a decimal array, NULL when it is empty —
+    the semantics of SUM over no rows, so an empty corpus yields the
+    same NULLs the row-at-a-time aggregates did."""
+    return (
+        f"aggregate({arr}, CAST(NULL AS {_DEC}), "
+        f"(acc, x) -> coalesce(acc, 0) + x)"
+    )
+
+
+def _dot(a: str, b: str) -> str:
+    return _sum(f"zip_with({a}, {b}, (x, y) -> x * y)")
+
+
+def _matvec(m: str, v: str) -> str:
+    return f"transform({m}, r -> {_dot('r', v)})"
 
 
 def scatter_stats(
@@ -65,7 +87,6 @@ def scatter_stats(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """One corpus pass → the sufficient statistics of the scatter matrix
     as a ``(kind, i, j, val)`` frame (``val`` DECIMAL(38,0); positions
@@ -79,13 +100,9 @@ def scatter_stats(
     Each Arrow batch is folded by numpy into ONE partial-stat row set
     (chunked at ``_CHUNK`` rows for int64 headroom) — the corpus never
     shuffles; only (#chunks × (d²/2 + d + 1)) partial rows reach the
-    single (kind, i, j) hash aggregate, which map-side-combines.
-
-    ``materialize=True`` lazily localCheckpoints the aggregated frame
-    (d²/2 + d + 1 rows — trivially small) because downstream centering
-    references it for n, sums, and moments separately; unchecked, each
-    reference would re-run the corpus scan.  Plan construction stays
-    job-free (``eager=False``)."""
+    single (kind, i, j) hash aggregate, which map-side-combines.  Its
+    consumers read it once, through one global aggregate (``_gather``),
+    so it needs no pin."""
     q = emb.where(F.size(F.col(vec_col)) > 0).select(
         quantize_vec(F.col(vec_col), scale).alias("q")
     )
@@ -124,12 +141,11 @@ def scatter_stats(
                 {"kind": kind, "i": ii, "j": jj, "val": vv}
             )
 
-    stats = (
+    return (
         q.mapInPandas(fold, "kind int, i int, j int, val long")
         .groupBy("kind", "i", "j")
         .agg(F.sum(F.col("val").cast(_DEC)).alias("val"))
     )
-    return stats.localCheckpoint(eager=False) if materialize else stats
 
 
 def merge_scatter_stats(*parts: DataFrame) -> DataFrame:
@@ -150,54 +166,101 @@ def merge_scatter_stats(*parts: DataFrame) -> DataFrame:
     )
 
 
-def centered_numerator(stats: DataFrame, full: bool = False) -> DataFrame:
+def _gather(stats: DataFrame) -> DataFrame:
+    """``scatter_stats`` output as ONE row: ``n``, the per-position sums
+    ``s`` (sorted by position) and the upper-triangle co-moments ``u``
+    as ``(i, j, val)`` structs sorted by (i, j).  The triangle holds
+    every (i, j), i ≤ j ≤ d: ``scatter_stats`` always emits the full
+    triangle of the widest vector, and merges keep it."""
+    return stats.selectExpr(
+        "max(IF(kind = 0, val, NULL)) AS n",
+        "transform(array_sort(collect_list(IF(kind = 1, struct(i, val), "
+        "NULL))), e -> e.val) AS s",
+        "array_sort(collect_list(IF(kind = 2, struct(i, j, val), NULL)))"
+        " AS u",
+    )
+
+
+def centered_numerator(stats: DataFrame) -> DataFrame:
     """Centered scatter NUMERATOR from ``scatter_stats`` output:
-    ``(i, j, nn, n)`` with nn = n·Σqᵢqⱼ − Σqᵢ·Σqⱼ (exact; = n²·covᵢⱼ·
-    scale²).  Upper triangle by default; ``full=True`` mirrors both
-    orientations.  All joins broadcast d- or 1-row frames."""
-    n = stats.where((F.col("kind") == 0)).select(
-        F.col("val").alias("n")
-    )
-    sums = stats.where(F.col("kind") == 1).select(
-        F.col("i").alias("pos"), F.col("val").alias("s")
-    )
-    upper = stats.where(F.col("kind") == 2).select("i", "j", "val")
-    tri = (
-        upper.unionByName(
-            upper.where(F.col("i") != F.col("j")).select(
-                F.col("j").alias("i"), F.col("i").alias("j"), "val"
-            )
-        )
-        if full
-        else upper
-    )
-    si = sums.select(F.col("pos").alias("i"), F.col("s").alias("si"))
-    sj = sums.select(F.col("pos").alias("j"), F.col("s").alias("sj"))
-    return (
-        tri.crossJoin(F.broadcast(n))
-        .join(F.broadcast(si), "i")
-        .join(F.broadcast(sj), "j")
-        .select(
-            "i",
-            "j",
-            (F.col("n") * F.col("val") - F.col("si") * F.col("sj")).alias(
-                "nn"
-            ),
-            "n",
-        )
+    ``(i, j, nn, n)`` upper-triangle rows with nn = n·Σqᵢqⱼ − Σqᵢ·Σqⱼ
+    (exact; = n²·covᵢⱼ·scale²) — a projection of the gathered row."""
+    return _gather(stats).selectExpr(
+        "inline(transform(u, e -> struct(e.i AS i, e.j AS j, "
+        "n * e.val - s[e.i - 1] * s[e.j - 1] AS nn, n AS n)))"
     )
 
 
 def centered_scatter(stats: DataFrame) -> DataFrame:
-    """Centered scatter matrix from ``scatter_stats`` output, FULL (both
-    orientations), pre-divided by n²:  Sᵢⱼ = ⌊(n·Σqᵢqⱼ − Σqᵢ·Σqⱼ) / n²⌋
-    ≈ covᵢⱼ·scale² as an exact integer.  Output ``(i, j, s)``; d² rows."""
-    return centered_numerator(stats, full=True).select(
-        "i",
-        "j",
-        _floor_div(
-            F.col("nn"), (F.col("n") * F.col("n")).cast(_DEC)
-        ).alias("s"),
+    """Centered scatter matrix from ``scatter_stats`` output as ONE row
+    with column ``A`` (``array<array<decimal(38,0)>>``, row i = position
+    i+1), pre-divided by n²:  Aᵢⱼ = ⌊(n·Σqᵢqⱼ − Σqᵢ·Σqⱼ) / n²⌋ ≈
+    covᵢⱼ·scale² as an exact integer — projections of the gathered row,
+    reading the triangle by its row-major index."""
+    # upper-triangle offset of (lo, hi), 0-based: lo·d − lo(lo−1)/2 + hi−lo
+    lo = "least(a, b)"
+    tri = f"CAST({lo} * size(s) - {lo} * ({lo} - 1) div 2 + abs(a - b) AS INT)"
+    nn = (
+        f"transform(s, (si, a) -> transform(s, (sj, b) -> "
+        f"n * u[{tri}].val - si * sj))"
+    )
+    return _gather(stats).selectExpr("n", f"{nn} AS nn").selectExpr(
+        f"transform(nn, r -> transform(r, x -> {_floor_div('x', 'n * n')}))"
+        " AS A"
+    )
+
+
+def power_iterate(
+    scatter: DataFrame, iters: int = 3, vscale: int = 1_000_000, v: str = "v"
+) -> DataFrame:
+    """Add column ``v`` to the one-row ``centered_scatter`` frame: the
+    dominant-eigenvector iterate after ``iters`` power-iteration steps,
+    entirely in exact integers.  Start from the all-ones vector
+    (quantized to ``vscale``), multiply by the matrix, and re-normalize
+    each step by max-|component| — ``v′ = ⌊w·vscale / max|w|⌋`` —
+    instead of the (irrational) L2 norm, so the trajectory never leaves
+    ℤ and every engine lands on the identical vector.  Convergence is
+    the standard power-method ratio |λ₂/λ₁| per step; the all-ones start
+    is deterministic and non-orthogonal to PC1 for any corpus without
+    exact symmetry (a pathological orthogonal start would converge to
+    PC2 — on BOTH engines, so parity still holds).  Each step projects
+    the row (matvec, max floor, normalize); no corpus access."""
+    vs = f"CAST({vscale} AS {_DEC})"
+    peak = f"aggregate({v}, CAST(1 AS {_DEC}), (a, x) -> greatest(a, abs(x)))"
+    norm = f"transform({v}, x -> {_floor_div(f'x * {vs}', '_m')})"
+    st = scatter.withColumn(v, F.expr(f"array_repeat({vs}, size(A))"))
+    for _ in range(iters):
+        st = st.withColumn(v, F.expr(_matvec("A", v)))
+        st = st.withColumn("_m", F.expr(peak)).withColumn(v, F.expr(norm))
+    return st.drop("_m")
+
+
+def rayleigh(v: str = "v", scale: int = 1_000_000) -> str:
+    """SQL text over a ``power_iterate`` row: the Rayleigh quotient
+    vᵀAv / (vᵀv·scale²), unrounded — exact integer numerator and
+    denominator, one IEEE division and one multiply, the same on every
+    engine."""
+    num = _dot(_matvec("A", v), v)
+    return (
+        f"CAST({num} AS DOUBLE) / "
+        f"(CAST({_dot(v, v)} AS DOUBLE) * {float(scale) ** 2!r}D)"
+    )
+
+
+def pc_rows(
+    state: DataFrame, scale: int = 1_000_000, v: str = "v", **extra: str
+) -> DataFrame:
+    """``(pos, v_q, eigenvalue, *extra)`` rows of a ``power_iterate``
+    row: one row per position (``inline``), ``eigenvalue`` the Rayleigh
+    quotient rounded once to 8 decimals, and each ``extra`` a per-row
+    SQL expression evaluated once on the state row."""
+    cols = {"eigenvalue": f"round({rayleigh(v, scale)}, 8)", **extra}
+    fields = "".join(f", {c} AS {c}" for c in cols)
+    return state.selectExpr(
+        v, *(f"{e} AS {c}" for c, e in cols.items())
+    ).selectExpr(
+        f"inline(transform({v}, (x, k) -> "
+        f"struct(k + 1 AS pos, CAST(x AS BIGINT) AS v_q{fields})))"
     )
 
 
@@ -205,130 +268,52 @@ def power_iteration_pc1(
     scatter: DataFrame,
     iters: int = 3,
     vscale: int = 1_000_000,
-    materialize: bool = True,
     scale: int = 1_000_000,
 ) -> DataFrame:
-    """Dominant eigenvector of the centered scatter by ``iters`` power-
-    iteration steps, entirely in exact integers: start from the all-ones
-    vector (quantized to ``vscale``), multiply by the matrix, and
-    re-normalize each step by max-|component| — ``v′ = ⌊w·vscale /
-    max|w|⌋`` — instead of the (irrational) L2 norm, so the trajectory
-    never leaves ℤ and every engine lands on the identical vector.
-    Convergence is the standard power-method ratio |λ₂/λ₁| per step; the
-    all-ones start is deterministic and non-orthogonal to PC1 for any
-    corpus without exact symmetry (a pathological orthogonal start would
-    converge to PC2 — on BOTH engines, so parity still holds).
+    """Dominant eigenvector of the one-row ``centered_scatter`` by
+    ``iters`` fixed-point power-iteration steps (``power_iterate``).
 
     Output ``(pos, v_q, eigenvalue)`` — d rows; ``v_q/vscale`` is the
     max-normalized component, ``eigenvalue`` the Rayleigh quotient
-    vᵀSv / (vᵀv·scale²) rounded once to 8 decimals (exact integer
-    numerator and denominator; one IEEE division + one multiply, same on
-    every engine).  ``scale`` MUST equal the quantization scale the
-    scatter was built with (``scatter_stats(scale=…)``) — the Rayleigh
-    denominator de-quantizes by scale²; a mismatch keeps ``v_q`` valid
-    but reports the eigenvalue off by (scale_built/scale)² (ADVICE r9).
-    Each step is a d²×d join + d-row aggregate —
-    no corpus access at all (that happened once, in ``scatter_stats``).
-
-    ``materialize=True`` lazily localCheckpoints the d²-row scatter and
-    each iterate (the ``sim_mmr_rerank`` lesson: an unrolled recurrence
-    otherwise re-derives every prior step's subtree per reference —
-    ~250 joins / ~100 exchanges of pure scheduling overhead at d=64,
-    ~6 s of wall for a 64-row result; checkpointed it executes in
-    milliseconds past the stats scan).  Plan construction stays
-    job-free (``eager=False``)."""
-    if materialize:
-        scatter = scatter.localCheckpoint(eager=False)
-    v = scatter.select(F.col("i").alias("pos")).distinct().select(
-        "pos", F.lit(vscale).cast(_DEC).alias("v")
-    )
-    for _ in range(iters):
-        w = (
-            scatter.join(
-                F.broadcast(v.select(F.col("pos").alias("j"), "v")), "j"
-            )
-            .groupBy("i")
-            .agg(F.sum(F.col("s") * F.col("v")).alias("w"))
-        )
-        m = w.agg(
-            F.greatest(F.max(F.abs(F.col("w"))), F.lit(1).cast(_DEC)).alias(
-                "m"
-            )
-        )
-        v = w.crossJoin(F.broadcast(m)).select(
-            F.col("i").alias("pos"),
-            _floor_div(
-                F.col("w") * F.lit(vscale).cast(_DEC), F.col("m")
-            ).alias("v"),
-        )
-        if materialize:
-            v = v.localCheckpoint(eager=False)
-    vi = v.select(F.col("pos").alias("i"), F.col("v").alias("vi"))
-    vj = v.select(F.col("pos").alias("j"), F.col("v").alias("vj"))
-    quad = (
-        scatter.join(F.broadcast(vi), "i")
-        .join(F.broadcast(vj), "j")
-        .agg(F.sum(F.col("s") * F.col("vi") * F.col("vj")).alias("num"))
-    )
-    den = v.agg(F.sum(F.col("v") * F.col("v")).alias("den"))
-    rho = quad.crossJoin(F.broadcast(den)).select(
-        F.round(
-            F.col("num").cast("double")
-            / (F.col("den").cast("double") * F.lit(float(scale) ** 2)),
-            8,
-        ).alias("eigenvalue")
-    )
-    return v.crossJoin(F.broadcast(rho)).select(
-        "pos", F.col("v").cast("long").alias("v_q"), "eigenvalue"
-    )
+    vᵀSv / (vᵀv·scale²) rounded once to 8 decimals.  ``scale`` MUST
+    equal the quantization scale the scatter was built with
+    (``scatter_stats(scale=…)``) — the Rayleigh denominator de-quantizes
+    by scale²; a mismatch keeps ``v_q`` valid but reports the eigenvalue
+    off by (scale_built/scale)² (ADVICE r9).  The plan is the stats
+    aggregate plus projections of one row: building it runs no job."""
+    return pc_rows(power_iterate(scatter, iters, vscale), scale)
 
 
-def deflate_scatter(scatter: DataFrame, pc: DataFrame) -> DataFrame:
-    """Integer Hotelling deflation: subtract the rank-1 component of an
-    extracted eigenvector from the scatter so the next power iteration
-    converges to the NEXT eigenpair —  S′ᵢⱼ = Sᵢⱼ − ⌊λ̂·vᵢ·vⱼ / vᵀv⌋
-    with λ̂ = ⌊vᵀSv / vᵀv⌋.  The two floors make S′ deterministic
-    integers (bit-exact on any engine) at the cost of a residual
-    leakage ≤ 1 ulp of the fixed-point grid per entry — orders below
-    the λ₁→λ₂ spectral gap, and identical on both engines either way.
+def deflate_scatter(scatter: DataFrame, v: str = "v") -> DataFrame:
+    """Integer Hotelling deflation of a ``power_iterate`` row: subtract
+    the rank-1 component of its eigenvector ``v`` from ``A`` so the next
+    power iteration converges to the NEXT eigenpair —
+    S′ᵢⱼ = Sᵢⱼ − ⌊λ̂·vᵢ·vⱼ / vᵀv⌋ with λ̂ = ⌊vᵀSv / vᵀv⌋.  The two
+    floors make S′ deterministic integers (bit-exact on any engine) at
+    the cost of a residual leakage ≤ 1 ulp of the fixed-point grid per
+    entry — orders below the λ₁→λ₂ spectral gap, and identical on both
+    engines either way.
 
     Magnitude audit (continues the module docstring's): λ̂ ≈ λ₁·scale²
     ≤ ~1e12; λ̂·vᵢ·vⱼ ≤ 1e12·vscale² = 1e24 — inside both DECIMAL(38,0)
     and HUGEINT without the naive (vᵀSv)·vᵢ·vⱼ form's 1e39 blow-up
     (which is WHY λ̂ is floored first).
 
-    ``pc`` is ``power_iteration_pc1`` output (``pos``, ``v_q``); the
-    result has the same ``(i, j, s)`` shape as the input, so the
-    extraction composes: deflate → power-iterate → deflate → …"""
-    v = pc.select("pos", F.col("v_q").cast(_DEC).alias("v"))
-    vj = v.select(F.col("pos").alias("j"), F.col("v").alias("vj"))
-    vi = v.select(F.col("pos").alias("i"), F.col("v").alias("vi"))
-    w = (
-        scatter.join(F.broadcast(vj), "j")
-        .groupBy("i")
-        .agg(F.sum(F.col("s") * F.col("vj")).alias("w"))
-    )
-    num = w.join(F.broadcast(vi), "i").agg(
-        F.sum(F.col("w") * F.col("vi")).alias("num")
-    )
-    den = v.agg(F.sum(F.col("v") * F.col("v")).alias("den"))
-    lam = num.crossJoin(F.broadcast(den)).select(
-        _floor_div(F.col("num"), F.col("den")).alias("lam"), "den"
-    )
+    The result keeps every column, with ``A`` replaced, so the
+    extraction composes: iterate → deflate → iterate → …"""
+    lam_vv = f"_lam * {v}[a] * {v}[b]"
     return (
-        scatter.join(F.broadcast(vi), "i")
-        .join(F.broadcast(vj), "j")
-        .crossJoin(F.broadcast(lam))
-        .select(
-            "i",
-            "j",
-            (
-                F.col("s")
-                - _floor_div(
-                    F.col("lam") * F.col("vi") * F.col("vj"), F.col("den")
-                )
-            ).alias("s"),
+        scatter.withColumn("_num", F.expr(_dot(_matvec("A", v), v)))
+        .withColumn("_den", F.expr(_dot(v, v)))
+        .withColumn("_lam", F.expr(_floor_div("_num", "_den")))
+        .withColumn(
+            "A",
+            F.expr(
+                f"transform(A, (r, a) -> transform(r, (x, b) -> "
+                f"x - {_floor_div(lam_vv, '_den')}))"
+            ),
         )
+        .drop("_num", "_den", "_lam")
     )
 
 
@@ -346,28 +331,17 @@ def project_pc1(
     projection.  Shape: the d-row eigenvector folds in as ONE broadcast
     array literal-equivalent (a broadcast join + zip_with fold), so the
     corpus is touched exactly once and never shuffled."""
-    vec = pc1.agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("v_q")))
-            ),
-            lambda s: s.getField("v_q"),
-        ).alias("_pc")
+    vec = pc1.selectExpr(
+        "transform(array_sort(collect_list(struct(pos, v_q))), e -> e.v_q)"
+        " AS _pc"
     )
     q = emb.where(F.size(F.col(vec_col)) > 0).select(
         F.col(id_col), quantize_vec(F.col(vec_col), scale).alias("q")
     )
-    return q.crossJoin(F.broadcast(vec)).select(
+    return q.crossJoin(F.broadcast(vec)).selectExpr(
         id_col,
-        F.aggregate(
-            F.zip_with(
-                F.col("q"),
-                F.col("_pc"),
-                lambda a, b: (a.cast(_DEC) * b.cast(_DEC)),
-            ),
-            F.lit(0).cast(_DEC),
-            lambda acc, x: acc + x,
-        ).alias("t"),
+        f"aggregate(zip_with(q, _pc, (a, b) -> CAST(a AS {_DEC}) * "
+        f"CAST(b AS {_DEC})), CAST(0 AS {_DEC}), (acc, x) -> acc + x) AS t",
     )
 
 
@@ -376,27 +350,21 @@ def top_p_components(
     p: int,
     iters: int = 3,
     vscale: int = 1_000_000,
-    materialize: bool = True,
     scale: int = 1_000_000,
 ) -> list[DataFrame]:
-    """The top-``p`` spectral directions by the deflate → power-iterate
-    loop: component i is ``power_iteration_pc1`` on the scatter with
-    components 0..i−1 Hotelling-deflated out (``deflate_scatter``).
-    Returns ``p`` frames of ``(pos, v_q, eigenvalue)`` — the PCA
-    projection basis for rank reduction before ANN indexing.  Everything
-    stays exact integers; no additional corpus passes beyond the one
+    """The top-``p`` spectral directions by the iterate → deflate loop:
+    component i is the power iteration on the scatter with components
+    0..i−1 Hotelling-deflated out (``deflate_scatter``).  Returns ``p``
+    frames of ``(pos, v_q, eigenvalue)`` — the PCA projection basis for
+    rank reduction before ANN indexing.  Everything stays exact
+    integers in one row; no additional corpus passes beyond the one
     that built the scatter."""
     out: list[DataFrame] = []
     cur = scatter
     for _ in range(p):
-        pc = power_iteration_pc1(
-            cur, iters=iters, vscale=vscale, materialize=materialize,
-            scale=scale,
-        )
-        out.append(pc)
-        cur = deflate_scatter(cur, pc)
-        if materialize:
-            cur = cur.localCheckpoint(eager=False)
+        cur = power_iterate(cur, iters, vscale)
+        out.append(pc_rows(cur, scale))
+        cur = deflate_scatter(cur)
     return out
 
 

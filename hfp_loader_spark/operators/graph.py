@@ -211,7 +211,10 @@ def pagerank(
     # recomputes — and never observes bitwise-different ranks from a
     # different task-completion order of the double sums (the float
     # drift class the cross-engine determinism notes guard against).
-    # Costs nothing until an action runs; the frame is vertex-sized.
+    # The frame is vertex-sized.  Not free at build time: under AQE a
+    # lazy localCheckpoint runs every exchange stage of the pinned
+    # subtree when it is called (only the final collect waits for an
+    # action), so the rounds' shuffles run inside the builder.
     return ranks.localCheckpoint(eager=False)
 
 
@@ -581,9 +584,7 @@ def markov_stationary(
             cm.join(F.broadcast(pi), "s")
             .select(
                 F.col("t"),
-                _floor_div(F.col("p") * F.col("c"), F.col("rsum")).alias(
-                    "m"
-                ),
+                F.expr(_floor_div("p * c", "rsum")).alias("m"),
             )
             .groupBy("t")
             .agg(F.sum("m").alias("raw"))
@@ -593,9 +594,9 @@ def markov_stationary(
         )
         pi = raw.crossJoin(F.broadcast(tot)).select(
             F.col("t").alias("s"),
-            _floor_div(
-                F.col("raw") * F.lit(pscale).cast(dec), F.col("tot")
-            ).alias("p"),
+            F.expr(_floor_div(f"raw * CAST({pscale} AS {dec})", "tot")).alias(
+                "p"
+            ),
         )
         if materialize:
             pi = pi.localCheckpoint(eager=False)

@@ -1332,9 +1332,9 @@ def mmr_diversify(
         # PRIOR step's output); without lineage truncation the final
         # plan re-derives the top-k subtree O(k²) times — measured 437
         # exchanges at k=5, vs one short stage per step with the
-        # checkpoints.  eager=False keeps construction job-free; each
-        # RDD computes once at the first action and is reused by all
-        # later steps.
+        # checkpoints.  Each RDD computes once and is reused by all
+        # later steps; eager=False still runs the subtree's exchange
+        # stages at the pin under AQE, so construction is not job-free.
         .localCheckpoint(eager=False)
     )
 
@@ -1371,9 +1371,9 @@ def mmr_diversify(
                 round_to,
             ).alias("_msim"),
         )
-        # computed once at first action, reused by every unrolled step;
-        # eager=False keeps plan CONSTRUCTION job-free (a catalog builder
-        # must not run Spark jobs — the bloom_contains lesson)
+        # computed once, reused by every unrolled step; under AQE the
+        # lazy pin still runs the subtree's exchange stages (the self
+        # join's shuffles) when it is called, inside the builder
         .localCheckpoint(eager=False)
     )
 

@@ -36,6 +36,17 @@ def _fd(a: str, b: str) -> str:
     return f"((({a}) - ((({a}) % ({b})) + ({b})) % ({b})) // ({b}))"
 
 
+def _scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-row centered scatter of the embeddings corpus."""
+    from hfp_loader_spark.operators.decomposition import (
+        centered_scatter,
+        scatter_stats,
+    )
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return centered_scatter(scatter_stats(emb, scale=_SCALE))
+
+
 # Shared CTE chain: quantized vectors → sufficient statistics → centered
 # numerator.  One definition feeds all three oracles (the TOKS_SQL
 # single-source rule).
@@ -172,19 +183,22 @@ def emb_scatter_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "and the SQL oracle replays it bit-for-bit (the kmeans recipe for "
     "linear algebra). Rayleigh-quotient eigenvalue of the covariance, "
     "one division + round. Scale shape: after the single corpus pass "
-    "(scatter_stats), every step is a d²-row × d-row broadcast join — "
-    "iteration cost independent of corpus size.",
+    "(scatter_stats), one aggregate gathers the stats into ONE row and "
+    "the centered matrix, every matvec/floor step and the Rayleigh "
+    "quotient are projections of that row's d×d array — no join, no "
+    "further exchange; iteration cost independent of corpus size.",
 )
 def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        centered_scatter,
         power_iteration_pc1,
-        scatter_stats,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    scat = centered_scatter(scatter_stats(emb, scale=_SCALE))
-    return power_iteration_pc1(scat, iters=_ITERS, vscale=_VSCALE)
+    return power_iteration_pc1(
+        _scatter(spark, sf_dir),
+        iters=_ITERS,
+        vscale=_VSCALE,
+        scale=_SCALE,
+    )
 
 
 def _deflation_ctes() -> str:
@@ -270,51 +284,27 @@ def _deflation_ctes() -> str:
     "are variance-seeking directions rather than converged "
     "eigenvectors and cos_pc1 ~ 0.2 — identically on both engines; "
     "with a real spectral gap the same recurrence converges "
-    "geometrically. Composable: deflate → iterate → deflate extracts "
-    "the top-p spectrum with no additional corpus passes.",
+    "geometrically. Scale shape: both iterations and the deflation are "
+    "projections of the same one-row d×d array state as pc1's — one "
+    "corpus pass, no join. Composable: deflate → iterate → deflate "
+    "extracts the top-p spectrum with no additional corpus passes.",
 )
 def emb_power_iteration_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        centered_scatter,
+        _dot,
         deflate_scatter,
-        power_iteration_pc1,
-        scatter_stats,
+        pc_rows,
+        power_iterate,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    scat = centered_scatter(
-        scatter_stats(emb, scale=_SCALE)
-    ).localCheckpoint(eager=False)
-    pc1 = power_iteration_pc1(scat, iters=_ITERS, vscale=_VSCALE)
-    pc2 = power_iteration_pc1(
-        deflate_scatter(scat, pc1), iters=_ITERS, vscale=_VSCALE
-    )
-    v1 = pc1.select("pos", F.col("v_q").cast("decimal(38,0)").alias("v1"))
-    v2 = pc2.select(
-        "pos", F.col("v_q").cast("decimal(38,0)").alias("v2"), "eigenvalue"
-    )
-    dot = v1.join(v2, "pos").agg(
-        F.sum(F.col("v1") * F.col("v2")).alias("dot")
-    )
-    d1 = v1.agg(F.sum(F.col("v1") * F.col("v1")).alias("den1"))
-    d2 = v2.agg(F.sum(F.col("v2") * F.col("v2")).alias("den2"))
+    pc1 = power_iterate(_scatter(spark, sf_dir), _ITERS, _VSCALE, v="v1")
+    pc2 = power_iterate(deflate_scatter(pc1, v="v1"), _ITERS, _VSCALE)
     cos = (
-        dot.crossJoin(F.broadcast(d1))
-        .crossJoin(F.broadcast(d2))
-        .select(
-            F.round(
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("den1").cast("double"))
-                    * F.sqrt(F.col("den2").cast("double"))
-                ),
-                6,
-            ).alias("cos_pc1")
-        )
+        f"round(CAST({_dot('v1', 'v')} AS DOUBLE) / "
+        f"(sqrt(CAST({_dot('v1', 'v1')} AS DOUBLE)) "
+        f"* sqrt(CAST({_dot('v', 'v')} AS DOUBLE))), 6)"
     )
-    return pc2.crossJoin(F.broadcast(cos)).select(
-        "pos", "v_q", "eigenvalue", "cos_pc1"
-    )
+    return pc_rows(pc2, _SCALE, cos_pc1=cos)
 
 
 @defquery(
@@ -466,15 +456,15 @@ def emb_class_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_pc1_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        centered_scatter,
         power_iteration_pc1,
         project_pc1,
-        scatter_stats,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    scat = centered_scatter(scatter_stats(emb, scale=_SCALE))
-    pc1 = power_iteration_pc1(scat, iters=_ITERS, vscale=_VSCALE)
+    pc1 = power_iteration_pc1(
+        _scatter(spark, sf_dir),
+        iters=_ITERS, vscale=_VSCALE, scale=_SCALE,
+    )
     proj = project_pc1(
         emb, pc1, scale=_SCALE, vscale=_VSCALE
     ).join(_t(spark, sf_dir, "embeddings").select("vec_id", "label"), "vec_id")
@@ -537,15 +527,15 @@ def emb_pc1_projection_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_projection_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        centered_scatter,
         power_iteration_pc1,
         project_pc1,
-        scatter_stats,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    scat = centered_scatter(scatter_stats(emb, scale=_SCALE))
-    pc1 = power_iteration_pc1(scat, iters=_ITERS, vscale=_VSCALE)
+    pc1 = power_iteration_pc1(
+        _scatter(spark, sf_dir),
+        iters=_ITERS, vscale=_VSCALE, scale=_SCALE,
+    )
     proj = project_pc1(emb, pc1, scale=_SCALE, vscale=_VSCALE).join(
         emb.select("vec_id", "label"), "vec_id"
         # narrow (id, t, label) projection, lazily pinned: both the
@@ -609,42 +599,18 @@ def emb_projection_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        centered_scatter,
-        power_iteration_pc1,
-        scatter_stats,
+        _sum,
+        power_iterate,
+        rayleigh,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    scat = centered_scatter(
-        scatter_stats(emb, scale=_SCALE)
-    ).localCheckpoint(eager=False)
-    pc1 = power_iteration_pc1(scat, iters=_ITERS, vscale=_VSCALE)
-    tr = scat.where(F.col("i") == F.col("j")).agg(
-        F.sum("s").alias("trace_q")
-    )
-    vi = pc1.select("pos", F.col("v_q").cast("decimal(38,0)").alias("v"))
-    num = (
-        scat.join(
-            F.broadcast(vi.select(F.col("pos").alias("i"), F.col("v").alias("vi"))),
-            "i",
-        )
-        .join(
-            F.broadcast(vi.select(F.col("pos").alias("j"), F.col("v").alias("vj"))),
-            "j",
-        )
-        .agg(F.sum(F.col("s") * F.col("vi") * F.col("vj")).alias("num"))
-    )
-    den = vi.agg(F.sum(F.col("v") * F.col("v")).alias("den"))
-    eig = F.col("num").cast("double") / (
-        F.col("den").cast("double") * F.lit(1e12)
-    )
-    tv = F.col("trace_q").cast("double") / F.lit(1e12)
-    return (
-        num.crossJoin(F.broadcast(den))
-        .crossJoin(F.broadcast(tr))
-        .select(
-            F.round(tv, 8).alias("total_variance"),
-            F.round(eig, 8).alias("pc1_eigenvalue"),
-            F.round(eig / tv, 6).alias("explained_ratio"),
-        )
+    pc1 = power_iterate(_scatter(spark, sf_dir), _ITERS, _VSCALE)
+    trace = _sum("transform(A, (r, k) -> r[k])")
+    return pc1.selectExpr(
+        f"{rayleigh('v', _SCALE)} AS eig",
+        f"CAST({trace} AS DOUBLE) / 1e12 AS tv",
+    ).selectExpr(
+        "round(tv, 8) AS total_variance",
+        "round(eig, 8) AS pc1_eigenvalue",
+        "round(eig / tv, 6) AS explained_ratio",
     )

@@ -450,9 +450,9 @@ def streaming_scatter_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(path)
     )
     stats = run_available_now(
-        scatter_stats(stream, materialize=False), output_mode="complete"
+        scatter_stats(stream), output_mode="complete"
     )
-    cen = centered_numerator(stats.localCheckpoint(eager=False))
+    cen = centered_numerator(stats)
     nd = F.col("n").cast("double")
     return cen.select(
         "i",

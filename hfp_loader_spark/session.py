@@ -47,6 +47,14 @@ def get_spark(
         # no nanos timestamp — read as epoch-nanos LONG and convert at the
         # source (plans/catalog.py load_table) with integer division.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # No per-call origin capture: with it on, every ``functions.*`` and
+        # ``Column`` call adds ~10 py4j round trips (session lookup, conf
+        # read, call-site stack set/clear); ``F.col`` makes 3 instead of
+        # 13.  PySpark caches this flag once per process, at the first
+        # wrapped call, so it must be set here, not by a later
+        # ``spark.conf.set``.  Cost: analysis errors lose their
+        # ``== DataFrame ==`` call-site fragment.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

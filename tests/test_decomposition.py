@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from hfp_loader_spark.operators.decomposition import (
     _floor_div,
     centered_scatter,
+    deflate_scatter,
+    power_iterate,
     power_iteration_pc1,
     project_pc1,
     scatter_stats,
@@ -62,9 +64,11 @@ def emb(spark):
 
 def test_centered_scatter_matches_replica(emb):
     _, s_mat, _, _ = _replica(1)
+    (row,) = centered_scatter(scatter_stats(emb, scale=SCALE)).collect()
     got = {
-        (r["i"], r["j"]): int(r["s"])
-        for r in centered_scatter(scatter_stats(emb, scale=SCALE)).collect()
+        (i + 1, j + 1): int(s)
+        for i, r in enumerate(row["A"])
+        for j, s in enumerate(r)
     }
     d = len(s_mat)
     assert len(got) == d * d
@@ -107,12 +111,10 @@ def test_projection_matches_replica(emb):
 def test_floor_div_negative_operands(spark):
     rows = spark.createDataFrame(
         [(-7, 2), (7, 2), (-8, 2), (0, 3)], "a long, b long"
-    ).select(
-        _floor_div(
-            F.col("a").cast("decimal(38,0)"), F.col("b").cast("decimal(38,0)")
-        )
-        .cast("long")
-        .alias("fd"),
+    ).selectExpr(
+        "CAST("
+        + _floor_div("CAST(a AS decimal(38,0))", "CAST(b AS decimal(38,0))")
+        + " AS BIGINT) AS fd",
         "a",
         "b",
     )
@@ -129,12 +131,12 @@ def test_merge_scatter_stats_equals_full_recompute(spark):
     a = full.where(F.col("vec_id") <= 2)
     b = full.where(F.col("vec_id") > 2)
     merged = merge_scatter_stats(
-        scatter_stats(a, scale=SCALE, materialize=False),
-        scatter_stats(b, scale=SCALE, materialize=False),
+        scatter_stats(a, scale=SCALE),
+        scatter_stats(b, scale=SCALE),
     )
     exp = {
         (r["kind"], r["i"], r["j"]): int(r["val"])
-        for r in scatter_stats(full, scale=SCALE, materialize=False).collect()
+        for r in scatter_stats(full, scale=SCALE).collect()
     }
     got = {
         (r["kind"], r["i"], r["j"]): int(r["val"]) for r in merged.collect()
@@ -152,7 +154,7 @@ def test_scatter_stats_ragged_dimensions_do_not_crash(spark):
     )
     got = {
         (r["kind"], r["i"], r["j"]): int(r["val"])
-        for r in scatter_stats(ragged, scale=SCALE, materialize=False).collect()
+        for r in scatter_stats(ragged, scale=SCALE).collect()
     }
     assert got[(0, 0, 0)] == 3  # all three vectors counted
     # dim-3 position exists only via vec 2
@@ -163,8 +165,6 @@ def test_scatter_stats_ragged_dimensions_do_not_crash(spark):
 
 
 def test_deflation_matches_replica(spark):
-    from hfp_loader_spark.operators.decomposition import deflate_scatter
-
     emb = spark.createDataFrame(VECS, "vec_id int, embedding array<double>")
     _, s_mat, v1, _ = _replica(3)
     d = len(s_mat)
@@ -184,9 +184,10 @@ def test_deflation_matches_replica(spark):
         m = max(max(abs(x) for x in wu), 1)
         u = [(x * VSCALE) // m for x in wu]
     scat = centered_scatter(scatter_stats(emb, scale=SCALE))
-    pc1 = power_iteration_pc1(scat, iters=3, vscale=VSCALE)
     pc2 = power_iteration_pc1(
-        deflate_scatter(scat, pc1), iters=3, vscale=VSCALE
+        deflate_scatter(power_iterate(scat, iters=3, vscale=VSCALE)),
+        iters=3,
+        vscale=VSCALE,
     )
     got = {r["pos"]: r["v_q"] for r in pc2.collect()}
     assert got == {p + 1: u[p] for p in range(d)}
@@ -214,9 +215,7 @@ def test_streaming_incremental_scatter_equals_batch(spark, tmp_path):
     def fold_batch(bdf, _bid):
         part = {
             (r["kind"], r["i"], r["j"]): int(r["val"])
-            for r in scatter_stats(
-                bdf, scale=SCALE, materialize=False
-            ).collect()
+            for r in scatter_stats(bdf, scale=SCALE).collect()
         }
         for key, val in part.items():
             acc[key] = acc.get(key, 0) + val
@@ -237,7 +236,7 @@ def test_streaming_incremental_scatter_equals_batch(spark, tmp_path):
     full = spark.createDataFrame(VECS, "vec_id int, embedding array<double>")
     exp = {
         (r["kind"], r["i"], r["j"]): int(r["val"])
-        for r in scatter_stats(full, scale=SCALE, materialize=False).collect()
+        for r in scatter_stats(full, scale=SCALE).collect()
     }
     assert acc == exp
 
@@ -248,7 +247,6 @@ def test_streaming_incremental_scatter_equals_batch(spark, tmp_path):
                 rows, "vec_id int, embedding array<double>"
             ),
             scale=SCALE,
-            materialize=False,
         )
         for rows in batches[:2]
     ]
@@ -263,24 +261,22 @@ def test_streaming_incremental_scatter_equals_batch(spark, tmp_path):
                 VECS[:4], "vec_id int, embedding array<double>"
             ),
             scale=SCALE,
-            materialize=False,
         ).collect()
     }
     assert merged == exp2
 
 
 def test_top_p_components_compose_iterate_and_deflate(spark):
-    from hfp_loader_spark.operators.decomposition import (
-        deflate_scatter,
-        top_p_components,
-    )
+    from hfp_loader_spark.operators.decomposition import top_p_components
 
     emb = spark.createDataFrame(VECS, "vec_id int, embedding array<double>")
     scat = centered_scatter(scatter_stats(emb, scale=SCALE))
     c1, c2 = top_p_components(scat, p=2, iters=3, vscale=VSCALE)
     pc1 = power_iteration_pc1(scat, iters=3, vscale=VSCALE)
     pc2 = power_iteration_pc1(
-        deflate_scatter(scat, pc1), iters=3, vscale=VSCALE
+        deflate_scatter(power_iterate(scat, iters=3, vscale=VSCALE)),
+        iters=3,
+        vscale=VSCALE,
     )
     assert {r["pos"]: r["v_q"] for r in c1.collect()} == {
         r["pos"]: r["v_q"] for r in pc1.collect()
@@ -301,11 +297,11 @@ def test_scatter_stats_persist_and_incremental_refresh(spark, tmp_path):
     a = full.where(F.col("vec_id") <= 2)
     b = full.where(F.col("vec_id") > 2)
     v1 = save_scatter_stats(
-        spark, scatter_stats(a, scale=SCALE, materialize=False), root,
+        spark, scatter_stats(a, scale=SCALE), root,
         scale=SCALE,
     )
     v2 = save_scatter_stats(
-        spark, scatter_stats(b, scale=SCALE, materialize=False), root,
+        spark, scatter_stats(b, scale=SCALE), root,
         scale=SCALE,
     )
     assert v2 > v1
@@ -315,7 +311,7 @@ def test_scatter_stats_persist_and_incremental_refresh(spark, tmp_path):
     }
     exp = {
         (r["kind"], r["i"], r["j"]): int(r["val"])
-        for r in scatter_stats(full, scale=SCALE, materialize=False).collect()
+        for r in scatter_stats(full, scale=SCALE).collect()
     }
     assert got == exp
     # time travel: version 1 sees only delta a
@@ -327,7 +323,7 @@ def test_scatter_stats_persist_and_incremental_refresh(spark, tmp_path):
     }
     exp1 = {
         (r["kind"], r["i"], r["j"]): int(r["val"])
-        for r in scatter_stats(a, scale=SCALE, materialize=False).collect()
+        for r in scatter_stats(a, scale=SCALE).collect()
     }
     assert got1 == exp1
     # quantization-grid mismatch refuses
@@ -335,3 +331,25 @@ def test_scatter_stats_persist_and_incremental_refresh(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="scale"):
         load_scatter_stats(spark, root, scale=10_000)
+
+
+def test_pca_entries_on_an_all_null_or_empty_corpus(spark, tmp_path):
+    """A corpus whose vectors are all NULL or empty: pc1 and pc2 return
+    no row and the explained-variance summary one row of NULLs — the
+    results of the earlier per-step join plans, recorded before the
+    one-row state replaced them."""
+    from hfp_loader_spark.plans.catalog import REGISTRY
+
+    spark.createDataFrame(
+        [(1, None, 0), (2, [], 1), (3, None, 0)],
+        "vec_id bigint, embedding array<double>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    def run(name):
+        return [tuple(r) for r in REGISTRY[name].builder(
+            spark, str(tmp_path)
+        ).collect()]
+
+    assert run("emb_power_iteration_pc1") == []
+    assert run("emb_power_iteration_pc2") == []
+    assert run("emb_explained_variance") == [(None, None, None)]

@@ -145,7 +145,10 @@ HEADLINE_INVARIANTS = {
     # exchanges, SMJs eliminated); cap tightened to pin the win.
     "rank_rrf_fusion": dict(max_exchanges=16, bnlj=6),
     "sim_mmr_rerank": dict(max_exchanges=4, bnlj=0),
-    "emb_power_iteration_pc1": dict(max_exchanges=2, bnlj=4),
+    # One-row array state: the stats aggregate's one hash exchange
+    # (printed in the final and the initial plan), then a global
+    # aggregate and projections of one row — no join, no crossJoin.
+    "emb_power_iteration_pc1": dict(max_exchanges=2, bnlj=0),
     # r17: pairs/items/total collapsed into one tagged aggregate behind a
     # lazy pin — the final plan is broadcast joins over the bounded
     # counts frame (0 visible exchanges in the committed dump; margin
