@@ -27,7 +27,12 @@ those stats into a single row, and everything after that — centering,
 power iteration, Rayleigh quotient, Hotelling deflation — is a
 projection of that row over an ``array<array<decimal(38,0)>>`` matrix
 (d=64 → 4 096 entries): no join, no further exchange, no pin, so a
-whole PCA entry stays one lazy plan whose first action runs it.  The
+whole PCA entry stays one lazy plan whose first action runs it.  This
+assumes a modest d: the matrix is one row on one task, reached through
+one single-partition aggregate (the covariance's ``centered_numerator``
+too).  At d=768 (590k entries), n=2000, ``local[2]`` with a 3 GB heap,
+pc1 takes 15–24 s, 9–13 s of it the stats aggregate, with a JVM peak
+RSS of 2.0–3.2 GB; much wider vectors need a blocked layout.  The
 array expressions are SQL text (``selectExpr`` / ``F.expr``): one py4j
 call each, where nested ``F.transform`` lambdas cost round trips per
 node at every plan build.
@@ -78,8 +83,11 @@ def _dot(a: str, b: str) -> str:
     return _sum(f"zip_with({a}, {b}, (x, y) -> x * y)")
 
 
-def _matvec(m: str, v: str) -> str:
-    return f"transform({m}, r -> {_dot('r', v)})"
+# SQL text: the matrix-vector product A·v of a state row, ``v`` bound
+# once outside the per-row lambda — the optimizer inlines the projection
+# that made ``v`` (it counts references, not lambda calls), which per
+# row would recompute the previous step's normalization d times
+_AV = f"transform(array(v), w -> transform(A, r -> {_dot('r', 'w')}))[0]"
 
 
 def scatter_stats(
@@ -211,7 +219,7 @@ def centered_scatter(stats: DataFrame) -> DataFrame:
 
 
 def power_iterate(
-    scatter: DataFrame, iters: int = 3, vscale: int = 1_000_000, v: str = "v"
+    scatter: DataFrame, iters: int = 3, vscale: int = 1_000_000
 ) -> DataFrame:
     """Add column ``v`` to the one-row ``centered_scatter`` frame: the
     dominant-eigenvector iterate after ``iters`` power-iteration steps,
@@ -226,40 +234,57 @@ def power_iterate(
     PC2 — on BOTH engines, so parity still holds).  Each step projects
     the row (matvec, max floor, normalize); no corpus access."""
     vs = f"CAST({vscale} AS {_DEC})"
-    peak = f"aggregate({v}, CAST(1 AS {_DEC}), (a, x) -> greatest(a, abs(x)))"
-    norm = f"transform({v}, x -> {_floor_div(f'x * {vs}', '_m')})"
-    st = scatter.withColumn(v, F.expr(f"array_repeat({vs}, size(A))"))
+    peak = f"aggregate(v, CAST(1 AS {_DEC}), (a, x) -> greatest(a, abs(x)))"
+    norm = f"transform(v, x -> {_floor_div(f'x * {vs}', '_m')})"
+    st = scatter.withColumn("v", F.expr(f"array_repeat({vs}, size(A))"))
     for _ in range(iters):
-        st = st.withColumn(v, F.expr(_matvec("A", v)))
-        st = st.withColumn("_m", F.expr(peak)).withColumn(v, F.expr(norm))
+        st = st.withColumn("v", F.expr(_AV))
+        st = st.withColumn("_m", F.expr(peak)).withColumn("v", F.expr(norm))
     return st.drop("_m")
 
 
-def rayleigh(v: str = "v", scale: int = 1_000_000) -> str:
+def rayleigh(scale: int = 1_000_000) -> str:
     """SQL text over a ``power_iterate`` row: the Rayleigh quotient
     vᵀAv / (vᵀv·scale²), unrounded — exact integer numerator and
     denominator, one IEEE division and one multiply, the same on every
     engine."""
-    num = _dot(_matvec("A", v), v)
+    num = _dot(_AV, "v")
     return (
         f"CAST({num} AS DOUBLE) / "
-        f"(CAST({_dot(v, v)} AS DOUBLE) * {float(scale) ** 2!r}D)"
+        f"(CAST({_dot('v', 'v')} AS DOUBLE) * {float(scale) ** 2!r}D)"
+    )
+
+
+def total_variance(scale: int = 1_000_000) -> str:
+    """SQL text over a ``centered_scatter`` row: the total variance, the
+    exact integer trace of ``A`` over scale² (NULL when ``A`` is
+    empty)."""
+    diag = _sum("transform(A, (r, k) -> r[k])")
+    return f"CAST({diag} AS DOUBLE) / {float(scale) ** 2!r}D"
+
+
+def iterate_cosine(a: str, b: str) -> str:
+    """SQL text: the cosine of two iterate columns — exact integer dot
+    products, IEEE square roots, the same double on every engine."""
+    return (
+        f"CAST({_dot(a, b)} AS DOUBLE) / (sqrt(CAST({_dot(a, a)} AS DOUBLE))"
+        f" * sqrt(CAST({_dot(b, b)} AS DOUBLE)))"
     )
 
 
 def pc_rows(
-    state: DataFrame, scale: int = 1_000_000, v: str = "v", **extra: str
+    state: DataFrame, scale: int = 1_000_000, **extra: str
 ) -> DataFrame:
     """``(pos, v_q, eigenvalue, *extra)`` rows of a ``power_iterate``
     row: one row per position (``inline``), ``eigenvalue`` the Rayleigh
     quotient rounded once to 8 decimals, and each ``extra`` a per-row
     SQL expression evaluated once on the state row."""
-    cols = {"eigenvalue": f"round({rayleigh(v, scale)}, 8)", **extra}
+    cols = {"eigenvalue": f"round({rayleigh(scale)}, 8)", **extra}
     fields = "".join(f", {c} AS {c}" for c in cols)
     return state.selectExpr(
-        v, *(f"{e} AS {c}" for c, e in cols.items())
+        "v", *(f"{e} AS {c}" for c, e in cols.items())
     ).selectExpr(
-        f"inline(transform({v}, (x, k) -> "
+        "inline(transform(v, (x, k) -> "
         f"struct(k + 1 AS pos, CAST(x AS BIGINT) AS v_q{fields})))"
     )
 
@@ -284,7 +309,7 @@ def power_iteration_pc1(
     return pc_rows(power_iterate(scatter, iters, vscale), scale)
 
 
-def deflate_scatter(scatter: DataFrame, v: str = "v") -> DataFrame:
+def deflate_scatter(scatter: DataFrame) -> DataFrame:
     """Integer Hotelling deflation of a ``power_iterate`` row: subtract
     the rank-1 component of its eigenvector ``v`` from ``A`` so the next
     power iteration converges to the NEXT eigenpair —
@@ -301,10 +326,10 @@ def deflate_scatter(scatter: DataFrame, v: str = "v") -> DataFrame:
 
     The result keeps every column, with ``A`` replaced, so the
     extraction composes: iterate → deflate → iterate → …"""
-    lam_vv = f"_lam * {v}[a] * {v}[b]"
+    lam_vv = "_lam * v[a] * v[b]"
     return (
-        scatter.withColumn("_num", F.expr(_dot(_matvec("A", v), v)))
-        .withColumn("_den", F.expr(_dot(v, v)))
+        scatter.withColumn("_num", F.expr(_dot(_AV, "v")))
+        .withColumn("_den", F.expr(_dot("v", "v")))
         .withColumn("_lam", F.expr(_floor_div("_num", "_den")))
         .withColumn(
             "A",

@@ -291,19 +291,17 @@ def _deflation_ctes() -> str:
 )
 def emb_power_iteration_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        _dot,
+        iterate_cosine,
         deflate_scatter,
         pc_rows,
         power_iterate,
     )
 
-    pc1 = power_iterate(_scatter(spark, sf_dir), _ITERS, _VSCALE, v="v1")
-    pc2 = power_iterate(deflate_scatter(pc1, v="v1"), _ITERS, _VSCALE)
-    cos = (
-        f"round(CAST({_dot('v1', 'v')} AS DOUBLE) / "
-        f"(sqrt(CAST({_dot('v1', 'v1')} AS DOUBLE)) "
-        f"* sqrt(CAST({_dot('v', 'v')} AS DOUBLE))), 6)"
+    pc1 = power_iterate(_scatter(spark, sf_dir), _ITERS, _VSCALE)
+    pc2 = power_iterate(
+        deflate_scatter(pc1).withColumnRenamed("v", "v1"), _ITERS, _VSCALE
     )
+    cos = f"round({iterate_cosine('v1', 'v')}, 6)"
     return pc_rows(pc2, _SCALE, cos_pc1=cos)
 
 
@@ -599,16 +597,14 @@ def emb_projection_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.decomposition import (
-        _sum,
         power_iterate,
         rayleigh,
+        total_variance,
     )
 
     pc1 = power_iterate(_scatter(spark, sf_dir), _ITERS, _VSCALE)
-    trace = _sum("transform(A, (r, k) -> r[k])")
     return pc1.selectExpr(
-        f"{rayleigh('v', _SCALE)} AS eig",
-        f"CAST({trace} AS DOUBLE) / 1e12 AS tv",
+        f"{rayleigh(_SCALE)} AS eig", f"{total_variance(_SCALE)} AS tv"
     ).selectExpr(
         "round(tv, 8) AS total_variance",
         "round(eig, 8) AS pc1_eigenvalue",
