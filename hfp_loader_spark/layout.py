@@ -46,62 +46,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_ivf_partitioned(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist an embedding corpus as an on-disk IVF index: one partition
-    directory per nearest-centroid cell.
-
-    This is the durable form of the IVF ANN path: cell assignment (pure
-    expressions) is paid once at write time, and every subsequent probe
-    query reads ONLY the nprobe matching ``cell=…`` directories —
-    partition pruning turns a corpus scan into a few-file read (asserted
-    via ``PartitionFilters`` in tests/test_layout.py).  At 100 TB with
-    nlist sized so cells hold 100-500 MB, one probe touches
-    nprobe/nlist of the data.
-    """
-    from hfp_loader_spark.operators.similarity import (
-        as_double_array,
-        ivf_assign_cell,
-    )
-
-    from pyspark.sql import functions as F
-
-    tagged = corpus.withColumn(
-        "cell", ivf_assign_cell(as_double_array(F.col(vec_col)), centroids)
-    )
-    tagged.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-
-def ivf_probe_scan(
-    spark: SparkSession,
-    path: str,
-    query_vec: list[float],
-    centroids: list[list[float]],
-    nprobe: int,
-) -> DataFrame:
-    """Read only the ``nprobe`` nearest cells of an IVF-partitioned corpus.
-
-    The probe-cell set is computed driver-side (a few dot products over
-    plan literals), so the filter is a literal ``cell IN (…)`` that
-    Catalyst turns into partition pruning — unmatched cell directories
-    are never listed, opened, or read.
-    """
-    import numpy as np
-
-    from pyspark.sql import functions as F
-
-    c = np.array(centroids, dtype=np.float64)
-    q = np.array(query_vec, dtype=np.float64)
-    order = np.argsort(-(c @ q))
-    cells = [int(i) for i in order[:nprobe]]
-    return spark.read.parquet(path).where(F.col("cell").isin(cells))
-
-
 def colocated_join(
     spark: SparkSession,
     left_table: str,

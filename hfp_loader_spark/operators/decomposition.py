@@ -247,11 +247,13 @@ def rayleigh(scale: int = 1_000_000) -> str:
     """SQL text over a ``power_iterate`` row: the Rayleigh quotient
     vᵀAv / (vᵀv·scale²), unrounded — exact integer numerator and
     denominator, one IEEE division and one multiply, the same on every
-    engine."""
+    engine.  NULL when the iterate is all zeros (the zero scatter of a
+    one-vector or constant corpus), as in the DuckDB oracle."""
     num = _dot(_AV, "v")
+    den = f"nullif({_dot('v', 'v')}, 0)"
     return (
         f"CAST({num} AS DOUBLE) / "
-        f"(CAST({_dot('v', 'v')} AS DOUBLE) * {float(scale) ** 2!r}D)"
+        f"(CAST({den} AS DOUBLE) * {float(scale) ** 2!r}D)"
     )
 
 
@@ -324,12 +326,16 @@ def deflate_scatter(scatter: DataFrame) -> DataFrame:
     and HUGEINT without the naive (vᵀSv)·vᵢ·vⱼ form's 1e39 blow-up
     (which is WHY λ̂ is floored first).
 
+    An all-zero iterate (the zero scatter of a one-vector or constant
+    corpus) has no direction to deflate: vᵀv = 0 reads as NULL, so λ̂
+    and every entry of S′ are NULL, as in the DuckDB oracle.
+
     The result keeps every column, with ``A`` replaced, so the
     extraction composes: iterate → deflate → iterate → …"""
     lam_vv = "_lam * v[a] * v[b]"
     return (
         scatter.withColumn("_num", F.expr(_dot(_AV, "v")))
-        .withColumn("_den", F.expr(_dot("v", "v")))
+        .withColumn("_den", F.expr(f"nullif({_dot('v', 'v')}, 0)"))
         .withColumn("_lam", F.expr(_floor_div("_num", "_den")))
         .withColumn(
             "A",

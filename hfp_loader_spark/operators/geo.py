@@ -337,8 +337,8 @@ def nearest_assign(
     collected once and folded into a single array<struct> literal, and
     each point picks ``array_min(transform(stops, s → (dist, id)))``
     in-row — ZERO joins and ZERO exchanges over the point stream, the
-    same literal-argmin shape as the ANN serve paths
-    (similarity.ivf_pretrained_top_k).  A crossJoin + re-group
+    same literal-argmin shape as the ANN cell assignment
+    (similarity._int_argmin_cluster).  A crossJoin + re-group
     formulation would shuffle every point once for no reason.
 
     ``max_stops`` is the bounded-dimension contract: exceeding it (or

@@ -77,8 +77,6 @@ def brute_force_top_k(
     Output: (query_id, vec_id, cos, rn ≤ k), ranked on the rounded cosine
     with vec_id tiebreak (deterministic across engines/parallelism).
     """
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
     q = queries.select(
         F.col(query_id_col),
         as_double_array(F.col(vec_col)).alias("_qvec"),
@@ -86,13 +84,34 @@ def brute_force_top_k(
     c = corpus.select(
         F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec")
     ).withColumn("_cnorm", norm(F.col("_cvec")))
-    scored = c.crossJoin(F.broadcast(q)).select(
+    return _exact_rerank(
+        c.crossJoin(F.broadcast(q)), k, F.col("_qnorm"), F.col("_cnorm"),
+        id_col, query_id_col, round_to,
+    )
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    k: int,
+    qnorm: Column,
+    cnorm: Column,
+    id_col: str,
+    query_id_col: str,
+    round_to: int,
+) -> DataFrame:
+    """The exact-cosine tail every cosine top-k here ends in: score the
+    ``(query_id_col, id_col, _qvec, _cvec)`` candidate pairs of ``cand``
+    with :func:`cosine_prenormed` rounded to ``round_to``, and keep the
+    top ``k`` per query (cos desc, id tiebreak).  The norms come in as
+    columns because callers differ: a precomputed per-side column, or
+    an inline fold where the candidate frame carries no norm."""
+    from hfp_loader_spark.operators.relational import top_k_per_group
+
+    scored = cand.select(
         query_id_col,
         id_col,
         F.round(
-            cosine_prenormed(
-                F.col("_qvec"), F.col("_cvec"), F.col("_qnorm"), F.col("_cnorm")
-            ),
+            cosine_prenormed(F.col("_qvec"), F.col("_cvec"), qnorm, cnorm),
             round_to,
         ).alias("cos"),
     )
@@ -158,8 +177,6 @@ def signlsh_top_k(
     bucket holds ~15k vectors and a 5-probe query scores ~75k candidates
     instead of a billion.  Small corpora need FEW planes (recall collapses
     when buckets hold fewer vectors than k)."""
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
     c = (
         corpus.select(
             F.col(id_col),
@@ -187,18 +204,9 @@ def signlsh_top_k(
         norm(F.col("_qvec")).alias("_qnorm"),
         F.explode(probes).alias("_bucket"),
     )
-    scored = c.join(F.broadcast(q), "_bucket").select(
-        query_id_col,
-        id_col,
-        F.round(
-            cosine_prenormed(
-                F.col("_qvec"), F.col("_cvec"), F.col("_qnorm"), F.col("_cnorm")
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    return _exact_rerank(
+        c.join(F.broadcast(q), "_bucket"), k, F.col("_qnorm"),
+        F.col("_cnorm"), id_col, query_id_col, round_to,
     )
 
 
@@ -262,45 +270,6 @@ def train_ivf_centroids(
     return [[float(v) for v in c] for c in cent]
 
 
-def save_ivf_centroids(
-    spark, centroids: list[list[float]], root: str, meta: dict | None = None
-) -> int:
-    """Persist trained IVF centroids as a versioned-table snapshot (one
-    row per cell: ``(cell, centroid array<double>)``) — same
-    train-once/serve-forever contract as :func:`save_pq_codebooks`; an
-    index's cell geometry must stay FIXED once corpus vectors are tagged
-    with cell ids, or every stored tag silently dangles."""
-    from hfp_loader_spark.versioned import commit_snapshot
-
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    )
-    return commit_snapshot(
-        spark, df, root, mode="overwrite",
-        meta={"nlist": len(centroids), **(meta or {})},
-    )
-
-
-def load_ivf_centroids(
-    spark, root: str, version: int | None = None
-) -> list[list[float]]:
-    """Load centroids stored by :func:`save_ivf_centroids` (latest by
-    default; ``version`` time-travels to an older index build)."""
-    from hfp_loader_spark.versioned import read_snapshot
-
-    rows = read_snapshot(spark, root, version).collect()
-    out: list[list[float] | None] = [None] * (
-        max(r["cell"] for r in rows) + 1
-    )
-    for r in rows:
-        out[r["cell"]] = list(r["centroid"])
-    missing = [i for i, c in enumerate(out) if c is None]
-    if missing:
-        raise ValueError(f"stored centroids incomplete: missing cells {missing[:4]}")
-    return out  # type: ignore[return-value]
-
-
 def _parsed_array_lit(rows, fmt) -> Column:
     """A (possibly nested) constant array built by PARSING one SQL
     string JVM-side instead of ``F.lit`` on a nested Python list —
@@ -349,85 +318,6 @@ def ivf_assign_cell(vec: Column, centroids: list[list[float]]) -> Column:
     """Nearest-centroid cell id (0-based; ties → lowest cell)."""
     scores = _centroid_scores(vec, centroids)
     return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-
-
-def ivf_probe_cells(
-    vec: Column, centroids: list[list[float]], nprobe: int
-) -> Column:
-    """The ``nprobe`` nearest cell ids, best first (score-desc, id tiebreak)."""
-    scored = F.transform(
-        _centroids_lit(centroids),
-        lambda c, i: F.struct(dot(vec, c).alias("s"), i.cast("int").alias("i")),
-    )
-    ranked = F.reverse(F.array_sort(scored))
-    return F.transform(F.slice(ranked, 1, nprobe), lambda x: x["i"])
-
-
-def ivf_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nlist: int,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int = 4,
-    centroids: list[list[float]] | None = None,
-    train_fraction: float | None = None,
-) -> DataFrame:
-    """Approximate cosine top-k via an IVF (inverted-file) index.
-
-    The scale shape: one narrow pass tags each corpus vector with its
-    nearest-centroid cell (pure expressions, no shuffle); each query
-    probes its ``nprobe`` nearest cells; only cell-equal pairs are scored
-    — ~nprobe/nlist of the corpus per query instead of all of it.  At
-    100 TB the cell column is written once (partition or cluster by it)
-    and every subsequent search prunes to the probed cells' files.
-
-    Compared to sign-LSH buckets, IVF cells adapt to the data
-    distribution (centroids fall where vectors are dense), giving better
-    recall at the same candidate budget on clustered corpora.
-    """
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, nlist, vec_col=vec_col, fraction=train_fraction
-        )
-
-    c = (
-        corpus.select(
-            F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec")
-        )
-        .withColumn("_cell", ivf_assign_cell(F.col("_cvec"), centroids))
-        .withColumn("_cnorm", norm(F.col("_cvec")))
-    )
-
-    q = queries.select(
-        F.col(query_id_col),
-        as_double_array(F.col(vec_col)).alias("_qvec"),
-    ).select(
-        query_id_col,
-        "_qvec",
-        norm(F.col("_qvec")).alias("_qnorm"),
-        F.explode(
-            ivf_probe_cells(F.col("_qvec"), centroids, nprobe)
-        ).alias("_cell"),
-    )
-    scored = c.join(F.broadcast(q), "_cell").select(
-        query_id_col,
-        id_col,
-        F.round(
-            cosine_prenormed(
-                F.col("_qvec"), F.col("_cvec"), F.col("_qnorm"), F.col("_cnorm")
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
-    )
 
 
 def semantic_dedup(
@@ -878,62 +768,6 @@ def train_pq_codebooks(
     return books
 
 
-def save_pq_codebooks(
-    spark,
-    codebooks: list[list[list[float]]],
-    root: str,
-    meta: dict | None = None,
-) -> int:
-    """Persist trained PQ codebooks as a versioned-table snapshot
-    (versioned.commit_snapshot) — returns the committed version.
-
-    A production index trains Lloyd ONCE when the index is built and
-    serves every subsequent search from the stored books; retraining per
-    query session wastes a corpus sample + driver k-means and, worse,
-    silently re-randomizes code assignments between sessions.  Layout:
-    one row per (subspace, code) with the centroid as array<double> —
-    a few KB, time-travelable, and vacuumable like any versioned table."""
-    from hfp_loader_spark.versioned import commit_snapshot
-
-    rows = [
-        (j, i, [float(v) for v in c])
-        for j, book in enumerate(codebooks)
-        for i, c in enumerate(book)
-    ]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    )
-    return commit_snapshot(
-        spark,
-        df,
-        root,
-        mode="overwrite",
-        meta={"m": len(codebooks), "ksub": len(codebooks[0]), **(meta or {})},
-    )
-
-
-def load_pq_codebooks(
-    spark, root: str, version: int | None = None
-) -> list[list[list[float]]]:
-    """Load PQ codebooks stored by :func:`save_pq_codebooks` (latest
-    version by default; pass ``version`` to time-travel to an older
-    index build).  The collect is m·ksub rows of dim/m doubles — KBs."""
-    from hfp_loader_spark.versioned import read_snapshot
-
-    rows = read_snapshot(spark, root, version).collect()
-    m = max(r["subspace"] for r in rows) + 1
-    ksub = max(r["code"] for r in rows) + 1
-    books: list[list[list[float] | None]] = [[None] * ksub for _ in range(m)]
-    for r in rows:
-        books[r["subspace"]][r["code"]] = list(r["centroid"])
-    missing = [
-        (j, i) for j in range(m) for i in range(ksub) if books[j][i] is None
-    ]
-    if missing:
-        raise ValueError(f"stored codebooks incomplete: missing {missing[:4]}")
-    return books  # type: ignore[return-value]
-
-
 def _pq_books_lit(codebooks: list[list[list[float]]]) -> Column:
     """Codebooks as ONE array<array<array<double>>> Literal node — the
     same plan-size/py4j rationale as :func:`_centroids_lit`."""
@@ -1005,102 +839,6 @@ def pq_encode(
     )
 
 
-def pq_query_lut(qvec: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Per-query ADC lookup table: ``lut[j][c] = dot(q_sub_j, book_j[c])``
-    as an ``array<array<double>>`` column — the classic PQ scan trick.
-
-    ADC (asymmetric distance) keeps the query exact and scores the
-    corpus by its reconstructed code words, ``Σ_j dot(q_sub_j,
-    book_j[code_j])``; the scale win is I/O — the scan reads m bytes of
-    codes per vector instead of dim·4 (8 GB vs 256 GB at 10⁹ 64-float
-    vectors), the difference between an in-RAM rescan per query batch
-    and a disk-bound one.  The LUT is computed ONCE per query row
-    (m·ksub small dots) so every corpus candidate costs m array LOOKUPS
-    instead of m sub-vector dots — O(m) reads per pair, not O(dim)
-    interpreted fold work.  It rides the query broadcast (m·ksub
-    doubles per query — 1 KB at 8×16)."""
-    dsub = len(codebooks[0][0])
-    return F.transform(
-        _pq_books_lit(codebooks),
-        lambda book, j: F.transform(
-            book, lambda cw: dot(F.slice(qvec, j * dsub + 1, dsub), cw)
-        ),
-    )
-
-
-def pq_adc_score_lut(lut: Column, codes: Column) -> Column:
-    """ADC score from a precomputed :func:`pq_query_lut`: Σ_j lut[j][code_j]."""
-    contrib = F.transform(
-        codes, lambda code, j: F.element_at(F.element_at(lut, j + 1), code + 1)
-    )
-    return F.aggregate(contrib, F.lit(0.0), lambda acc, s: acc + s)
-
-
-def pq_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int = 4,
-    persist_codes: bool = True,
-) -> DataFrame:
-    """Approximate cosine top-k over PQ codes (ADC): encode the corpus in
-    one narrow pass (at scale the codes are written once as a 32×-smaller
-    index column), broadcast the exact queries WITH their precomputed
-    ADC lookup tables (:func:`pq_query_lut` — so every candidate costs m
-    array reads, not m sub-vector dots), rank on the rounded ADC score
-    with id tiebreak.
-
-    ``persist_codes`` caches the encoded corpus — the in-session analog
-    of the written-once code index: repeated searches (and the
-    shortlist+rerank pipeline's own stages) read m-byte codes from cache
-    instead of re-running the encode expression, and Spark's cache
-    manager dedups by canonicalized plan so every same-corpus search in
-    the session shares one entry."""
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
-    c = corpus.select(
-        F.col(id_col),
-        pq_encode(F.col(vec_col), codebooks).alias("_codes"),
-    )
-    if persist_codes:
-        c = c.persist()
-    q = queries.select(
-        F.col(query_id_col),
-        as_double_array(F.col(vec_col)).alias("_qvec"),
-    )
-    # let-bind the query norm via the one-element transform (the pq_encode
-    # pattern): a norm embedded in the division lambda would re-run the
-    # O(dim) fold per ELEMENT — O(dim²) per query row
-    _qn = norm(F.col("_qvec"))
-    qn = q.select(
-        query_id_col,
-        F.element_at(
-            F.transform(
-                F.array(F.when(_qn > 0, _qn).otherwise(F.lit(1.0))),
-                lambda nn: F.transform(F.col("_qvec"), lambda x: x / nn),
-            ),
-            1,
-        ).alias("_qhat"),
-    ).select(
-        query_id_col,
-        pq_query_lut(F.col("_qhat"), codebooks).alias("_lut"),
-    )
-    scored = c.crossJoin(F.broadcast(qn)).select(
-        query_id_col,
-        id_col,
-        F.round(
-            pq_adc_score_lut(F.col("_lut"), F.col("_codes")), round_to
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
-    )
-
-
 def pq_reconstruction_mse(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1157,68 +895,6 @@ def pq_reconstruction_mse(
         1,
     )
     return corpus.select(F.col(id_col), mse.alias("mse"))
-
-
-def pq_top_k_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    codebooks: list[list[list[float]]],
-    shortlist: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int = 4,
-) -> DataFrame:
-    """Production PQ search shape: ADC shortlist over the compressed
-    codes, then EXACT cosine rerank of only the shortlisted candidates.
-
-    The shortlist pass touches m-byte codes (32× less I/O than raw
-    vectors at m=8 on 64-float embeddings); full vectors are read back
-    for ``shortlist`` (default 4k) candidates per query via an id
-    equi-join — at 100 TB that is a point-lookup-sized read instead of a
-    corpus scan, and measured recall@5 rises 0.48 → 0.76 vs raw ADC on
-    the driver corpus."""
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
-    if shortlist is None:
-        shortlist = 4 * k
-    cand = pq_top_k(
-        corpus,
-        queries,
-        shortlist,
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        round_to=round_to,
-    ).select(query_id_col, id_col)
-    c = corpus.select(
-        F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec")
-    ).withColumn("_cnorm", norm(F.col("_cvec")))
-    q = queries.select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qvec")
-    ).withColumn("_qnorm", norm(F.col("_qvec")))
-    rer = (
-        cand.join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_prenormed(
-                    F.col("_qvec"),
-                    F.col("_cvec"),
-                    F.col("_qnorm"),
-                    F.col("_cnorm"),
-                ),
-                round_to,
-            ).alias("cos"),
-        )
-    )
-    return top_k_per_group(
-        rer, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
-    )
 
 
 def rp_sign_matrix(dim_in: int, dim_out: int) -> list[list[float]]:
@@ -1537,11 +1213,13 @@ def ivf_exact_cells_top_k(
     candidate list all have SQL twins and the approximate neighbor list
     itself is value-checkable, not just its recall floor.
 
-    Trade vs :func:`ivf_top_k`: training is corpus-scale (``iters``
-    broadcast-join rounds over the full corpus) instead of a bounded
-    driver sample — pay it when cross-engine reproducibility of the
-    INDEX matters (provenance, incremental re-assignment, audited
-    dedup); the float spherical path stays the cheap-training default.
+    Trade vs the float spherical cells of :func:`train_ivf_centroids`
+    (which :func:`semantic_dedup` uses): training is corpus-scale
+    (``iters`` broadcast-join rounds over the full corpus) instead of a
+    bounded driver sample — the price of an INDEX that reproduces
+    across engines (provenance, incremental re-assignment, audited
+    dedup).  :func:`ivf_served_top_k` serves the same model from the
+    persisted cell layout without the training rounds.
     Queries probe the post-final-update centroids (c_iters) while
     candidates carry the final assignment (a_iters vs c_{iters-1}) —
     the standard one-step lag of any trained-then-served index,
@@ -1583,103 +1261,13 @@ def ivf_exact_cells_top_k(
     # are checkpointed RDDs with no size statistics (optimization r17),
     # so the estimate-driven plan would shuffle the CORPUS-sized assign
     # side by cluster.  Hint the bounded side explicitly — the same
-    # shape the pretrained serve path uses (guide §3.1).
+    # shape the persisted-index serve path uses (guide §3.1).
     cand = F.broadcast(probes).join(
         assign.select(id_col, "cluster"), "cluster"
     ).join(c, id_col)
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        F.round(
-            cosine_prenormed(
-                F.col("_qvec"),
-                F.col("_cvec"),
-                norm(F.col("_qvec")),
-                F.col("_cnorm"),
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
-    )
-
-
-def ivf_pretrained_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    nprobe: int,
-    cent_assign: list[tuple[int, list[int]]],
-    cent_probe: list[tuple[int, list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    round_to: int = 4,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Serve-stage IVF top-k over a PRE-TRAINED exact fixed-point index
-    — the production offline-train / online-serve split of
-    :func:`ivf_exact_cells_top_k`: the quantized integer centroids are
-    shipped as plan literals (trained once, e.g. via
-    ``clustering.kmeans_fixed_point_model``, and memoized / persisted),
-    so the query plan contains NO training rounds, only the serve path.
-
-    ``cent_assign`` must be the pre-final-update centroids
-    (c_{iters-1}) and ``cent_probe`` the post-final-update centroids
-    (c_iters): a trained-then-served index carries the standard
-    one-step lag — candidates sit in cells assigned against
-    c_{iters-1}, probes rank cells by distance to c_iters — and
-    reproducing BOTH frames bit-for-bit is what makes this serve path
-    value-identical to the inline-training twin (and to its SQL
-    oracle's CTEs).  All serve math is the twin's: exact integer
-    squared L2 with lowest-cluster tie-breaks, exact cosine rerank
-    rounded to ``round_to``.
-
-    Scale shape: cell assignment is ONE narrow no-shuffle expression
-    pass over the corpus (argmin over nlist literal centroids — no
-    join at all, cheaper than the broadcast join the trainer needs);
-    probes are an in-row sorted slice per query; candidates a
-    cluster-equi join against the bounded probe frame (~nprobe/nlist
-    of the corpus per query); top-k windows per query.  At 100 TB the
-    assignment column is the partition/cluster key, so probes prune
-    files."""
-    from hfp_loader_spark.operators.clustering import quantize_vec
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
-    corp = (
-        corpus.where(F.size(F.col(vec_col)) > 0)
-        .select(
-            F.col(id_col),
-            as_double_array(F.col(vec_col)).alias("_cvec"),
-            quantize_vec(F.col(vec_col), scale).alias("_cq"),
-        )
-        .select(
-            id_col,
-            "_cvec",
-            _int_argmin_cluster(F.col("_cq"), cent_assign).alias("cluster"),
-        )
-        .withColumn("_cnorm", norm(F.col("_cvec")))
-    )
-    probes = _ivf_probe_frame(
-        queries, cent_probe, nprobe, query_id_col, vec_col, scale
-    )
-    cand = F.broadcast(probes).join(corp, "cluster")
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        F.round(
-            cosine_prenormed(
-                F.col("_qvec"),
-                F.col("_cvec"),
-                norm(F.col("_qvec")),
-                F.col("_cnorm"),
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    return _exact_rerank(
+        cand, k, norm(F.col("_qvec")), F.col("_cnorm"), id_col,
+        query_id_col, round_to,
     )
 
 
@@ -1702,10 +1290,12 @@ def pq_exact_codes_top_k(
     per-subspace codebooks from the grouped fixed-point k-means
     (``clustering.kmeans_fixed_point_grouped`` — one plan trains all m
     subspaces), integer ADC over exact quantized distances, exact
-    cosine rerank of the shortlist.  The exact-arithmetic sibling of
-    :func:`pq_top_k_rerank` (float driver-trained codebooks → rows-only
-    + contracts): codes, LUTs, ADC distances, shortlist, and the final
-    neighbor list all reproduce bit-for-bit on any engine.
+    cosine rerank of the shortlist.  Codes, LUTs, ADC distances,
+    shortlist, and the final neighbor list all reproduce bit-for-bit on
+    any engine (the float driver-trained codebooks of
+    :func:`train_pq_codebooks` feed only the distortion diagnostic
+    :func:`pq_reconstruction_mse`).  :func:`pq_served_top_k` serves the
+    same codebooks from the persisted code table.
 
     ``dim`` must be divisible by ``m``; vectors of any other length
     (and NULL/empty) are excluded on both engines.
@@ -1778,121 +1368,13 @@ def pq_exact_codes_top_k(
     # the trained-codebook frames behind it are checkpointed RDDs
     # without size statistics (optimization r17), which would otherwise
     # flip this to an estimate-driven corpus shuffle on id.
-    scored = (
-        F.broadcast(short).join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_prenormed(
-                    F.col("_qvec"),
-                    F.col("_cvec"),
-                    F.col("_qnorm"),
-                    F.col("_cnorm"),
-                ),
-                round_to,
-            ).alias("cos"),
-        )
+    cand = F.broadcast(short).join(c, id_col).join(
+        F.broadcast(q), query_id_col
     )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    return _exact_rerank(
+        cand, k, F.col("_qnorm"), F.col("_cnorm"), id_col, query_id_col,
+        round_to,
     )
-
-
-def save_fixed_point_model(
-    spark,
-    cent_assign: list[tuple[int, list[int]]],
-    cent_probe: list[tuple[int, list[int]]],
-    root: str,
-    scale: int,
-    meta: dict | None = None,
-) -> int:
-    """Persist a PRE-TRAINED exact IVF serve model — BOTH frames of the
-    one-step lag (``role='assign'`` = c_{iters-1}, the centroids the
-    trained cell tags argmin against; ``role='probe'`` = c_iters, the
-    post-final-update frame queries rank) — as one versioned-table
-    snapshot, manifest-stamped with the quantization ``scale`` so a
-    later reader REFUSES to argmin vectors quantized at a different
-    scale (the signature-index fail-loud stamping: a scale mismatch
-    would silently re-tag every vector into garbage cells).  The
-    operational conclusion of the offline-train / online-serve split:
-    train once, commit, serve and append (O(delta) assignment of new
-    batches via :func:`ivf_pretrained_top_k` /
-    :func:`semantic_dedup_pretrained_cells`) until a drift audit
-    (:func:`clustering.cell_migration_matrix`) justifies a rebuild."""
-    from hfp_loader_spark.versioned import commit_snapshot
-
-    rows = [
-        ("assign", int(cl), [int(v) for v in cq])
-        for cl, cq in sorted(cent_assign)
-    ] + [
-        ("probe", int(cl), [int(v) for v in cq])
-        for cl, cq in sorted(cent_probe)
-    ]
-    df = spark.createDataFrame(rows, "role string, cluster int, cq array<long>")
-    return commit_snapshot(
-        spark,
-        df,
-        root,
-        mode="overwrite",
-        meta={
-            "kind": "ivf_fixed_point_model",
-            "scale": int(scale),
-            "nlist": len(cent_assign),
-            **(meta or {}),
-        },
-    )
-
-
-def load_fixed_point_model(
-    spark, root: str, expect_scale: int, version: int | None = None
-) -> tuple[list[tuple[int, list[int]]], list[tuple[int, list[int]]]]:
-    """Load a model stored by :func:`save_fixed_point_model` (latest by
-    default; ``version`` time-travels to an older index build).  Raises
-    on a quantization-scale mismatch or an incomplete frame — a serve
-    path must fail loudly, never tag cells against the wrong geometry."""
-    from hfp_loader_spark.versioned import (
-        _read_manifest,
-        latest_version,
-        read_snapshot,
-    )
-
-    v = latest_version(spark, root) if version is None else version
-    if v is None:
-        raise ValueError(f"no fixed-point model committed at {root}")
-    info = _read_manifest(spark, root, v)
-    if info.meta.get("kind") != "ivf_fixed_point_model":
-        raise ValueError(
-            f"table at {root} v{v} holds kind={info.meta.get('kind')!r}, "
-            "not an ivf_fixed_point_model — refusing to serve from a "
-            "foreign table (ADVICE r11 #3)"
-        )
-    stored = info.meta.get("scale")
-    if stored != int(expect_scale):
-        raise ValueError(
-            f"fixed-point model at {root} v{v} was quantized at "
-            f"scale={stored}, caller expects {expect_scale} — re-train "
-            "or re-quantize; mixing scales silently corrupts every cell"
-        )
-    nlist = info.meta.get("nlist")
-    if not isinstance(nlist, int) or nlist <= 0:
-        raise ValueError(
-            f"fixed-point model manifest at {root} v{v} carries invalid "
-            f"nlist={nlist!r} — hand-edited or foreign manifest; re-save "
-            "the model (ADVICE r11 #3)"
-        )
-    out: dict[str, list[tuple[int, list[int]]]] = {"assign": [], "probe": []}
-    for r in read_snapshot(spark, root, v).collect():
-        out[r["role"]].append((r["cluster"], list(r["cq"])))
-    for role, cents in out.items():
-        cents.sort()
-        if [c for c, _ in cents] != list(range(nlist)):
-            raise ValueError(
-                f"stored model {role} frame incomplete at {root} v{v}: "
-                f"want clusters 0..{nlist - 1}, got {[c for c, _ in cents][:6]}"
-            )
-    return out["assign"], out["probe"]
 
 
 def _model_fingerprint(cents: list[tuple[int, list[int]]]) -> str:
@@ -1922,8 +1404,8 @@ def append_cell_tags(
     new batch's vectors against the pinned model (the same narrow
     literal-argmin pass the serve paths use) and commit the
     ``(id, cell)`` rows as one versioned append — the ingest-time half
-    of the persisted IVF index (the model itself lives in
-    :func:`save_fixed_point_model`).
+    of the persisted IVF index (the catalog persists the model itself
+    with ``plans.model_queries._model_store``).
 
     Every commit is manifest-stamped with the quantization ``scale``
     AND the model fingerprint (:func:`_model_fingerprint`); an append
@@ -2051,12 +1533,8 @@ def _ivf_probe_frame(
     scale: int,
 ) -> DataFrame:
     """Per-query probe set ``(query_id, _qvec, cluster)`` — nprobe rows
-    per query.  Probe ranking needs the FULL (score, cluster) order, not
-    just the argmin: an in-row sorted slice over the bounded query set
-    (the same Σc²−2qc exact rearrangement; ties by cluster id, matching
-    the inline-training twin's (d, cluster) sort).  Shared by the
-    literal-serve path (:func:`ivf_pretrained_top_k`) and the
-    persisted-index serve path (:func:`ivf_served_top_k`)."""
+    per query (:func:`_probe_slice`), the route step of
+    :func:`ivf_served_top_k`."""
     from hfp_loader_spark.operators.clustering import quantize_vec
 
     qq = queries.where(F.size(F.col(vec_col)) > 0).select(
@@ -2064,24 +1542,34 @@ def _ivf_probe_frame(
         as_double_array(F.col(vec_col)).alias("_qvec"),
         quantize_vec(F.col(vec_col), scale).alias("_qq"),
     )
+    return qq.select(
+        query_id_col,
+        "_qvec",
+        F.explode(_probe_slice(F.col("_qq"), cent_probe, nprobe)).alias("_p"),
+    ).select(query_id_col, "_qvec", F.col("_p.cluster").alias("cluster"))
+
+
+def _probe_slice(
+    q: Column, cent_probe: list[tuple[int, list[int]]], nprobe: int
+) -> Column:
+    """The ``nprobe`` nearest probe centroids of the quantized vector
+    ``q`` as an array of ``(t, cluster)`` structs, nearest first.  Probe
+    ranking needs the FULL (score, cluster) order, not just the argmin:
+    an in-row sorted slice over the bounded query set (the same Σc²−2qc
+    exact rearrangement; ties by cluster id, matching the
+    inline-training twin's (d, cluster) sort)."""
     probe_c2 = _int_c2_lit(cent_probe)
     probe_scores = F.transform(
         _int_cents_lit(cent_probe),
         lambda cw, i: F.struct(
             (
                 F.element_at(probe_c2, i + 1)
-                - F.lit(2).cast("long") * _int_dot(F.col("_qq"), cw)
+                - F.lit(2).cast("long") * _int_dot(q, cw)
             ).alias("t"),
             i.cast("int").alias("cluster"),
         ),
     )
-    return qq.select(
-        query_id_col,
-        "_qvec",
-        F.explode(
-            F.slice(F.array_sort(probe_scores), 1, nprobe)
-        ).alias("_p"),
-    ).select(query_id_col, "_qvec", F.col("_p.cluster").alias("cluster"))
+    return F.slice(F.array_sort(probe_scores), 1, nprobe)
 
 
 def _index_manifest_path(root: str) -> str:
@@ -2271,8 +1759,6 @@ def ivf_served_top_k(
 
     Fail-loud: ``expect_fingerprint`` must match the layout's stamped
     model generation (:func:`read_cell_index` raises otherwise)."""
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
     probes = _ivf_probe_frame(
         queries, cent_probe, nprobe, query_id_col, vec_col, scale
     )
@@ -2290,21 +1776,9 @@ def ivf_served_top_k(
         ),
         "cluster",
     )
-    scored = cand.select(
-        query_id_col,
-        id_col,
-        F.round(
-            cosine_prenormed(
-                F.col("_qvec"),
-                F.col("_cvec"),
-                norm(F.col("_qvec")),
-                norm(F.col("_cvec")),
-            ),
-            round_to,
-        ).alias("cos"),
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    return _exact_rerank(
+        cand, k, norm(F.col("_qvec")), norm(F.col("_cvec")), id_col,
+        query_id_col, round_to,
     )
 
 
@@ -2318,10 +1792,9 @@ def _int_cents_lit(cents: list[tuple[int, list[int]]]) -> Column:
 
     Cluster ids MUST be contiguous 0..n−1 (array position − 1 IS the
     cluster id downstream) — asserted here so EVERY serve entry point
-    (ivf_pretrained_top_k, append_cell_tags,
+    (ivf_served_top_k, append_cell_tags,
     semantic_dedup_pretrained_cells, …) fails loudly on a gapped model
-    instead of silently mis-tagging every cell (ADVICE r11 #1;
-    previously only load_fixed_point_model validated this)."""
+    instead of silently mis-tagging every cell (ADVICE r11 #1)."""
     ordered = sorted(cents)
     if [c for c, _ in ordered] != list(range(len(ordered))):
         raise ValueError(
@@ -2384,8 +1857,7 @@ def semantic_dedup_pretrained_cells(
 ) -> DataFrame:
     """SemDeDup keep-list over PRE-TRAINED exact cells with the BLAS
     per-cell prune — the offline-train / online-serve split of
-    :func:`semantic_dedup_exact_cells`, mirroring
-    :func:`ivf_pretrained_top_k`: ``cent_assign`` must be the
+    :func:`semantic_dedup_exact_cells`: ``cent_assign`` must be the
     pre-final-update centroids (c_{iters-1}), because the trained
     index's cell column IS the final assignment a_iters = argmin
     against c_{iters-1} — recomputed here as ONE narrow no-join
@@ -2416,130 +1888,6 @@ def semantic_dedup_pretrained_cells(
     return _blas_keep_list(corp, id_col, "cell", threshold, round_to)
 
 
-def pq_pretrained_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    books_assign: list[tuple[int, int, list[int]]],
-    books_probe: list[tuple[int, int, list[int]]],
-    m: int = 8,
-    ksub: int = 16,
-    shortlist: int = 100,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    scale: int = 1_000_000,
-    round_to: int = 4,
-) -> DataFrame:
-    """Serve-stage PQ top-k over PRE-TRAINED exact codebooks — the
-    offline-train / online-serve split of :func:`pq_exact_codes_top_k`,
-    mirroring :func:`ivf_pretrained_top_k`: the grouped fixed-point
-    k-means codebooks are trained once (``kmeans_fixed_point_grouped``
-    over the sliced corpus), collected as ``(grp, cluster,
-    quantized-subcentroid)`` triples (m·ksub bounded rows), and shipped
-    as plan literals, so the measured plan contains only the serve
-    path.
-
-    ``books_assign`` must be the pre-final-update codebooks
-    (c_{iters-1}) — corpus CODES are the trained assignment, which lags
-    the served codebooks by one Lloyd step — and ``books_probe`` the
-    post-final-update codebooks (c_iters) the per-query ADC LUT is
-    built from.  All serve math is the twin's: integer sub-distances,
-    integer ADC sums, (adc, id) shortlist ties, exact rounded-cosine
-    rerank — so the output is value-identical to the inline-training
-    twin and to its SQL oracle.
-
-    Scale shape: encoding is ONE narrow no-join expression pass
-    (m argmins over ksub literal sub-centroids per vector, in the
-    ``Σc²−2qc`` / single-Literal / array_position(array_min) shape —
-    no broadcast join, no shuffle); the per-query integer LUT rides the
-    bounded query broadcast as one nested-array column; ADC is m IN-ROW
-    array lookups per (candidate, query) — the memory-bandwidth PQ scan
-    — then one ``shortlist``-bounded rerank.  The exploded
-    (grp, cluster)-join ADC variant measured ~2× this whole query's
-    cost at sf0.1; the in-row form is the one that survives 10⁹
-    vectors."""
-    from hfp_loader_spark.operators.clustering import _sq_dist, quantize_vec
-    from hfp_loader_spark.operators.relational import top_k_per_group
-
-    assert dim % m == 0, "dim must divide into m subspaces"
-    sub = dim // m
-
-    codes = _pq_encode(
-        corpus, books_assign, m, dim, id_col, vec_col, scale
-    )
-    # per-query integer LUT as ONE array<array<bigint>> column —
-    # lut[j][c] = exact ‖q_sub_j − book_j[c]‖², the twin's LUT values
-    # bit-for-bit; rides the bounded query broadcast.  ADC is then m
-    # in-row array LOOKUPS per (candidate, query) — the float path's
-    # memory-bandwidth shape — instead of an exploded (grp, cluster)
-    # join + 2M-row re-aggregate (measured ~2× the whole query's cost
-    # at sf0.1)
-    ordered_books = [cq for _, _, cq in sorted(books_probe)]
-    books_lit = _parsed_array_lit(
-        [[int(v) for v in cq] for cq in ordered_books], lambda v: f"{v}L"
-    )  # flat m·ksub rows, row (g·ksub + c) = book_g[c]
-    lut_col = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda g: F.transform(
-            F.slice(books_lit, g * ksub + 1, ksub),
-            lambda cw: _sq_dist(
-                F.slice(F.col("_q"), g * sub + F.lit(1), sub), cw
-            ),
-        ),
-    )
-    qlut = queries.where(F.size(F.col(vec_col)) == dim).select(
-        F.col(query_id_col),
-        quantize_vec(F.col(vec_col), scale).alias("_q"),
-    ).select(query_id_col, lut_col.alias("_lut"))
-    adc = (
-        codes.crossJoin(F.broadcast(qlut))
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.zip_with(
-                    F.col("_codes"),
-                    F.col("_lut"),
-                    lambda c, row: F.element_at(row, c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).alias("_adc"),
-        )
-    )
-    short = top_k_per_group(
-        adc, [query_id_col], [F.asc("_adc"), F.asc(id_col)], shortlist
-    ).select(query_id_col, id_col)
-    c = corpus.select(
-        F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec")
-    ).withColumn("_cnorm", norm(F.col("_cvec")))
-    q = queries.select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qvec")
-    ).withColumn("_qnorm", norm(F.col("_qvec")))
-    scored = (
-        short.join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_prenormed(
-                    F.col("_qvec"),
-                    F.col("_cvec"),
-                    F.col("_qnorm"),
-                    F.col("_cnorm"),
-                ),
-                round_to,
-            ).alias("cos"),
-        )
-    )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
-    )
-
-
 def _by_grp(
     books: list[tuple[int, int, list[int]]],
 ) -> dict[int, list[tuple[int, list[int]]]]:
@@ -2562,9 +1910,8 @@ def _pq_encode(
     one narrow no-join expression pass (m argmins over ksub literal
     sub-centroids each, in the Σc²−2qc / array_position(array_min)
     shape).  ``(id, _codes array<int>)``; vectors whose length ≠ dim
-    (and NULL/empty) are excluded on every engine.  Shared by the
-    literal-serve path, the O(delta) code append, and any re-encode
-    audit — ONE definition of the code semantics."""
+    (and NULL/empty) are excluded on every engine.  The ONE definition
+    of the code semantics, which :func:`rebuild_codes` commits."""
     from hfp_loader_spark.operators.clustering import quantize_vec
 
     sub = dim // m
@@ -2598,66 +1945,6 @@ def _books_fingerprint(books: list[tuple[int, int, list[int]]]) -> str:
     return hashlib.md5(payload.encode()).hexdigest()
 
 
-def append_codes(
-    spark,
-    delta: DataFrame,
-    root: str,
-    books_assign: list[tuple[int, int, list[int]]],
-    scale: int,
-    m: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """O(delta) append to a persisted PQ CODE table — the code-side
-    analog of :func:`append_cell_tags` (VERDICT r11 #2): encode ONLY the
-    new batch against the pinned codebooks (the same narrow literal
-    argmin pass the serve path used to run over the whole corpus) and
-    commit the ``(id, _codes)`` rows as one versioned append.  The
-    8-byte-per-vector code table is the entire point of PQ at 10⁹
-    vectors; it must be written once per vector, never recomputed per
-    query plan.
-
-    Manifest-stamped with the quantization scale AND the codebook
-    fingerprint (:func:`_books_fingerprint`); an append under different
-    codebooks RAISES — codes are only comparable within one codebook
-    generation.  Delta-appends equal the full recompute row-for-row
-    because encoding is per-row deterministic.  Returns the committed
-    version."""
-    from hfp_loader_spark.versioned import (
-        _read_manifest,
-        commit_snapshot,
-        latest_version,
-    )
-
-    fp = _books_fingerprint(books_assign)
-    head = latest_version(spark, root)
-    if head is not None:
-        info = _read_manifest(spark, root, head)
-        stamped = info.meta.get("model_fingerprint")
-        if stamped != fp or info.meta.get("scale") != int(scale):
-            raise ValueError(
-                f"code table at {root} was built against codebooks "
-                f"{stamped} (scale {info.meta.get('scale')}); this append "
-                f"uses codebooks {fp} (scale {scale}) — re-encode the "
-                "corpus instead of mixing generations"
-            )
-    codes = _pq_encode(delta, books_assign, m, dim, id_col, vec_col, scale)
-    return commit_snapshot(
-        spark,
-        codes,
-        root,
-        mode="append",
-        meta={
-            "kind": "pq_codes",
-            "scale": int(scale),
-            "model_fingerprint": fp,
-            "m": int(m),
-            "dim": int(dim),
-        },
-    )
-
-
 def rebuild_codes(
     spark,
     corpus: DataFrame,
@@ -2671,8 +1958,7 @@ def rebuild_codes(
 ) -> int:
     """The deliberate full re-encode under a (new) codebook generation —
     ``overwrite``-commits the code table with the new fingerprint stamp
-    (the PQ sibling of :func:`rebuild_cell_tags`; :func:`append_codes`
-    refuses mixed generations by design)."""
+    (the PQ sibling of :func:`rebuild_cell_tags`)."""
     from hfp_loader_spark.versioned import commit_snapshot
 
     codes = _pq_encode(corpus, books_assign, m, dim, id_col, vec_col, scale)
@@ -2764,18 +2050,43 @@ def pq_served_top_k(
     the inline-training twin's (:func:`pq_exact_codes_top_k`), so the
     output stays value-identical to it and to its SQL oracle.
 
-    Pair with :func:`append_codes`/:func:`load_codes` (fingerprint-
+    Pair with :func:`rebuild_codes`/:func:`load_codes` (fingerprint-
     pinned) so ``codes`` is guaranteed to be the pinned generation."""
-    from hfp_loader_spark.operators.clustering import _sq_dist, quantize_vec
-    from hfp_loader_spark.operators.relational import top_k_per_group
+    from hfp_loader_spark.operators.clustering import quantize_vec
 
     assert dim % m == 0, "dim must divide into m subspaces"
+    lut_col = _int_lut(books_probe, m, ksub, dim)
+    qlut = queries.where(F.size(F.col(vec_col)) == dim).select(
+        F.col(query_id_col),
+        quantize_vec(F.col(vec_col), scale).alias("_q"),
+    ).select(query_id_col, lut_col.alias("_lut"))
+    adc = codes.crossJoin(F.broadcast(qlut)).select(
+        query_id_col, id_col, _adc_sum().alias("_adc")
+    )
+    return _shortlist_rerank(
+        spark, adc, corpus, queries, k, shortlist, id_col, vec_col,
+        query_id_col, round_to,
+    )
+
+
+def _int_lut(
+    books_probe: list[tuple[int, int, list[int]]], m: int, ksub: int, dim: int
+) -> Column:
+    """Per-query integer ADC lookup table over the quantized query
+    column ``_q`` as ONE ``array<array<bigint>>`` column —
+    ``lut[g][c]`` = exact ‖q_sub_g − book_g[c]‖² against the
+    ``books_probe`` literals, the inline-training twin's LUT values
+    bit-for-bit.  It rides the bounded query broadcast, so ADC is m
+    in-row array LOOKUPS per (candidate, query) (:func:`_adc_sum`)
+    instead of an exploded (grp, cluster) join + re-aggregate."""
+    from hfp_loader_spark.operators.clustering import _sq_dist
+
     sub = dim // m
     ordered_books = [cq for _, _, cq in sorted(books_probe)]
     books_lit = _parsed_array_lit(
         [[int(v) for v in cq] for cq in ordered_books], lambda v: f"{v}L"
     )  # flat m·ksub rows, row (g·ksub + c) = book_g[c]
-    lut_col = F.transform(
+    return F.transform(
         F.sequence(F.lit(0), F.lit(m - 1)),
         lambda g: F.transform(
             F.slice(books_lit, g * ksub + 1, ksub),
@@ -2784,23 +2095,40 @@ def pq_served_top_k(
             ),
         ),
     )
-    qlut = queries.where(F.size(F.col(vec_col)) == dim).select(
-        F.col(query_id_col),
-        quantize_vec(F.col(vec_col), scale).alias("_q"),
-    ).select(query_id_col, lut_col.alias("_lut"))
-    adc = codes.crossJoin(F.broadcast(qlut)).select(
-        query_id_col,
-        id_col,
-        F.aggregate(
-            F.zip_with(
-                F.col("_codes"),
-                F.col("_lut"),
-                lambda c, row: F.element_at(row, c + 1),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("_adc"),
+
+
+def _adc_sum() -> Column:
+    """The integer ADC distance Σ_g ``_lut``[g][``_codes``[g]] of one
+    (code row, query) pair (:func:`_int_lut`)."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("_codes"),
+            F.col("_lut"),
+            lambda c, row: F.element_at(row, c + 1),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
     )
+
+
+def _shortlist_rerank(
+    spark,
+    adc: DataFrame,
+    vectors: DataFrame,
+    queries: DataFrame,
+    k: int,
+    shortlist: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    round_to: int,
+) -> DataFrame:
+    """The fetch-and-rerank half of the PQ serve paths: the
+    deterministic (``_adc``, id) ``shortlist`` per query of ``adc``,
+    collected, then the full-width ``vectors`` of those ids fetched and
+    reranked by :func:`_exact_rerank` against ``queries``."""
+    from hfp_loader_spark.operators.relational import top_k_per_group
+
     short_df = top_k_per_group(
         adc, [query_id_col], [F.asc("_adc"), F.asc(id_col)], shortlist
     ).select(query_id_col, id_col)
@@ -2811,33 +2139,19 @@ def pq_served_top_k(
     short = spark.createDataFrame(short_rows, short_df.schema)
     ids = sorted({r[id_col] for r in short_rows})
     c = (
-        corpus.where(F.col(id_col).isin(ids))
+        vectors.where(F.col(id_col).isin(ids))
         .select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec"))
         .withColumn("_cnorm", norm(F.col("_cvec")))
     )
     q = queries.select(
         F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qvec")
     ).withColumn("_qnorm", norm(F.col("_qvec")))
-    scored = (
-        F.broadcast(short)
-        .join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_prenormed(
-                    F.col("_qvec"),
-                    F.col("_cvec"),
-                    F.col("_qnorm"),
-                    F.col("_cnorm"),
-                ),
-                round_to,
-            ).alias("cos"),
-        )
+    cand = F.broadcast(short).join(c, id_col).join(
+        F.broadcast(q), query_id_col
     )
-    return top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    return _exact_rerank(
+        cand, k, F.col("_qnorm"), F.col("_cnorm"), id_col, query_id_col,
+        round_to,
     )
 
 
@@ -2988,48 +2302,20 @@ def ivfpq_served_top_k(
     attached to the result as ``_ivfpq_adc_plan`` (the partition-pruning
     and code-column-only-ReadSchema assertions run against it —
     ``tests/test_plan_audit.py``)."""
-    from hfp_loader_spark.operators.clustering import _sq_dist, quantize_vec
-    from hfp_loader_spark.operators.relational import top_k_per_group
+    from hfp_loader_spark.operators.clustering import quantize_vec
 
     assert dim % m == 0, "dim must divide into m subspaces"
-    sub = dim // m
 
     qq = queries.where(F.size(F.col(vec_col)) == dim).select(
         F.col(query_id_col),
         quantize_vec(F.col(vec_col), scale).alias("_q"),
     )
-    # probe ranking over the full-vector centroids (in-row sorted slice,
-    # same as the IVF serve path but on the len==dim query universe)
-    probe_c2 = _int_c2_lit(cent_probe)
-    probe_scores = F.transform(
-        _int_cents_lit(cent_probe),
-        lambda cw, i: F.struct(
-            (
-                F.element_at(probe_c2, i + 1)
-                - F.lit(2).cast("long") * _int_dot(F.col("_q"), cw)
-            ).alias("t"),
-            i.cast("int").alias("cluster"),
-        ),
-    )
-    ordered_books = [cq for _, _, cq in sorted(books_probe)]
-    books_lit = _parsed_array_lit(
-        [[int(v) for v in cq] for cq in ordered_books], lambda v: f"{v}L"
-    )
-    lut_col = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda g: F.transform(
-            F.slice(books_lit, g * ksub + 1, ksub),
-            lambda cw: _sq_dist(
-                F.slice(F.col("_q"), g * sub + F.lit(1), sub), cw
-            ),
-        ),
-    )
+    # probe ranking over the full-vector centroids (the IVF serve path's
+    # in-row sorted slice, but on the len==dim query universe)
+    probes = _probe_slice(F.col("_q"), cent_probe, nprobe)
+    lut_col = _int_lut(books_probe, m, ksub, dim)
     ql = qq.select(
-        query_id_col,
-        lut_col.alias("_lut"),
-        F.explode(
-            F.slice(F.array_sort(probe_scores), 1, nprobe)
-        ).alias("_p"),
+        query_id_col, lut_col.alias("_lut"), F.explode(probes).alias("_p")
     ).select(query_id_col, "_lut", F.col("_p.cluster").alias("cluster"))
     probe_cells = sorted(
         r["cluster"] for r in ql.select("cluster").distinct().collect()
@@ -3045,54 +2331,11 @@ def ivfpq_served_top_k(
             ),
             "cluster",
         )
-        .select(
-            query_id_col,
-            id_col,
-            F.aggregate(
-                F.zip_with(
-                    F.col("_codes"),
-                    F.col("_lut"),
-                    lambda c, row: F.element_at(row, c + 1),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ).alias("_adc"),
-        )
+        .select(query_id_col, id_col, _adc_sum().alias("_adc"))
     )
-    short_df = top_k_per_group(
-        adc, [query_id_col], [F.asc("_adc"), F.asc(id_col)], shortlist
-    ).select(query_id_col, id_col)
-    short_rows = short_df.collect()
-    short = spark.createDataFrame(short_rows, short_df.schema)
-    ids = sorted({r[id_col] for r in short_rows})
-    c = (
-        idx.where(F.col(id_col).isin(ids))
-        .select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_cvec"))
-        .withColumn("_cnorm", norm(F.col("_cvec")))
-    )
-    q = queries.where(F.size(F.col(vec_col)) == dim).select(
-        F.col(query_id_col), as_double_array(F.col(vec_col)).alias("_qvec")
-    ).withColumn("_qnorm", norm(F.col("_qvec")))
-    scored = (
-        F.broadcast(short)
-        .join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(
-                cosine_prenormed(
-                    F.col("_qvec"),
-                    F.col("_cvec"),
-                    F.col("_qnorm"),
-                    F.col("_cnorm"),
-                ),
-                round_to,
-            ).alias("cos"),
-        )
-    )
-    out = top_k_per_group(
-        scored, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
+    out = _shortlist_rerank(
+        spark, adc, idx, queries.where(F.size(F.col(vec_col)) == dim), k,
+        shortlist, id_col, vec_col, query_id_col, round_to,
     )
     out._ivfpq_adc_plan = adc  # executed ADC stage, for plan audits
     return out

@@ -724,10 +724,8 @@ def _model_store(
     Both branches decode from the committed snapshot (not the in-memory
     trained lists), so a codec asymmetry would fail the train-time
     caller immediately instead of surfacing one process later.  A
-    committed model missing either frame raises — the loud twin of
-    ``operators.similarity.load_fixed_point_model``'s incomplete-frame
-    check; silently retraining over a half-written artifact would mask
-    whatever produced it.
+    committed model missing either frame raises; silently retraining
+    over a half-written artifact would mask whatever produced it.
     """
 
     def build():
@@ -1196,7 +1194,7 @@ def _pq_serve_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     "#1/#2): grouped fixed-point codebooks trained once per corpus "
     "(ONE grouped Lloyd trajectory, both generations — r11 trained "
     "twice), the corpus encoded ONCE into the versioned "
-    "fingerprint-pinned code table (append_codes/rebuild_codes — the "
+    "fingerprint-pinned code table (rebuild_codes — the "
     "8-byte-per-vector structure that IS product quantization's point "
     "at 10^9 vectors), never re-encoded per plan. The measured plan: "
     "ADC = m in-row LUT lookups over the CODE TABLE scan (compressed "
@@ -1451,7 +1449,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "training states of the exact fixed-point index (Lloyd round "
     f"{_KM_ITERS - 1} vs {_KM_ITERS} — the same shared trajectory CTEs "
     "every k-means/IVF oracle unrolls). THE operational question for a "
-    "persisted serve model (save_fixed_point_model): how many of the "
+    "persisted serve model (model_queries._model_store): how many of the "
     "stored cell tags would a retrained model actually move? A "
     "diagonal-heavy matrix says keep serving + O(delta) appends; a "
     "smeared one justifies re-tagging the corpus. One id-equi join + "

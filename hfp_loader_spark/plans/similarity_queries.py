@@ -239,10 +239,8 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the catalog entry now serves the PRE-TRAINED exact fixed-point index
 # (memoized integer centroid literals; full oracle = the twin's
 # training CTEs), living next to its oracle generator.  The float
-# spherical path (train_ivf_centroids / ivf_top_k) stays the
-# cheap-training operator default — unit-tested in
-# tests/test_similarity.py and driver-visible through semdedup_contract,
-# which trains and oracle-checks the float spherical cells.
+# spherical trainer (train_ivf_centroids) serves no search: it feeds
+# semantic_dedup, which semdedup_contract trains and oracle-checks.
 
 
 def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
@@ -264,10 +262,9 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
 # sim_ann_pq moved to plans/model_queries.py (r11, VERDICT r10 #5):
 # the catalog entry now serves PRE-TRAINED exact grouped-k-means
 # codebooks (memoized integer literals; full oracle = the twin's
-# grouped training CTEs).  The float driver-trained path
-# (train_pq_codebooks / pq_top_k_rerank) stays the cheap-training
-# operator default — unit-tested and oracle-checked here through
-# sim_pq_distortion, which trains and bounds the same float codebooks.
+# grouped training CTEs).  The float driver-trained codebooks
+# (train_pq_codebooks) serve no search: they feed pq_reconstruction_mse,
+# which sim_pq_distortion trains and bounds.
 
 
 _ANN_ORACLE = f"""

@@ -366,19 +366,35 @@ def test_pca_entries_on_an_all_null_or_empty_corpus(spark, tmp_path):
     """A corpus whose vectors are all NULL or empty: pc1 and pc2 return
     no row and the explained-variance summary one row of NULLs — the
     results of the earlier per-step join plans, recorded before the
-    one-row state replaced them."""
+    one-row state replaced them.  A one-vector corpus has a zero
+    scatter, so the iterate is all zeros: every eigenvalue, the pc2
+    iterate and its cosine are NULL, the rows the DuckDB oracles give,
+    not a division-by-zero error."""
     from hfp_loader_spark.plans.catalog import REGISTRY
 
+    def run(corpus, name):
+        return sorted(tuple(r) for r in REGISTRY[name].builder(
+            spark, str(corpus)
+        ).collect())
+
+    empty = tmp_path / "empty"
     spark.createDataFrame(
         [(1, None, 0), (2, [], 1), (3, None, 0)],
         "vec_id bigint, embedding array<double>, label int",
-    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    ).write.parquet(str(empty / "embeddings.parquet"))
+    assert run(empty, "emb_power_iteration_pc1") == []
+    assert run(empty, "emb_power_iteration_pc2") == []
+    assert run(empty, "emb_explained_variance") == [(None, None, None)]
 
-    def run(name):
-        return [tuple(r) for r in REGISTRY[name].builder(
-            spark, str(tmp_path)
-        ).collect()]
-
-    assert run("emb_power_iteration_pc1") == []
-    assert run("emb_power_iteration_pc2") == []
-    assert run("emb_explained_variance") == [(None, None, None)]
+    one = tmp_path / "one"
+    spark.createDataFrame(
+        [(1, [0.5, -0.25, 0.125, 0.0], 0)],
+        "vec_id bigint, embedding array<double>, label int",
+    ).write.parquet(str(one / "embeddings.parquet"))
+    assert run(one, "emb_power_iteration_pc1") == [
+        (pos, 0, None) for pos in range(1, 5)
+    ]
+    assert run(one, "emb_power_iteration_pc2") == [
+        (pos, None, None, None) for pos in range(1, 5)
+    ]
+    assert run(one, "emb_explained_variance") == [(0.0, None, None)]

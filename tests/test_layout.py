@@ -93,27 +93,6 @@ def test_bucketed_agg_on_bucket_key_elides_exchange(spark, bucketed_tables, smj_
     assert "Exchange" not in plan, plan
 
 
-def test_ivf_partitioned_probe_prunes(spark, sf_dir, tmp_path):
-    from hfp_loader_spark.layout import ivf_probe_scan, write_ivf_partitioned
-    from hfp_loader_spark.operators.similarity import train_ivf_centroids
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_ivf_centroids(emb, nlist=8)
-    path = str(tmp_path / "ivf_index")
-    write_ivf_partitioned(emb, path, cents)
-
-    qvec = [float(v) for v in emb.first()["embedding"]]
-    probed = ivf_probe_scan(spark, path, qvec, cents, nprobe=2)
-
-    # partition pruning: the literal cell IN (...) must be a partition
-    # filter on the scan, and the scan must read at most 2 of 8 cells
-    plan = _plan(probed)
-    assert "PartitionFilters" in plan and "cell" in plan, plan
-    assert probed.select("cell").distinct().count() <= 2
-    # and fewer rows than the full corpus
-    assert 0 < probed.count() < emb.count()
-
-
 def _files_intersecting_box(path, a_col, a_lo, a_hi, b_col, b_lo, b_hi):
     """Count (data files, files whose min/max stats intersect the box) —
     exactly the pruning decision parquet readers make from row-group

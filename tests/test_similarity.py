@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from hfp_loader_spark.operators.similarity import (
     brute_force_top_k,
     cosine,
-    ivf_top_k,
     signlsh_top_k,
     train_ivf_centroids,
 )
@@ -136,25 +135,6 @@ def test_quantize_roundtrip_error_bounded(emb):
                 assert abs(orig - rec) <= r["scale"] / 2 + 1e-9
 
 
-def test_ivf_recall_beats_candidate_budget(emb, queries):
-    """IVF with nprobe/nlist = 1/2 of the corpus scanned must recover
-    most of the exact top-k (data-adaptive cells ≫ random pruning)."""
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_top_k(emb, queries, K).collect()
-    }
-    approx = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_top_k(emb, queries, K, nlist=8, nprobe=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6
-
-    # every approx hit must be a genuine corpus row with a valid rank
-    assert all(qid < N_QUERIES for qid, _ in approx)
-    assert len(approx) == len(exact)  # k rows per query on both sides
-
-
 def test_arrow_top_k_query_cap_raises(spark, emb):
     """VERDICT r3 #8: the driver-side collect of the query matrix must be
     guarded — an oversized query side raises a clear error instead of
@@ -217,28 +197,6 @@ def test_pq_encode_matches_numpy_argmin(emb, pq_books):
             assert r["codes"][j] == want, (r["vec_id"], j)
 
 
-def test_pq_rerank_recall_beats_raw_adc(emb, queries, pq_books):
-    from hfp_loader_spark.operators.similarity import pq_top_k, pq_top_k_rerank
-
-    exact = {
-        (r["query_id"], r["vec_id"])
-        for r in brute_force_top_k(emb, queries, K).collect()
-    }
-    raw = {
-        (r["query_id"], r["vec_id"])
-        for r in pq_top_k(emb, queries, K, pq_books).collect()
-    }
-    rer = {
-        (r["query_id"], r["vec_id"])
-        for r in pq_top_k_rerank(emb, queries, K, pq_books).collect()
-    }
-    recall_raw = len(exact & raw) / len(exact)
-    recall_rer = len(exact & rer) / len(exact)
-    assert recall_rer >= 0.6
-    assert recall_rer >= recall_raw  # rerank can only help
-    assert len(rer) == len(exact)  # k rows per query
-
-
 def test_pq_distortion_is_bounded(emb, pq_books):
     from hfp_loader_spark.operators.similarity import pq_reconstruction_mse
 
@@ -273,32 +231,6 @@ def test_semantic_dedup_prunes_planted_duplicate(spark):
     assert len(kept) == 40  # nothing else is near-identical at 0.95
 
 
-def test_pq_codebooks_save_load_round_trip(spark, sf_dir, tmp_path):
-    """Stored codebooks must reload exactly and reproduce the retrained
-    search result (train-once / serve-forever contract)."""
-    from hfp_loader_spark.operators.similarity import (
-        load_pq_codebooks,
-        pq_top_k_rerank,
-        save_pq_codebooks,
-        train_pq_codebooks,
-    )
-    from hfp_loader_spark.plans.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    trained = train_pq_codebooks(emb, m=8, ksub=16, fraction=1.0)
-    root = str(tmp_path / "pq_index")
-    version = save_pq_codebooks(spark, trained, root, meta={"corpus": "embeddings"})
-    loaded = load_pq_codebooks(spark, root, version)
-    assert loaded == trained  # float64 exact — parquet stores the same doubles
-
-    queries = emb.where("vec_id < 3").selectExpr(
-        "vec_id AS query_id", "embedding"
-    )
-    a = pq_top_k_rerank(emb, queries, k=5, codebooks=trained, shortlist=50)
-    b = pq_top_k_rerank(emb, queries, k=5, codebooks=loaded, shortlist=50)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_semantic_dedup_arrow_matches_expression(spark, sf_dir):
     """The BLAS per-cell path and the pure-expression join must agree on
     every keep/prune decision (same centroids → same cells → same pairs)."""
@@ -312,28 +244,6 @@ def test_semantic_dedup_arrow_matches_expression(spark, sf_dir):
     cents = train_ivf_centroids(emb, 4, fraction=1.0)
     a = semantic_dedup(emb, 0.35, nlist=4, centroids=cents, use_arrow=True)
     b = semantic_dedup(emb, 0.35, nlist=4, centroids=cents, use_arrow=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_ivf_centroids_save_load_round_trip(spark, sf_dir, tmp_path):
-    from hfp_loader_spark.operators.similarity import (
-        ivf_top_k,
-        load_ivf_centroids,
-        save_ivf_centroids,
-        train_ivf_centroids,
-    )
-    from hfp_loader_spark.plans.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    trained = train_ivf_centroids(emb, 8, fraction=1.0)
-    root = str(tmp_path / "ivf_index")
-    v = save_ivf_centroids(spark, trained, root)
-    loaded = load_ivf_centroids(spark, root, v)
-    assert loaded == trained
-
-    q = emb.where("vec_id < 3").selectExpr("vec_id AS query_id", "embedding")
-    a = ivf_top_k(emb, q, 5, nlist=8, nprobe=4, centroids=trained)
-    b = ivf_top_k(emb, q, 5, nlist=8, nprobe=4, centroids=loaded)
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
@@ -505,9 +415,8 @@ def test_kcenter_coverage_curve_and_exclusions(emb):
 
 def test_pq_exact_codes_recall_vs_exact_topk(spark, sf_dir):
     """The value-checked PQ variant must also be a GOOD index: recall@5
-    vs the exact cosine top-5 stays above the same 0.6 floor the float
-    PQ contract asserts (the 100-candidate shortlist dominates the
-    error, not the codebook flavor)."""
+    vs the exact cosine top-5 stays above a 0.6 floor (the
+    100-candidate shortlist dominates the error)."""
     from pyspark.sql import functions as F
 
     from hfp_loader_spark.operators.similarity import (
@@ -536,7 +445,7 @@ def test_pq_exact_codes_recall_vs_exact_topk(spark, sf_dir):
 def test_ivf_exact_cells_recall_vs_exact_topk(spark, sf_dir):
     """The value-checked IVF variant must also be a GOOD index: with
     nprobe=4 of 8 cells probed, recall@5 vs the exact cosine top-5
-    stays at or above the 0.6 floor the float IVF contract asserts."""
+    stays at or above a 0.6 floor."""
     from pyspark.sql import functions as F
 
     from hfp_loader_spark.operators.similarity import (
@@ -646,61 +555,6 @@ def test_semdedup_pretrained_blas_equals_expression_twin(spark, sf_dir):
     assert inline_arrow == twin
 
 
-def test_fixed_point_model_store_roundtrip_and_stamp(spark, sf_dir, tmp_path):
-    """save_fixed_point_model / load_fixed_point_model: the persisted
-    serve model round-trips bit-for-bit (serving from disk equals the
-    inline-training twin), the scale stamp fails loudly on mismatch,
-    and an empty root raises instead of serving nothing."""
-    import pytest
-
-    from hfp_loader_spark.operators.similarity import (
-        ivf_pretrained_top_k,
-        load_fixed_point_model,
-        save_fixed_point_model,
-    )
-    from hfp_loader_spark.plans.catalog import REGISTRY
-    from hfp_loader_spark.plans.model_queries import _ivf_serve_model
-
-    root = str(tmp_path / "ivf_model")
-    with pytest.raises(ValueError, match="no fixed-point model"):
-        load_fixed_point_model(spark, root, expect_scale=1_000_000)
-
-    cent_assign, cent_probe = _ivf_serve_model(spark, sf_dir)
-    v = save_fixed_point_model(
-        spark, cent_assign, cent_probe, root, scale=1_000_000
-    )
-    assert v == 1
-    loaded_assign, loaded_probe = load_fixed_point_model(
-        spark, root, expect_scale=1_000_000
-    )
-    assert loaded_assign == sorted(cent_assign)
-    assert loaded_probe == sorted(cent_probe)
-
-    with pytest.raises(ValueError, match="scale"):
-        load_fixed_point_model(spark, root, expect_scale=1_000)
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    from_disk = sorted(
-        map(
-            tuple,
-            ivf_pretrained_top_k(
-                emb, queries, k=5, nprobe=4,
-                cent_assign=loaded_assign, cent_probe=loaded_probe,
-            ).collect(),
-        )
-    )
-    twin = sorted(
-        map(
-            tuple,
-            REGISTRY["sim_ann_ivf_exact_cells"].builder(spark, sf_dir).collect(),
-        )
-    )
-    assert from_disk == twin
-
-
 def test_cell_tag_appends_equal_full_recompute_and_pin_the_model(
     spark, sf_dir, tmp_path
 ):
@@ -746,17 +600,17 @@ def test_cell_index_lifecycle_serves_equal_and_prunes_files(
 ):
     """The r12 persisted-index serve path (VERDICT r11 #1), end to end
     on private roots: tag log → materialize_cell_index (cell-partitioned
-    layout) → ivf_served_top_k must equal the literal-serve twin
-    bit-for-bit; the probed-cell pruning must be PHYSICAL (corrupting an
-    unprobed cell's parquet file does not touch the query — the scan
-    never opens it); and a layout stamped under a different model
-    generation must be refused."""
+    layout) → ivf_served_top_k must equal the inline-training twin
+    (ivf_exact_cells_top_k) bit-for-bit; the probed-cell pruning must
+    be PHYSICAL (corrupting an unprobed cell's parquet file does not
+    touch the query — the scan never opens it); and a layout stamped
+    under a different model generation must be refused."""
     import glob
     import os
 
     from hfp_loader_spark.operators.similarity import (
         _model_fingerprint,
-        ivf_pretrained_top_k,
+        ivf_exact_cells_top_k,
         ivf_served_top_k,
         materialize_cell_index,
         rebuild_cell_tags,
@@ -781,9 +635,8 @@ def test_cell_index_lifecycle_serves_equal_and_prunes_files(
         spark, queries, index_root, cent_probe, k=5, nprobe=2,
         expect_fingerprint=fp,
     )
-    twin = ivf_pretrained_top_k(
-        emb, queries, k=5, nprobe=2,
-        cent_assign=cent_assign, cent_probe=cent_probe,
+    twin = ivf_exact_cells_top_k(
+        emb, queries, k=5, nlist=8, nprobe=2, iters=3
     )
     got = sorted(map(tuple, served.collect()))
     assert got == sorted(map(tuple, twin.collect())) and len(got) == 5
@@ -825,16 +678,14 @@ def test_cell_index_lifecycle_serves_equal_and_prunes_files(
 def test_code_table_appends_equal_recompute_pin_and_serve(
     spark, sf_dir, tmp_path
 ):
-    """The r12 persisted PQ code table (VERDICT r11 #2): two disjoint
-    O(delta) appends load back equal to the full re-encode; an append
-    under different codebooks raises; load_codes enforces the expected
-    generation; and pq_served_top_k over the loaded table equals the
-    literal-serve twin bit-for-bit."""
+    """The r12 persisted PQ code table (VERDICT r11 #2): load_codes
+    enforces the expected generation, and pq_served_top_k over the
+    loaded table equals the inline-training twin
+    (pq_exact_codes_top_k) bit-for-bit."""
     from hfp_loader_spark.operators.similarity import (
         _books_fingerprint,
-        append_codes,
         load_codes,
-        pq_pretrained_top_k,
+        pq_exact_codes_top_k,
         pq_served_top_k,
         rebuild_codes,
     )
@@ -844,26 +695,9 @@ def test_code_table_appends_equal_recompute_pin_and_serve(
     fp = _books_fingerprint(books_assign)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     root = str(tmp_path / "codes")
-
-    b1 = emb.where(F.col("vec_id") % 2 == 0)
-    b2 = emb.where(F.col("vec_id") % 2 == 1)
-    assert append_codes(spark, b1, root, books_assign, 1_000_000) == 1
-    assert append_codes(spark, b2, root, books_assign, 1_000_000) == 2
-    got = sorted(
-        (r["vec_id"], tuple(r["_codes"]))
-        for r in load_codes(spark, root, fp, 1_000_000).collect()
-    )
-    full_root = str(tmp_path / "codes_full")
-    rebuild_codes(spark, emb, full_root, books_assign, 1_000_000)
-    full = sorted(
-        (r["vec_id"], tuple(r["_codes"]))
-        for r in load_codes(spark, full_root).collect()
-    )
-    assert got == full and len(got) > 0
+    assert rebuild_codes(spark, emb, root, books_assign, 1_000_000) == 1
 
     wrong = [(g, cl, [v + 1 for v in cq]) for g, cl, cq in books_assign]
-    with pytest.raises(ValueError, match="mixing generations"):
-        append_codes(spark, emb, root, wrong, 1_000_000)
     with pytest.raises(ValueError, match="mixing generations"):
         load_codes(spark, root, _books_fingerprint(wrong), 1_000_000)
     with pytest.raises(ValueError, match="no PQ codes"):
@@ -876,9 +710,8 @@ def test_code_table_appends_equal_recompute_pin_and_serve(
     served = pq_served_top_k(
         spark, emb, queries, codes, books_probe, k=5,
     )
-    twin = pq_pretrained_top_k(
-        emb, queries, k=5, books_assign=books_assign,
-        books_probe=books_probe,
+    twin = pq_exact_codes_top_k(
+        emb, queries, k=5, m=8, ksub=16, iters=3, shortlist=100, dim=64
     )
     assert sorted(map(tuple, served.collect())) == sorted(
         map(tuple, twin.collect())
@@ -1005,11 +838,11 @@ def test_stream_ingest_compact_materialize_serve_chain(
     micro-batch → compact_snapshot collapses the append chain (meta
     pins survive) → materialize_cell_index lays out the serve
     partitions → ivf_served_top_k answers bit-identically to the
-    literal-serve twin over the same corpus."""
+    inline-training twin (ivf_exact_cells_top_k) over the same corpus."""
     from hfp_loader_spark.maintenance import compact_snapshot
     from hfp_loader_spark.operators.similarity import (
         _model_fingerprint,
-        ivf_pretrained_top_k,
+        ivf_exact_cells_top_k,
         ivf_served_top_k,
         load_cell_tags,
         materialize_cell_index,
@@ -1059,9 +892,8 @@ def test_stream_ingest_compact_materialize_serve_chain(
     twin = sorted(
         map(
             tuple,
-            ivf_pretrained_top_k(
-                emb, queries, k=5, nprobe=4,
-                cent_assign=cent_assign, cent_probe=cent_probe,
+            ivf_exact_cells_top_k(
+                emb, queries, k=5, nlist=8, nprobe=4, iters=3
             ).collect(),
         )
     )
@@ -1164,6 +996,17 @@ def test_model_store_serves_retrains_and_truncates(
     # cache semantics: history truncates to the head + one predecessor
     root = f"{memo._INDEX_BASE}/tivf_model_{memo._corpus_key(str(corpus))}"
     assert {s.version for s in table_history(spark, root)} == {2, 3}
+
+    # a committed model without probe rows is refused, not served
+    def train_no_probe():
+        calls.append("half")
+        return ([(0, [1, 2]), (1, [3, 4])], [])
+
+    with pytest.raises(ValueError, match="missing a frame"):
+        mq._model_store(
+            spark, str(corpus), "thalf", train_no_probe, defn="d1"
+        )
+    assert calls[-1] == "half"
 
 
 def test_ann_serve_follows_a_corpus_regenerated_in_place(
