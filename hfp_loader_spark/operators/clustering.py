@@ -3,11 +3,11 @@ fixed-point arithmetic so an iterative algorithm can still be checked
 against an independent SQL oracle bit-for-bit.
 
 Extension tier (the reference has no vector surface; SURVEY §2.11
-similarity tier).  ``operators.similarity`` already uses a driver-side
-capped k-means to build IVF/PQ codebooks; this module is the
-CORPUS-SCALE clustering path: every step — assignment, centroid update,
-convergence — is a DataFrame plan, and the only driver-bounded object is
-the k×dim centroid set itself.
+similarity tier).  This module is the similarity tier's one quantizer:
+the IVF cells, the PQ codebooks and the SemDeDup cells of
+``operators.similarity`` all come from it.  Every step — assignment,
+centroid update, convergence — is a DataFrame plan, and the only
+driver-bounded object is the k×dim centroid set itself.
 
 Why fixed-point: float k-means is not reproducible across engines (the
 per-cluster mean sums doubles in partition order, and after one
@@ -114,7 +114,6 @@ def kmeans_fixed_point(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Lloyd's k-means, ``iters`` assignment/update rounds, deterministic
     end to end: centroids initialize from the ``k`` lowest-id vectors
@@ -135,28 +134,21 @@ def kmeans_fixed_point(
     formulation — the bit-identical cross-engine contract is stated for
     unique ids only.  Deduplicate upstream if the corpus can repeat ids.
 
-    ``checkpoint=True`` (the default since optimization r16) truncates
-    lineage with a lazy ``localCheckpoint(eager=False)`` on the k-row
-    centroid frame per iteration.  ``eager=False`` does NOT keep plan
-    construction job-free: under AQE the pin runs every exchange stage
-    of the pinned subtree when it is called, so each round's aggregate
-    runs inside the builder.  The checkpoint changes NO value — it only
-    pins each round's centroids so round i+1 references them instead of
-    replaying rounds 1..i: uncheckpointed, the unrolled recurrence re-executes earlier
-    rounds' corpus aggregates inside every later round's broadcast (70
-    parquet scans of the corpus at iters=3 in the sim_ann_ivf_exact_cells
-    plan; 2.2 s → 0.49 s measured on the training subtree at sf0.1).
-    Cluster caveat (ADVICE r16): ``localCheckpoint`` stores unreplicated
-    executor-local blocks — under executor loss or dynamic allocation
-    the job fails irrecoverably instead of recomputing, and the plan is
-    no longer purely declarative.  Deployments with preemptible
-    executors should pass ``checkpoint=False`` (or wire reliable
-    ``sparkContext.setCheckpointDir`` checkpointing around the loop).
-    Pass ``checkpoint=False`` also when the caller wants one purely
-    declarative plan (e.g. to inspect the full recurrence)."""
-    assign, _ = kmeans_fixed_point_model(
-        emb, k, iters, id_col, vec_col, scale, checkpoint
-    )
+    Each round's centroid state is pinned with a lazy
+    ``localCheckpoint(eager=False)`` (optimization r16).  ``eager=False``
+    does NOT keep plan construction job-free: under AQE the pin runs
+    every exchange stage of the pinned subtree when it is called, so
+    each round's aggregate runs inside the builder.  The pin changes NO
+    value — round i+1 references round i's centroids instead of
+    replaying rounds 1..i: unpinned, the unrolled recurrence re-executes
+    earlier rounds' corpus aggregates inside every later round's
+    broadcast (70 parquet scans of the corpus at iters=3 in the
+    sim_ann_ivf_exact_cells plan; 2.2 s → 0.49 s measured on the
+    training subtree at sf0.1).  ``localCheckpoint`` stores unreplicated
+    executor-local blocks, so under executor loss the job fails instead
+    of recomputing (ADVICE r16); fault tolerance of the pins is
+    ROADMAP direction 2."""
+    assign, _ = kmeans_fixed_point_model(emb, k, iters, id_col, vec_col, scale)
     return assign
 
 
@@ -167,7 +159,6 @@ def kmeans_fixed_point_model(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`kmeans_fixed_point` returning the MODEL too:
     ``(assign, centroids)`` where ``centroids`` is the k-row
@@ -176,7 +167,7 @@ def kmeans_fixed_point_model(
     incremental re-assignment would use).  Same exact fixed-point
     trajectory, so both frames have bit-exact SQL twins."""
     assign, _, cent = _kmeans_fp_run(
-        emb, k, iters, id_col, vec_col, scale, checkpoint, keep_prev=False
+        emb, k, iters, id_col, vec_col, scale, keep_prev=False
     )
     return assign, cent
 
@@ -201,7 +192,7 @@ def kmeans_fixed_point_trajectory(
     round (and the assignment) reuse it.  Values are bit-identical to
     two separate runs — same trajectory, same SQL twins."""
     return _kmeans_fp_run(
-        emb, k, iters, id_col, vec_col, scale, True, keep_prev=True
+        emb, k, iters, id_col, vec_col, scale, keep_prev=True
     )
 
 
@@ -238,7 +229,6 @@ def _kmeans_fp_run(
     id_col: str,
     vec_col: str,
     scale: int,
-    checkpoint: bool,
     keep_prev: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     # NULL/empty vectors are unclusterable and EXCLUDED (no output row):
@@ -319,9 +309,7 @@ def _kmeans_fp_run(
         )
         carr = carr.crossJoin(F.broadcast(upd)).select(
             _apply_update(F.col("_cents"), F.col("_upd")).alias("_cents")
-        )
-        if checkpoint:
-            carr = carr.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
 
     def explode_carr(c: DataFrame) -> DataFrame:
         e = c.select(F.explode("_cents").alias("_c"))
@@ -332,16 +320,6 @@ def _kmeans_fp_run(
     return assign, explode_carr(carr_prev), explode_carr(carr)
 
 
-def kmeans_cluster_profile(assign: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Per-cluster size and exact total quantized inertia — the
-    convergence scalar a driver loop would watch (monotone non-increasing
-    over Lloyd's iterations).  One k-row aggregate."""
-    return assign.groupBy("cluster").agg(
-        F.count("*").alias("n_members"),
-        F.sum("dist_q").alias("inertia_q"),
-    )
-
-
 def kmeans_fixed_point_grouped(
     vecs: DataFrame,
     k: int,
@@ -349,7 +327,6 @@ def kmeans_fixed_point_grouped(
     group_col: str = "grp",
     id_col: str = "vec_id",
     qvec_col: str = "q",
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Fixed-point Lloyd's k-means run INDEPENDENTLY per group in ONE
     plan — G parallel clusterings (one per ``group_col`` value) whose
@@ -371,16 +348,11 @@ def kmeans_fixed_point_grouped(
     clustering; a single plan trains all groups, so the G clusterings
     share every shuffle.  Scale shape per iteration: broadcast of the
     G·k centroid frame joined on the group key, then one
-    (group, cluster, pos) update aggregate.
-
-    ``checkpoint=True`` (default) lazily pins the G·k-row centroid
-    frame per round — same no-value-change lineage truncation as
-    :func:`kmeans_fixed_point`; without it the unrolled recurrence
-    replays earlier rounds' corpus aggregates inside later rounds'
-    broadcasts."""
+    (group, cluster, pos) update aggregate.  Each round's G-row
+    centroid state is lazily pinned, the same no-value-change lineage
+    truncation as :func:`kmeans_fixed_point`."""
     assign, _, cent = _kmeans_fp_grouped_run(
-        vecs, k, iters, group_col, id_col, qvec_col,
-        checkpoint=checkpoint, keep_prev=False,
+        vecs, k, iters, group_col, id_col, qvec_col, keep_prev=False
     )
     return assign, cent
 
@@ -392,7 +364,6 @@ def kmeans_fixed_point_grouped_trajectory(
     group_col: str = "grp",
     id_col: str = "vec_id",
     qvec_col: str = "q",
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Grouped sibling of :func:`kmeans_fixed_point_trajectory`:
     ``(assign, cent_prev, cent)`` from ONE grouped training run —
@@ -402,8 +373,7 @@ def kmeans_fixed_point_grouped_trajectory(
     recurrence once, not twice (VERDICT r11 #2).  Bit-identical to two
     separate runs."""
     return _kmeans_fp_grouped_run(
-        vecs, k, iters, group_col, id_col, qvec_col,
-        checkpoint=checkpoint, keep_prev=True,
+        vecs, k, iters, group_col, id_col, qvec_col, keep_prev=True
     )
 
 
@@ -414,7 +384,6 @@ def _kmeans_fp_grouped_run(
     group_col: str,
     id_col: str,
     qvec_col: str,
-    checkpoint: bool,
     keep_prev: bool,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     q = vecs.where(F.size(F.col(qvec_col)) > 0).select(
@@ -476,15 +445,13 @@ def _kmeans_fp_grouped_run(
                 ).alias("_upd")
             )
         )
+        # lazy pin of the G-row array frame — truncates the recurrence
+        # so round i+1 references round i's result instead of replaying
+        # rounds 1..i (no value change)
         carr = carr.join(F.broadcast(upd), "_g", "left").select(
             "_g",
             _apply_update(F.col("_cents"), F.col("_upd")).alias("_cents"),
-        )
-        if checkpoint:
-            # lazy pin of the G-row array frame — truncates the
-            # recurrence so round i+1 references round i's result
-            # instead of replaying rounds 1..i (no value change)
-            carr = carr.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
 
     def explode_carr(c: DataFrame) -> DataFrame:
         e = c.select("_g", F.explode("_cents").alias("_c"))

@@ -141,7 +141,7 @@ def signlsh_bucket(vec: Column, dim: int, n_planes: int = 8) -> Column:
     """Sign-LSH bucket id: one bit per hyperplane (sign of projection).
 
     Loop-style over a single folded plane-matrix constant — same
-    compile-time rationale as :func:`_centroids_lit`."""
+    compile-time rationale as :func:`_int_cents_lit`."""
     planes = F.array(*[_hyperplane(dim, p) for p in range(n_planes)])
     bits = F.transform(
         planes,
@@ -210,66 +210,6 @@ def signlsh_top_k(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    nlist: int,
-    vec_col: str = "embedding",
-    sample_cap: int = 4096,
-    iters: int = 8,
-    seed: int = 42,
-    fraction: float | None = None,
-) -> list[list[float]]:
-    """Train unit centroids for an IVF index: spherical k-means on a
-    seeded sample, driver-side numpy.
-
-    Scale design: the collect is bounded by ``sample_cap`` rows and the
-    Lloyd iterations cost O(sample_cap · nlist · dim) on the driver —
-    independent of corpus size.  The resulting centroids are a few KB of
-    plan literals; nothing is shipped to executors beyond the plan, and
-    no model object / MLlib pipeline has to be persisted.
-
-    Pass ``fraction`` (sampling rate that yields ≳ sample_cap rows) when
-    the corpus size is known even approximately — deriving it otherwise
-    costs a ``count()``, i.e. a full scan before training ever starts.
-    """
-    import numpy as np
-
-    # size>0 drops NULL and empty vectors (size(NULL) is NULL → filtered)
-    # — a ragged sample would crash the np.array below; the python-side
-    # dim guard additionally drops any stray length-mismatched vector
-    sample = corpus.select(vec_col).where(F.size(vec_col) > 0)
-    if fraction is None:
-        fraction = min(1.0, 4.0 * sample_cap / max(1, sample.count()))
-    if fraction < 1.0:
-        sample = sample.sample(fraction=fraction, seed=seed)
-    rows = sample.limit(sample_cap).collect()
-    if not rows:
-        raise ValueError("no non-empty vectors to train IVF centroids on")
-    dim = len(rows[0][vec_col])
-    x = np.array(
-        [r[vec_col] for r in rows if len(r[vec_col]) == dim],
-        dtype=np.float64,
-    )
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    x = x / norms
-
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=min(nlist, len(x)), replace=False)]
-    for _ in range(iters):
-        # spherical Lloyd step: assign by max dot, re-mean, re-normalize
-        assign = np.argmax(x @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members) == 0:  # dead cell → reseed from the sample
-                cent[c] = x[rng.randint(len(x))]
-                continue
-            m = members.mean(axis=0)
-            n = np.linalg.norm(m)
-            cent[c] = m / n if n > 0 else cent[c]
-    return [[float(v) for v in c] for c in cent]
-
-
 def _parsed_array_lit(rows, fmt) -> Column:
     """A (possibly nested) constant array built by PARSING one SQL
     string JVM-side instead of ``F.lit`` on a nested Python list —
@@ -291,189 +231,6 @@ def _parsed_array_lit(rows, fmt) -> Column:
     if not rows:
         raise ValueError("cannot build an empty literal array via parse")
     return F.expr(render(list(rows)))
-
-
-def _centroids_lit(centroids: list[list[float]]) -> Column:
-    """The centroid matrix as ONE array<array<double>> literal constant.
-
-    Shape matters twice: per-centroid unrolled expressions generate
-    O(nlist · dim) Java source (measured ~8s of one-time Janino/JIT
-    compilation), and even a CreateArray-of-literals tree carries
-    O(nlist · dim) expression NODES that every optimizer pass — and
-    every AQE re-optimization at every stage boundary — re-walks.
-    Built via :func:`_parsed_array_lit` (one JVM parse) and folded to a
-    single Literal node: milliseconds to plan, identical to evaluate."""
-    return _parsed_array_lit(
-        [[float(v) for v in c] for c in centroids], lambda v: f"{v!r}D"
-    )
-
-
-def _centroid_scores(vec: Column, centroids: list[list[float]]) -> Column:
-    """array<double> of dot(vec, centroid_i) — one loop over a folded
-    2-D constant."""
-    return F.transform(_centroids_lit(centroids), lambda c: dot(vec, c))
-
-
-def ivf_assign_cell(vec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid cell id (0-based; ties → lowest cell)."""
-    scores = _centroid_scores(vec, centroids)
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
-
-
-def semantic_dedup(
-    corpus: DataFrame,
-    threshold: float,
-    nlist: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    round_to: int = 4,
-    train_fraction: float | None = None,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """SemDeDup-style semantic deduplication: cluster the embedding space,
-    then prune near-identical vectors WITHIN each cluster only.
-
-    The cluster-then-prune recipe from the SemDeDup line of work: k-means
-    partitions the corpus into ``nlist`` cells (reusing the IVF trainer —
-    bounded driver sample, centroids as plan literals), and only
-    within-cell pairs are cosine-scored.  A vector is pruned when a
-    SMALLER-id vector in the same cell scores ≥ ``threshold`` (the
-    deterministic keep-lowest-id representative rule; the paper's
-    keep-farthest-from-centroid variant swaps the tiebreak, not the
-    shape).  Output: ``(id, cell, kept)`` for every corpus row.
-
-    Scale: the all-pairs product never happens — pair work is
-    Σ|cell|² ≈ N²/nlist, and with ``nlist ∝ N/target_cell`` each cell is
-    constant-sized so the join is linear in N.  The cell tag is one
-    narrow no-shuffle pass; the self-join shuffles on the cell id.  True
-    duplicates (cos → 1) virtually always share a nearest centroid, so
-    recall concentrates exactly where dedup matters (the in-cell recall
-    contract is oracle-checked in plans/similarity_queries.py).
-
-    ``use_arrow`` (default): the in-cell scoring runs as ONE
-    ``applyInPandas`` per cell — a blocked numpy/BLAS matmul over the
-    cell's matrix, which is how the SemDeDup recipe actually executes at
-    scale (per-cluster matrix similarity).  Measured ~10× the
-    expression-fold path at 500k in-cell pairs (interpreted higher-order
-    folds pay ~dim interpreted ops per pair; BLAS pays a fused multiply).
-    Each cell must fit a worker: size ``nlist ∝ N / target_cell`` with
-    target_cell ~10-100k vectors; the similarity matrix is computed in
-    ≤~256 MB row blocks, never |cell|² at once.  ``use_arrow=False``
-    keeps the pure-expression join (no Python workers; bit-identical
-    rounding with the SQL oracles).
-    """
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, nlist, vec_col=vec_col, fraction=train_fraction
-        )
-    # NULL/empty vectors carry no semantic signal and would reach the
-    # per-cell numpy matrix as ragged rows — they are excluded from the
-    # operator's universe entirely (absent from the keep-list, neither
-    # kept nor pruned), the same exclusion the NULL-safe cosine applies
-    # in the brute-force paths
-    c = corpus.where(F.size(vec_col) > 0).select(
-        F.col(id_col), as_double_array(F.col(vec_col)).alias("_v")
-    ).withColumn("_cell", ivf_assign_cell(F.col("_v"), centroids))
-    if not use_arrow:
-        # the expression join consumes c on BOTH sides and per-pair
-        # scoring wants prenormed folds — neither applies to the arrow
-        # path, which reads the frame exactly once and normalizes in
-        # numpy, so the norm column and the persist would be pure waste
-        c = c.withColumn("_n", norm(F.col("_v"))).persist()
-    if use_arrow:
-        return _blas_keep_list(c, id_col, "_cell", threshold, round_to)
-    a = c.alias("a")
-    b = c.alias("b")
-    removed = (
-        a.join(
-            b,
-            (F.col("a._cell") == F.col("b._cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(
-            F.round(
-                cosine_prenormed(
-                    F.col("a._v"), F.col("b._v"), F.col("a._n"), F.col("b._n")
-                ),
-                round_to,
-            )
-            >= threshold
-        )
-        .select(F.col(f"b.{id_col}").alias(id_col))
-        .distinct()
-        .withColumn("_removed", F.lit(True))
-    )
-    return c.join(removed, id_col, "left").select(
-        id_col,
-        F.col("_cell").alias("cell"),
-        F.coalesce(~F.col("_removed"), F.lit(True)).alias("kept"),
-    )
-
-
-def _blas_keep_list(
-    c: DataFrame,
-    id_col: str,
-    cell_col: str,
-    threshold: float,
-    round_to: int,
-) -> DataFrame:
-    """The per-cell BLAS prune shared by :func:`semantic_dedup` and
-    :func:`semantic_dedup_exact_cells` (``use_arrow=True``): ONE
-    ``applyInPandas`` per cell over ``(id_col, _v, cell_col)`` — a
-    row-blocked numpy matmul over the cell's matrix (≤~256 MB blocks,
-    never |cell|² at once), smaller-id rows remove larger ones at
-    ``np.round(cos, round_to) >= threshold``.  Output ``(id_col long,
-    cell int, kept bool)``."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("cell", IntegerType()),
-            StructField("kept", BooleanType()),
-        ]
-    )
-    thr = float(threshold)
-    nd = int(round_to)
-
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ido = ids[order]
-        x = np.array(pdf["_v"].tolist(), dtype=np.float64)[order]
-        nrm = np.linalg.norm(x, axis=1)
-        nrm[nrm == 0] = 1.0
-        xn = x / nrm[:, None]
-        nloc = len(ido)
-        removed = np.zeros(nloc, dtype=bool)
-        # row-blocked S = Xn @ Xn.T: bound block memory ~256 MB of
-        # doubles regardless of cell size
-        blk = max(1, (1 << 25) // max(nloc, 1))
-        for s in range(0, nloc, blk):
-            e = min(s + blk, nloc)
-            sb = np.round(xn[s:e] @ xn.T, nd) >= thr
-            gi = np.arange(s, e)[:, None]
-            gj = np.arange(nloc)[None, :]
-            sb &= gi < gj  # only smaller-id rows remove j
-            removed |= sb.any(axis=0)
-        return pd.DataFrame(
-            {
-                id_col: ido.astype("int64"),
-                "cell": np.full(nloc, int(pdf[cell_col].iloc[0]), "int32"),
-                "kept": ~removed,
-            }
-        )
-
-    return c.groupBy(cell_col).applyInPandas(prune, out_schema)
 
 
 def quantize_embedding(vec: Column, bits: int = 8) -> Column:
@@ -696,205 +453,6 @@ def arrow_top_k(
     return top_k_per_group(
         local, [query_id_col], [F.desc("cos"), F.asc(id_col)], k
     )
-
-
-# --- Product quantization (PQ) --------------------------------------------
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    sample_cap: int = 4096,
-    iters: int = 10,
-    seed: int = 42,
-    fraction: float | None = None,
-    normalize: bool = True,
-) -> list[list[list[float]]]:
-    """Train PQ codebooks: split the vector into ``m`` subspaces, run L2
-    k-means (``ksub`` centroids) independently in each — driver-side numpy
-    on a seeded bounded sample, exactly like :func:`train_ivf_centroids`.
-
-    Returns ``codebooks[m][ksub][dim/m]``.  ``normalize=True`` trains on
-    L2-normalized vectors so ADC dot products approximate COSINE (the
-    convention every entry in this module uses).
-
-    Scale design: the collect is bounded by ``sample_cap``; training costs
-    O(sample_cap · ksub · dim) on the driver, independent of corpus size;
-    the codebooks are m·ksub·(dim/m) doubles ≈ a few KB of plan literals —
-    no model artifact to persist or ship."""
-    import numpy as np
-
-    # same ragged-sample guard as train_ivf_centroids: size>0 excludes
-    # NULL/empty vectors, the dim check any stray mismatched length
-    sample = corpus.select(vec_col).where(F.size(vec_col) > 0)
-    if fraction is None:
-        fraction = min(1.0, 4.0 * sample_cap / max(1, sample.count()))
-    if fraction < 1.0:
-        sample = sample.sample(fraction=fraction, seed=seed)
-    rows = sample.limit(sample_cap).collect()
-    if not rows:
-        raise ValueError("no non-empty vectors to train PQ codebooks on")
-    dim = len(rows[0][vec_col])
-    x = np.array(
-        [r[vec_col] for r in rows if len(r[vec_col]) == dim],
-        dtype=np.float64,
-    )
-    if normalize:
-        norms = np.linalg.norm(x, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        x = x / norms
-    dim = x.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    rng = np.random.RandomState(seed)
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        xs = x[:, j * dsub : (j + 1) * dsub]
-        cent = xs[rng.choice(len(xs), size=min(ksub, len(xs)), replace=False)]
-        for _ in range(iters):
-            # plain L2 Lloyd: assign to nearest centroid, re-mean
-            d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(len(cent)):
-                members = xs[assign == c]
-                if len(members) == 0:  # dead code word → reseed
-                    cent[c] = xs[rng.randint(len(xs))]
-                else:
-                    cent[c] = members.mean(axis=0)
-        books.append([[float(v) for v in c] for c in cent])
-    return books
-
-
-def _pq_books_lit(codebooks: list[list[list[float]]]) -> Column:
-    """Codebooks as ONE array<array<array<double>>> Literal node — the
-    same plan-size/py4j rationale as :func:`_centroids_lit`."""
-    return _parsed_array_lit(
-        [[[float(v) for v in c] for c in book] for book in codebooks],
-        lambda v: f"{v!r}D",
-    )
-
-
-def _pq_c2_lit(codebooks: list[list[list[float]]]) -> Column:
-    """Per-code-word squared norms ``c2[j][i] = ‖book_j[i]‖²`` as one
-    2-D Literal, precomputed at PLAN time (Python) so the in-plan
-    distance never materializes a normalized vector or recomputes
-    code-word norms (kept as a PARALLEL literal to :func:`_pq_books_lit`
-    rather than a struct array: plain nested arrays fold to a single
-    node, struct trees do not)."""
-    return _parsed_array_lit(
-        [[float(sum(v * v for v in c)) for c in book] for book in codebooks],
-        lambda v: f"{v!r}D",
-    )
-
-
-def pq_encode(
-    vec: Column, codebooks: list[list[list[float]]], normalize: bool = True
-) -> Column:
-    """PQ code of a vector: array<int> of length m — per subspace, the
-    0-based index of the L2-nearest code word (of the NORMALIZED vector
-    when ``normalize``, matching cosine-convention training).
-
-    Expression shape matters here (the word_shingles lesson): a naive
-    ``transform(v, x -> x/norm(v))`` embeds the norm fold in a lambda and
-    re-evaluates it per ELEMENT per consumer — O(dim²·m·ksub) per row.
-    Instead the argmin is algebraically rearranged so normalization never
-    touches the array: ``‖v/n − c‖² = const + (c2 − 2·dot(v_sub,c)/n)``,
-    with ``c2`` a plan-time literal — and the scalar norm is LET-BOUND
-    via a one-element ``transform`` so the fold under it references a
-    lambda variable (evaluated once per row), not the norm subtree
-    (which interpreted higher-order functions would otherwise re-run per
-    code word)."""
-    dsub = len(codebooks[0][0])
-    v = as_double_array(vec)
-
-    c2 = _pq_c2_lit(codebooks)
-
-    def codes_given(nn: Column) -> Column:
-        def code_for(book: Column, j: Column) -> Column:
-            sub = F.slice(v, j * dsub + 1, dsub)
-            c2row = F.element_at(c2, j + 1)
-            d2 = F.transform(
-                book,
-                lambda cw, i: F.element_at(c2row, i + 1)
-                - F.lit(2.0) * dot(sub, cw) / nn,
-            )
-            return (F.array_position(d2, F.array_min(d2)) - 1).cast("int")
-
-        return F.transform(_pq_books_lit(codebooks), code_for)
-
-    if not normalize:
-        return codes_given(F.lit(1.0))
-    n = norm(v)
-    # let-binding: array(n) → transform binds the evaluated norm to the
-    # lambda variable; every inner reference is a variable read
-    return F.element_at(
-        F.transform(
-            F.array(F.when(n > 0, n).otherwise(F.lit(1.0))),
-            lambda nn: codes_given(nn),
-        ),
-        1,
-    )
-
-
-def pq_reconstruction_mse(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, mse): squared reconstruction error of each NORMALIZED
-    vector vs its PQ decode — the distortion diagnostic that decides
-    m/ksub sizing before a corpus is committed to a compressed index.
-
-    Uses the same algebra as :func:`pq_encode` so the normalized vector
-    is never materialized in-plan: ``Σ_j ‖v_sub/n − c_j‖² = ‖v/n‖² +
-    Σ_j c2_j − 2·Σ_j dot(v_sub,c_j)/n`` with ``c2`` plan-time literals
-    and the scalar norm let-bound (one norm fold per row, not one per
-    element or per subspace)."""
-    dsub = len(codebooks[0][0])
-    dim = len(codebooks) * dsub
-    v = as_double_array(F.col(vec_col))
-    codes = pq_encode(F.col(vec_col), codebooks)
-    n = norm(v)
-
-    def mse_given(nn: Column, unit: Column) -> Column:
-        contrib = F.transform(
-            codes,
-            lambda code, j: F.element_at(
-                F.element_at(_pq_c2_lit(codebooks), j + 1), code + 1
-            )
-            - F.lit(2.0)
-            * dot(
-                F.slice(v, j * dsub + 1, dsub),
-                F.element_at(
-                    F.element_at(_pq_books_lit(codebooks), j + 1),
-                    code + 1,
-                ),
-            )
-            / nn,
-        )
-        return (
-            unit + F.aggregate(contrib, F.lit(0.0), lambda a, s: a + s)
-        ) / F.lit(dim)
-
-    mse = F.element_at(
-        F.transform(
-            F.array(
-                F.struct(
-                    F.when(n > 0, n).otherwise(F.lit(1.0)).alias("nn"),
-                    F.when(n > 0, F.lit(1.0)).otherwise(F.lit(0.0)).alias(
-                        "unit"
-                    ),
-                )
-            ),
-            lambda s: mse_given(s["nn"], s["unit"]),
-        ),
-        1,
-    )
-    return corpus.select(F.col(id_col), mse.alias("mse"))
 
 
 def rp_sign_matrix(dim_in: int, dim_out: int) -> list[list[float]]:
@@ -1208,18 +766,16 @@ def ivf_exact_cells_top_k(
 ) -> DataFrame:
     """IVF approximate top-k whose ENTIRE index is bit-exact across
     engines: cells come from the fixed-point integer k-means
-    (``clustering.kmeans_fixed_point_model``) instead of the float
-    spherical training — so cell assignment, the probe set, and the
-    candidate list all have SQL twins and the approximate neighbor list
-    itself is value-checkable, not just its recall floor.
+    (``clustering.kmeans_fixed_point_model``), so cell assignment, the
+    probe set, and the candidate list all have SQL twins and the
+    approximate neighbor list itself is value-checkable, not just its
+    recall floor.
 
-    Trade vs the float spherical cells of :func:`train_ivf_centroids`
-    (which :func:`semantic_dedup` uses): training is corpus-scale
-    (``iters`` broadcast-join rounds over the full corpus) instead of a
-    bounded driver sample — the price of an INDEX that reproduces
-    across engines (provenance, incremental re-assignment, audited
-    dedup).  :func:`ivf_served_top_k` serves the same model from the
-    persisted cell layout without the training rounds.
+    Training is corpus-scale (``iters`` broadcast-join rounds over the
+    full corpus) — the price of an INDEX that reproduces across engines
+    (provenance, incremental re-assignment, audited dedup).
+    :func:`ivf_served_top_k` serves the same model from the persisted
+    cell layout without the training rounds.
     Queries probe the post-final-update centroids (c_iters) while
     candidates carry the final assignment (a_iters vs c_{iters-1}) —
     the standard one-step lag of any trained-then-served index,
@@ -1292,10 +848,8 @@ def pq_exact_codes_top_k(
     subspaces), integer ADC over exact quantized distances, exact
     cosine rerank of the shortlist.  Codes, LUTs, ADC distances,
     shortlist, and the final neighbor list all reproduce bit-for-bit on
-    any engine (the float driver-trained codebooks of
-    :func:`train_pq_codebooks` feed only the distortion diagnostic
-    :func:`pq_reconstruction_mse`).  :func:`pq_served_top_k` serves the
-    same codebooks from the persisted code table.
+    any engine.  :func:`pq_served_top_k` serves the same codebooks from
+    the persisted code table.
 
     ``dim`` must be divisible by ``m``; vectors of any other length
     (and NULL/empty) are excluded on both engines.
@@ -1784,16 +1338,18 @@ def ivf_served_top_k(
 
 def _int_cents_lit(cents: list[tuple[int, list[int]]]) -> Column:
     """Quantized centroids as ONE ``array<array<bigint>>`` Literal node,
-    ordered by cluster id (= array position − 1) — the plan-size /
-    eval-cost rationale of :func:`_pq_books_lit`: ``F.lit`` of nested
-    lists folds to a single Literal; per-cluster ``F.array(F.lit …)``
-    trees cost a tree walk per evaluation and megabytes of task
-    binary.
+    ordered by cluster id (= array position − 1).  Shape matters twice:
+    per-centroid unrolled expressions generate O(nlist · dim) Java
+    source (measured ~8 s of one-time Janino/JIT compilation), and a
+    per-cluster ``F.array(F.lit …)`` tree carries O(nlist · dim)
+    expression nodes that every optimizer and AQE pass re-walks, costs a
+    tree walk per evaluation and megabytes of task binary.  Built via
+    :func:`_parsed_array_lit` and folded to a single Literal node.
 
     Cluster ids MUST be contiguous 0..n−1 (array position − 1 IS the
     cluster id downstream) — asserted here so EVERY serve entry point
-    (ivf_served_top_k, append_cell_tags,
-    semantic_dedup_pretrained_cells, …) fails loudly on a gapped model
+    (ivf_served_top_k, append_cell_tags, semantic_dedup_cells, …)
+    fails loudly on a gapped model
     instead of silently mis-tagging every cell (ADVICE r11 #1)."""
     ordered = sorted(cents)
     if [c for c, _ in ordered] != list(range(len(ordered))):
@@ -1809,7 +1365,8 @@ def _int_cents_lit(cents: list[tuple[int, list[int]]]) -> Column:
 
 def _int_c2_lit(cents: list[tuple[int, list[int]]]) -> Column:
     """Per-cluster ``Σc²`` as one bigint-array Literal, plan-time
-    precomputed (the `_pq_c2_lit` trick in exact integers)."""
+    precomputed, so the in-plan argmin never recomputes centroid
+    norms."""
     ordered = [cq for _, cq in sorted(cents)]
     return _parsed_array_lit(
         [int(sum(v * v for v in cq)) for cq in ordered], lambda v: f"{v}L"
@@ -1846,46 +1403,113 @@ def _int_argmin_cluster(
     return (F.array_position(t, F.array_min(t)) - 1).cast("int")
 
 
-def semantic_dedup_pretrained_cells(
+def semantic_dedup_cells(
     corpus: DataFrame,
     threshold: float,
-    cent_assign: list[tuple[int, list[int]]],
+    cells: DataFrame | list[tuple[int, list[int]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     scale: int = 1_000_000,
     round_to: int = 4,
 ) -> DataFrame:
-    """SemDeDup keep-list over PRE-TRAINED exact cells with the BLAS
-    per-cell prune — the offline-train / online-serve split of
-    :func:`semantic_dedup_exact_cells`: ``cent_assign`` must be the
-    pre-final-update centroids (c_{iters-1}), because the trained
-    index's cell column IS the final assignment a_iters = argmin
-    against c_{iters-1} — recomputed here as ONE narrow no-join
-    expression pass over the centroid literals, bit-identical to the
-    inline-training twin's cells.  The prune is the shared per-cell
-    Arrow/BLAS matmul (:func:`_blas_keep_list`), whose
-    ``round(cos, round_to)`` decisions match the expression twin's
-    (locked by tests).
+    """SemDeDup-style semantic deduplication over fixed-point k-means
+    cells: prune near-identical vectors WITHIN each cell only.  A vector
+    is pruned when a SMALLER-id vector in the same cell scores
+    ``round(cos, round_to) >= threshold`` (the deterministic
+    keep-lowest-id representative rule; the paper's
+    keep-farthest-from-centroid variant swaps the tiebreak, not the
+    shape).  Output: ``(id, cell int, kept bool)`` for every non-empty
+    vector; NULL/empty vectors carry no semantic signal and are outside
+    the universe (neither kept nor pruned).
 
-    Scale shape: one narrow assignment pass + one groupBy(cell)
-    applyInPandas — no training rounds, no self-join, Σ|cell|² pair
-    work inside the blocked matmul."""
+    ``cells`` is the cell source, one of:
+
+    - the served centroid literals ``[(cluster, cq)]``: pass
+      c_{iters-1}, the frame the trained assignment a_iters argmins
+      against.  Each vector is assigned in ONE narrow no-join
+      expression pass (:func:`_int_argmin_cluster`), bit-identical to
+      the inline trainer's cells.
+    - an ``(id, cluster)`` assignment frame, such as the output of
+      ``clustering.kmeans_fixed_point``: joined on id, so the training
+      rounds run inside the plan.
+
+    The prune is ONE ``applyInPandas`` per cell: a row-blocked numpy
+    matmul over the cell's normalized matrix (≤~256 MB blocks, never
+    |cell|² at once), which is how the SemDeDup recipe executes at
+    scale.  Measured ~10× an expression self-join at 500k in-cell pairs
+    (interpreted higher-order folds pay ~dim ops per pair, BLAS a fused
+    multiply).  Pair work is Σ|cell|², never all-pairs; each cell must
+    fit a worker, so size ``nlist ∝ N / target_cell``.  numpy rounds
+    half-to-even and Spark HALF_UP: they differ only on a cosine exactly
+    on a half at the (round_to+1)-th decimal, and the catalog entries'
+    SQL oracles check every flag."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.types import (
+        BooleanType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
+
     from hfp_loader_spark.operators.clustering import quantize_vec
 
-    corp = (
-        corpus.where(F.size(F.col(vec_col)) > 0)
-        .select(
+    base = corpus.where(F.size(F.col(vec_col)) > 0)
+    if isinstance(cells, DataFrame):
+        c = base.select(
+            F.col(id_col), as_double_array(F.col(vec_col)).alias("_v")
+        ).join(cells.select(id_col, F.col("cluster").alias("cell")), id_col)
+    else:
+        c = base.select(
             F.col(id_col),
             as_double_array(F.col(vec_col)).alias("_v"),
             quantize_vec(F.col(vec_col), scale).alias("_cq"),
-        )
-        .select(
+        ).select(
             id_col,
             "_v",
-            _int_argmin_cluster(F.col("_cq"), cent_assign).alias("cell"),
+            _int_argmin_cluster(F.col("_cq"), cells).alias("cell"),
         )
+
+    out_schema = StructType(
+        [
+            StructField(id_col, LongType()),
+            StructField("cell", IntegerType()),
+            StructField("kept", BooleanType()),
+        ]
     )
-    return _blas_keep_list(corp, id_col, "cell", threshold, round_to)
+    thr = float(threshold)
+    nd = int(round_to)
+
+    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        ido = ids[order]
+        x = np.array(pdf["_v"].tolist(), dtype=np.float64)[order]
+        nrm = np.linalg.norm(x, axis=1)
+        nrm[nrm == 0] = 1.0
+        xn = x / nrm[:, None]
+        nloc = len(ido)
+        removed = np.zeros(nloc, dtype=bool)
+        # row-blocked S = Xn @ Xn.T: bound block memory ~256 MB of
+        # doubles regardless of cell size
+        blk = max(1, (1 << 25) // max(nloc, 1))
+        for s in range(0, nloc, blk):
+            e = min(s + blk, nloc)
+            sb = np.round(xn[s:e] @ xn.T, nd) >= thr
+            gi = np.arange(s, e)[:, None]
+            gj = np.arange(nloc)[None, :]
+            sb &= gi < gj  # only smaller-id rows remove j
+            removed |= sb.any(axis=0)
+        return pd.DataFrame(
+            {
+                id_col: ido.astype("int64"),
+                "cell": np.full(nloc, int(pdf["cell"].iloc[0]), "int32"),
+                "kept": ~removed,
+            }
+        )
+
+    return c.groupBy("cell").applyInPandas(prune, out_schema)
 
 
 def _by_grp(
@@ -1909,9 +1533,11 @@ def _pq_encode(
     """Encode vectors to their m PQ codes against literal codebooks —
     one narrow no-join expression pass (m argmins over ksub literal
     sub-centroids each, in the Σc²−2qc / array_position(array_min)
-    shape).  ``(id, _codes array<int>)``; vectors whose length ≠ dim
-    (and NULL/empty) are excluded on every engine.  The ONE definition
-    of the code semantics, which :func:`rebuild_codes` commits."""
+    shape).  ``(id, _q, _codes array<int>)``, with ``_q`` the quantized
+    vector; vectors whose length ≠ dim (and NULL/empty) are excluded on
+    every engine.  The ONE definition of the code semantics, which
+    :func:`rebuild_codes` commits and :func:`pq_reconstruction_mse`
+    decodes."""
     from hfp_loader_spark.operators.clustering import quantize_vec
 
     sub = dim // m
@@ -1921,6 +1547,7 @@ def _pq_encode(
         quantize_vec(F.col(vec_col), scale).alias("_q"),
     ).select(
         id_col,
+        "_q",
         F.array(
             *[
                 _int_argmin_cluster(
@@ -1929,6 +1556,46 @@ def _pq_encode(
                 for g in range(m)
             ]
         ).alias("_codes"),
+    )
+
+
+def pq_reconstruction_mse(
+    corpus: DataFrame,
+    books_assign: list[tuple[int, int, list[int]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    scale: int = 1_000_000,
+) -> DataFrame:
+    """``(id, mse)``: mean squared reconstruction error per coordinate of
+    each vector vs its PQ decode ``cq/scale`` — the distortion diagnostic
+    that decides m/ksub sizing before a corpus is committed to a
+    compressed index.  Codes come from :func:`_pq_encode` against the
+    same ``books_assign`` literals the code table is encoded with.  The
+    error is the exact integer ``Σ(q − cq)²`` over the quantized vector,
+    scaled once by ``1/(scale²·dim)``.  Vectors the encoder excludes
+    (length ≠ dim, NULL, empty) have no row."""
+    from hfp_loader_spark.operators.clustering import _sq_dist
+
+    grp = _by_grp(books_assign)
+    m = len(grp)
+    dim = m * len(books_assign[0][2])
+    decoded = F.flatten(
+        F.array(
+            *[
+                F.element_at(
+                    _int_cents_lit(grp[g]),
+                    F.element_at(F.col("_codes"), g + 1) + 1,
+                )
+                for g in range(m)
+            ]
+        )
+    )
+    return _pq_encode(
+        corpus, books_assign, m, dim, id_col, vec_col, scale
+    ).select(
+        id_col,
+        (_sq_dist(F.col("_q"), decoded) / F.lit(float(scale) ** 2 * dim))
+        .alias("mse"),
     )
 
 
@@ -1961,7 +1628,9 @@ def rebuild_codes(
     (the PQ sibling of :func:`rebuild_cell_tags`)."""
     from hfp_loader_spark.versioned import commit_snapshot
 
-    codes = _pq_encode(corpus, books_assign, m, dim, id_col, vec_col, scale)
+    codes = _pq_encode(
+        corpus, books_assign, m, dim, id_col, vec_col, scale
+    ).select(id_col, "_codes")
     return commit_snapshot(
         spark,
         codes,
@@ -2339,82 +2008,3 @@ def ivfpq_served_top_k(
     )
     out._ivfpq_adc_plan = adc  # executed ADC stage, for plan audits
     return out
-
-
-def semantic_dedup_exact_cells(
-    corpus: DataFrame,
-    threshold: float,
-    nlist: int,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1_000_000,
-    round_to: int = 4,
-    use_arrow: bool = False,
-) -> DataFrame:
-    """:func:`semantic_dedup` with cells from the fixed-point integer
-    k-means instead of the float spherical trainer — the SemDeDup
-    variant whose ENTIRE result (cells, in-cell pair set, keep/prune
-    flags) reproduces bit-for-bit on any engine, completing the
-    exact-sibling set for the similarity tier.  Same rule: a vector is
-    pruned when a smaller-id same-cell vector scores
-    round(cos, round_to) ≥ threshold; NULL/empty vectors are outside
-    the universe on both paths.
-
-    Trade: training pays ``iters`` corpus-scale rounds (vs a bounded
-    driver sample); the within-cell pair join and its Σ|cell|² cost
-    are identical to the float path's expression mode.
-
-    ``use_arrow=True`` routes the within-cell prune through the shared
-    per-cell BLAS ``applyInPandas`` (:func:`_blas_keep_list`) — the
-    production hot path — instead of the expression join.  The decision
-    rule is the same ``round(cos, round_to) >= threshold``; numpy's
-    round-half-even and Spark's HALF_UP can only diverge on a cosine
-    landing EXACTLY on a half at the (round_to+1)-th decimal, which
-    measure-zero doubles don't do — the BLAS/expression agreement is
-    locked bit-for-bit by tests on the gate corpora."""
-    from hfp_loader_spark.operators.clustering import kmeans_fixed_point
-
-    assign = kmeans_fixed_point(
-        corpus, nlist, iters, id_col=id_col, vec_col=vec_col, scale=scale
-    ).select(F.col(id_col), F.col("cluster").alias("cell"))
-    c = (
-        corpus.where(F.size(F.col(vec_col)) > 0)
-        .select(F.col(id_col), as_double_array(F.col(vec_col)).alias("_v"))
-        .withColumn("_n", norm(F.col("_v")))
-        .join(assign, id_col)
-    )
-    if use_arrow:
-        return _blas_keep_list(
-            c.select(id_col, "_v", "cell"), id_col, "cell", threshold, round_to
-        )
-    a = c.select(
-        F.col(id_col).alias("_ia"),
-        F.col("_v").alias("_va"),
-        F.col("_n").alias("_na"),
-        "cell",
-    )
-    b = c.select(
-        F.col(id_col).alias("_ib"),
-        F.col("_v").alias("_vb"),
-        F.col("_n").alias("_nb"),
-        F.col("cell").alias("_cb"),
-    )
-    removed = (
-        a.join(b, (F.col("cell") == F.col("_cb")) & (F.col("_ia") < F.col("_ib")))
-        .where(
-            F.round(
-                cosine_prenormed(
-                    F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
-                ),
-                round_to,
-            )
-            >= threshold
-        )
-        .select(F.col("_ib").alias(id_col))
-        .distinct()
-        .withColumn("_rm", F.lit(True))
-    )
-    return assign.join(removed, id_col, "left").select(
-        id_col, "cell", F.col("_rm").isNull().alias("kept")
-    )

@@ -26,6 +26,7 @@ from hfp_loader_spark.operators.ranking import (
     pseudo_weights,
 )
 from hfp_loader_spark.plans.catalog import TOKS_SQL, _t, defquery
+from hfp_loader_spark.plans.similarity_queries import _SEMDEDUP_T
 
 _BM25_QUERIES = [
     (1, "hash join strategy"),
@@ -852,9 +853,13 @@ def _ivf_serve_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
 
-def _ivf_serve_model(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    """The pre-trained IVF model: (c_{iters-1}, c_iters) as sorted
-    (cluster, quantized-centroid) lists — 2×nlist bounded rows."""
+def _ivf_serve_model(
+    spark: SparkSession, sf_dir: str, nlist: int = _KM_K
+) -> tuple[list, list]:
+    """The pre-trained ``nlist``-cell fixed-point model: (c_{iters-1},
+    c_iters) as sorted (cluster, quantized-centroid) lists — 2×nlist
+    bounded rows.  The IVF index serves the 8-cell model; the SemDeDup
+    contract assigns cells with a 4-cell one."""
     from hfp_loader_spark.operators.clustering import (
         kmeans_fixed_point_trajectory,
     )
@@ -865,7 +870,7 @@ def _ivf_serve_model(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
         # collecting cent_prev materializes the checkpointed rounds
         # 1..iters−1; the final round reuses them.
         _, cent_prev, cent = kmeans_fixed_point_trajectory(
-            emb, _KM_K, _KM_ITERS, scale=_KM_SCALE
+            emb, nlist, _KM_ITERS, scale=_KM_SCALE
         )
 
         def rows(c) -> list[tuple[int, list[int]]]:
@@ -874,7 +879,8 @@ def _ivf_serve_model(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
         return (rows(cent_prev), rows(cent))
 
     return _model_store(
-        spark, sf_dir, "ivf", train, defn=f"k={_KM_K}|iters={_KM_ITERS}"
+        spark, sf_dir, f"ivf_k{nlist}", train,
+        defn=f"k={nlist}|iters={_KM_ITERS}",
     )
 
 
@@ -1548,13 +1554,10 @@ def emb_kmeans_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_EX_T = 0.35  # same threshold rationale as semdedup_keep_list
-
-
 def _semdedup_exact_oracle() -> str:
     """Exact-cell SemDeDup on the shared k-means CTEs: within-cell
     smaller-id pruning at round(cos,4) ≥ t, every stage value-identical
-    to ``similarity.semantic_dedup_exact_cells``."""
+    to ``similarity.semantic_dedup_cells``."""
     return (
         _kmeans_ctes()
         + f""",
@@ -1570,7 +1573,7 @@ def _semdedup_exact_oracle() -> str:
       JOIN v va ON va.vec_id = a.vec_id
       JOIN v vb ON vb.vec_id = b.vec_id
       WHERE round(list_cosine_similarity(va.vv, vb.vv), 4)
-            >= {_SEMDEDUP_EX_T!r}
+            >= {_SEMDEDUP_T!r}
       GROUP BY b.vec_id
     )
     SELECT a.vec_id, a.cluster AS cell, r.vid IS NULL AS kept
@@ -1582,61 +1585,49 @@ def _semdedup_exact_oracle() -> str:
 @defquery(
     "semdedup_keep_list_exact",
     _semdedup_exact_oracle(),
-    doc="SemDeDup keep-list whose ENTIRE result is value-checked "
-    "(operators.similarity.semantic_dedup_exact_cells): cells from the "
-    "fixed-point k-means (the same shared trajectory CTEs as "
-    "emb_kmeans_clusters / the exact-cell IVF), within-cell smaller-id "
-    "pruning at round(cos,4) ≥ 0.35 — cells, pair set, and keep/prune "
-    "flags all hash-match the oracle. The exact sibling of "
-    "semdedup_keep_list (float spherical cells → rows-only + "
-    "contract), completing the exact-sibling set: EVERY rows-only "
-    "entry now stands next to a bit-exact twin of the same mechanism. "
-    "Same Σ|cell|²-bounded pair work; never all-pairs.",
+    doc="SemDeDup keep-list with its cells trained INSIDE the plan "
+    "(operators.similarity.semantic_dedup_cells over the inline "
+    "clustering.kmeans_fixed_point assignment — the same shared "
+    "trajectory CTEs as emb_kmeans_clusters / the exact-cell IVF), "
+    "within-cell smaller-id pruning at round(cos,4) ≥ 0.35 by the "
+    "per-cell Arrow/BLAS matmul. Cells, pair set, and keep/prune flags "
+    "all hash-match the oracle. The in-plan training twin of "
+    "semdedup_keep_list: identical output, training rounds inside the "
+    "measured plan. Σ|cell|²-bounded pair work; never all-pairs.",
 )
 def semdedup_keep_list_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hfp_loader_spark.operators.similarity import (
-        semantic_dedup_exact_cells,
-    )
+    from hfp_loader_spark.operators.clustering import kmeans_fixed_point
+    from hfp_loader_spark.operators.similarity import semantic_dedup_cells
 
-    return semantic_dedup_exact_cells(
-        _t(spark, sf_dir, "embeddings"),
-        threshold=_SEMDEDUP_EX_T,
-        nlist=_KM_K,
-        iters=_KM_ITERS,
-        scale=_KM_SCALE,
-    )
+    emb = _t(spark, sf_dir, "embeddings")
+    assign = kmeans_fixed_point(emb, _KM_K, _KM_ITERS, scale=_KM_SCALE)
+    return semantic_dedup_cells(emb, _SEMDEDUP_T, assign, scale=_KM_SCALE)
 
 
 @defquery(
     "semdedup_keep_list",
     _semdedup_exact_oracle(),
     doc="SemDeDup keep-list on the PRODUCTION hot path "
-    "(operators.similarity.semantic_dedup_pretrained_cells): exact "
-    "fixed-point cells trained ONCE per corpus (memoized c_{iters-1} "
-    "literals — the frame the trained assignment argmins against), "
-    "cell assignment as one narrow no-join expression pass, "
+    "(operators.similarity.semantic_dedup_cells over the served model): "
+    "exact fixed-point cells trained ONCE per corpus (memoized "
+    "c_{iters-1} literals — the frame the trained assignment argmins "
+    "against), cell assignment as one narrow no-join expression pass, "
     "within-cell pruning as ONE per-cell Arrow/BLAS matmul "
-    "(applyInPandas, row-blocked Xn·Xnᵀ — measured ~10× the "
-    "expression join at 500k in-cell pairs), pruned when a smaller-id "
-    "same-cell vector scores round(cos,4) ≥ 0.35. FULL oracle (r11, "
-    "was rows-only float cells — the last rows-only entry): cells are "
-    "bit-identical to the inline-training twin's and the BLAS decision "
-    "rule matches the expression twin on the gate corpora (round-half "
-    "divergence needs a cosine exactly on a half at the 5th decimal — "
-    "measure-zero for doubles; locked by test), so the twin's training "
-    "CTEs value-check every cell and flag. Σ|cell|² pair work, never "
-    "all-pairs; the float spherical trainer stays contract-checked via "
-    "semdedup_contract.",
+    "(applyInPandas, row-blocked Xn·Xnᵀ — measured ~10× an "
+    "expression self-join at 500k in-cell pairs), pruned when a "
+    "smaller-id same-cell vector scores round(cos,4) ≥ 0.35. FULL "
+    "oracle: cells are bit-identical to the inline-training twin's "
+    "(semdedup_keep_list_exact, locked by test), so the twin's "
+    "training CTEs value-check every cell and flag. Σ|cell|² pair "
+    "work, never all-pairs.",
 )
 def semdedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hfp_loader_spark.operators.similarity import (
-        semantic_dedup_pretrained_cells,
-    )
+    from hfp_loader_spark.operators.similarity import semantic_dedup_cells
 
     cent_assign, _ = _ivf_serve_model(spark, sf_dir)
-    return semantic_dedup_pretrained_cells(
+    return semantic_dedup_cells(
         _t(spark, sf_dir, "embeddings"),
-        threshold=_SEMDEDUP_EX_T,
-        cent_assign=cent_assign,
+        _SEMDEDUP_T,
+        cent_assign,
         scale=_KM_SCALE,
     )

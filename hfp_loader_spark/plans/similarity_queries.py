@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hfp_loader_spark import memo
 from hfp_loader_spark.operators.similarity import (
     as_double_array,
     brute_force_top_k,
@@ -238,33 +237,14 @@ def sim_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_ann_ivf moved to plans/model_queries.py (r11, VERDICT r10 #5):
 # the catalog entry now serves the PRE-TRAINED exact fixed-point index
 # (memoized integer centroid literals; full oracle = the twin's
-# training CTEs), living next to its oracle generator.  The float
-# spherical trainer (train_ivf_centroids) serves no search: it feeds
-# semantic_dedup, which semdedup_contract trains and oracle-checks.
-
-
-def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
-    """PQ codebooks per embeddings generation (an index is trained once
-    and reused across searches)."""
-    from hfp_loader_spark.operators.similarity import train_pq_codebooks
-
-    return memo.memo(
-        "pq_books",
-        None,
-        memo.table_paths(sf_dir, "embeddings"),
-        "m=8|ksub=16",
-        lambda: train_pq_codebooks(
-            _t(spark, sf_dir, "embeddings"), m=8, ksub=16, fraction=1.0
-        ),
-    )
+# training CTEs), living next to its oracle generator.
 
 
 # sim_ann_pq moved to plans/model_queries.py (r11, VERDICT r10 #5):
 # the catalog entry now serves PRE-TRAINED exact grouped-k-means
 # codebooks (memoized integer literals; full oracle = the twin's
-# grouped training CTEs).  The float driver-trained codebooks
-# (train_pq_codebooks) serve no search: they feed pq_reconstruction_mse,
-# which sim_pq_distortion trains and bounds.
+# grouped training CTEs).  sim_pq_distortion measures those same
+# served codebooks.
 
 
 _ANN_ORACLE = f"""
@@ -367,23 +347,37 @@ def sim_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM embeddings
     """,
     doc="Oracle-checked distortion CONTRACT for the PQ index: per-vector "
-    "reconstruction MSE of the normalized embeddings vs their PQ decode, "
-    "asserted avg < 0.02 and max < 0.05 (measured 0.0085 / 0.0113) — the "
+    "reconstruction MSE of each embedding vs its decode cq/scale under "
+    "the SERVED fixed-point codebooks (the c_{iters-1} books sim_ann_pq's "
+    "code table is encoded with, through the one integer encoder), "
+    "asserted avg < 0.02 and max < 0.05 (measured avg 0.0090 / 0.0090 / "
+    "0.0095, max 0.0118 / 0.0114 / 0.0128 at sf0.001 / 0.01 / 0.1) — the "
     "quality bound that justifies serving from the 32×-compressed codes "
     "(256 raw bytes → 8 code bytes per vector). The distortion pass is "
-    "one narrow corpus scan; the oracle pins corpus size, compression "
-    "factor, and the bands.",
+    "one narrow corpus scan; the oracle pins corpus size (every row, "
+    "NULL and empty vectors included), compression factor, and the "
+    "bands.",
 )
 def sim_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hfp_loader_spark.operators.similarity import pq_reconstruction_mse
+    from hfp_loader_spark.plans.model_queries import (
+        _KM_SCALE,
+        _pq_serve_model,
+    )
 
     emb = _t(spark, sf_dir, "embeddings")
-    mse = pq_reconstruction_mse(emb, _pq_books(spark, sf_dir))
-    return mse.agg(
+    books_assign, _ = _pq_serve_model(spark, sf_dir)
+    mse = pq_reconstruction_mse(emb, books_assign, scale=_KM_SCALE)
+    # n_vectors counts every row, NULL and empty vectors included; the
+    # bands cover the vectors the encoder accepts
+    return emb.agg(
         F.count("*").alias("n_vectors"),
         F.lit(32).cast("int").alias("compression_x"),
-        (F.avg("mse") < 0.02).alias("avg_mse_lt_0_02"),
-        (F.max("mse") < 0.05).alias("max_mse_lt_0_05"),
+    ).crossJoin(
+        mse.agg(
+            (F.avg("mse") < 0.02).alias("avg_mse_lt_0_02"),
+            (F.max("mse") < 0.05).alias("max_mse_lt_0_05"),
+        )
     )
 
 
@@ -512,19 +506,21 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEMDEDUP_T = 0.35  # tuned to the synthetic corpus's cosine range (max ≈ 0.51
-# pairwise — there are no true duplicate vectors, so the classic 0.95 would
-# prune nothing); the operator semantics are threshold-independent.
+#: The one SemDeDup threshold of the catalog (semdedup_contract here,
+#: semdedup_keep_list and semdedup_keep_list_exact in model_queries).
+#: Tuned to the synthetic corpus's cosine range (max ≈ 0.51 pairwise —
+#: there are no true duplicate vectors, so the classic 0.95 would prune
+#: nothing); the operator semantics are threshold-independent.
+_SEMDEDUP_T = 0.35
 _SEMDEDUP_NLIST = 4
 
 
 # semdedup_keep_list moved to plans/model_queries.py (r11, VERDICT r10
-# #5 — the LAST rows-only entry): the catalog entry now runs the BLAS
-# per-cell prune over the exact fixed-point cells (full oracle = the
-# twin's training CTEs; the Arrow hot path stays the measured plan).
-# The float spherical variant (semdedup_contract below) keeps the
-# driver-trained cells oracle-checked via its precision/recall
-# contract, its centroids trained once per corpus through memo.memo.
+# #5 — the LAST rows-only entry): the catalog entry runs the BLAS
+# per-cell prune over the served 8-cell fixed-point model (full oracle
+# = the twin's training CTEs).  semdedup_contract below runs the same
+# operator over a served 4-cell model and checks it against the global
+# all-pairs removal set.
 
 
 @defquery(
@@ -532,7 +528,7 @@ _SEMDEDUP_NLIST = 4
     f"""
     WITH removed AS (
       -- lazy CASE guard: NULL/empty vectors drop out like Spark's
-      -- NULL-safe cosine (and semantic_dedup's size>0 universe)
+      -- NULL-safe cosine (and semantic_dedup_cells's size>0 universe)
       SELECT DISTINCT b.vec_id
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       WHERE a.vec_id < {_ALLPAIRS_CAP} AND b.vec_id < {_ALLPAIRS_CAP}
@@ -552,12 +548,14 @@ _SEMDEDUP_NLIST = 4
     "removal count (any smaller-id neighbor ≥ 0.35, SQL-restated "
     "all-pairs), plus (a) precision ≡ 1 — every in-cell removal must "
     "also qualify globally, an exact invariant of the construction — "
-    "and (b) removal recall ≥ 0.4 vs the global set (measured 0.55 at "
-    "sf0.01 with nlist=4; true duplicates at cos→1 co-cluster far more "
-    "reliably than these deliberately-weak 0.35 pairs). The semdedup "
-    "side runs on the SAME capped corpus (same memoized centroids) so "
-    "both invariants stay exact. Deterministic: seeded sample + seeded "
-    "k-means.",
+    "and (b) removal recall ≥ 0.4 vs the global set (measured 0.59 / "
+    "0.52 / 0.56 at sf0.001 / 0.01 / 0.1; true duplicates at cos→1 "
+    "co-cluster far more reliably than these deliberately-weak 0.35 "
+    "pairs). Cells come from a served 4-cell fixed-point model (the same "
+    "trainer-and-store path as the 8-cell IVF model) through the one "
+    "SemDeDup operator, semantic_dedup_cells. The semdedup side runs on "
+    "the SAME capped corpus so both invariants stay exact. "
+    "Deterministic: fixed-point k-means, fixed tiebreaks.",
 )
 def semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").where(
@@ -587,26 +585,19 @@ def semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (optimization r17; value neutral)
         .localCheckpoint(eager=False)
     )
-    # run the semdedup side on the SAME capped corpus (same memoized
-    # centroids) — keep/prune decisions must not be influenced by
-    # out-of-sample neighbors or precision_eq_1 would be unfalsifiable
-    from hfp_loader_spark.operators.similarity import (
-        semantic_dedup,
-        train_ivf_centroids,
+    # run the semdedup side on the SAME capped corpus (cells from the
+    # served 4-cell model) — keep/prune decisions must not be influenced
+    # by out-of-sample neighbors or precision_eq_1 would be unfalsifiable
+    from hfp_loader_spark.operators.similarity import semantic_dedup_cells
+    from hfp_loader_spark.plans.model_queries import (
+        _KM_SCALE,
+        _ivf_serve_model,
     )
 
-    cents = memo.memo(
-        "semdedup_centroids",
-        None,
-        memo.table_paths(sf_dir, "embeddings"),
-        f"nlist={_SEMDEDUP_NLIST}",
-        lambda: train_ivf_centroids(
-            _t(spark, sf_dir, "embeddings"), _SEMDEDUP_NLIST, fraction=1.0
-        ),
-    )
+    cent_assign, _ = _ivf_serve_model(spark, sf_dir, _SEMDEDUP_NLIST)
     sem_removed = (
-        semantic_dedup(
-            emb, threshold=_SEMDEDUP_T, nlist=_SEMDEDUP_NLIST, centroids=cents
+        semantic_dedup_cells(
+            emb, _SEMDEDUP_T, cent_assign, scale=_KM_SCALE
         )
         .where(~F.col("kept"))
         .select("vec_id")

@@ -44,7 +44,6 @@ TEST_ONLY = {
     "layout.zorder_write",
     "maintenance.compact_table",
     "operators.bpe.bpe_segment",
-    "operators.clustering.kmeans_cluster_profile",
     "operators.decomposition.load_scatter_stats",
     "operators.decomposition.merge_scatter_stats",
     "operators.decomposition.save_scatter_stats",

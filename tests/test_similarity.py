@@ -11,7 +11,6 @@ from hfp_loader_spark.operators.similarity import (
     brute_force_top_k,
     cosine,
     signlsh_top_k,
-    train_ivf_centroids,
 )
 from hfp_loader_spark.plans.catalog import load_table
 
@@ -99,16 +98,6 @@ def test_signlsh_recall(emb, queries):
     assert recall >= 0.5
 
 
-def test_ivf_centroids_are_unit_and_deterministic(emb):
-    import math as m
-
-    c1 = train_ivf_centroids(emb, nlist=8)
-    c2 = train_ivf_centroids(emb, nlist=8)
-    assert c1 == c2  # seeded sample + seeded init → reproducible index
-    for c in c1:
-        assert abs(m.sqrt(sum(v * v for v in c)) - 1.0) < 1e-9
-
-
 def test_quantize_roundtrip_error_bounded(emb):
     from hfp_loader_spark.operators.similarity import (
         as_double_array,
@@ -157,44 +146,36 @@ def test_arrow_top_k_query_cap_raises(spark, emb):
 
 
 @pytest.fixture(scope="module")
-def pq_books(emb):
-    from hfp_loader_spark.operators.similarity import train_pq_codebooks
+def pq_books(spark, sf_dir):
+    """The served fixed-point codebooks c_{iters-1}: sorted
+    (grp, cluster, quantized sub-centroid) triples."""
+    from hfp_loader_spark.plans.model_queries import _pq_serve_model
 
-    return train_pq_codebooks(emb, m=8, ksub=16, fraction=1.0)
-
-
-def test_pq_training_is_deterministic_and_shaped(emb, pq_books):
-    from hfp_loader_spark.operators.similarity import train_pq_codebooks
-
-    again = train_pq_codebooks(emb, m=8, ksub=16, fraction=1.0)
-    assert again == pq_books  # seeded sample + seeded init
-    assert len(pq_books) == 8
-    assert all(len(book) == 16 for book in pq_books)
-    assert all(len(c) == DIM // 8 for book in pq_books for c in book)
+    books_assign, _ = _pq_serve_model(spark, sf_dir)
+    return books_assign
 
 
 def test_pq_encode_matches_numpy_argmin(emb, pq_books):
-    """The in-plan encode (rearranged ‖v/n−c‖² argmin) must agree with a
-    straightforward numpy nearest-code-word assignment."""
+    """The in-plan integer encode (Σc²−2qc argmin over literal
+    codebooks) must agree with a straightforward numpy nearest-code-word
+    assignment of the quantized vector, ties to the lowest code."""
     import numpy as np
 
-    from hfp_loader_spark.operators.similarity import pq_encode
+    from hfp_loader_spark.operators.similarity import _pq_encode
 
-    rows = (
-        emb.limit(20)
-        .select("vec_id", "embedding", pq_encode(F.col("embedding"), pq_books).alias("codes"))
-        .collect()
-    )
-    books = np.array(pq_books)  # (m, ksub, dsub)
-    m, _, dsub = books.shape
+    rows = _pq_encode(
+        emb.limit(20), pq_books, 8, DIM, "vec_id", "embedding", 1_000_000
+    ).collect()
+    assert rows
+    books = np.zeros((8, 16, DIM // 8), dtype=np.int64)
+    for g, cl, cq in pq_books:
+        books[g, cl] = cq
     for r in rows:
-        v = np.array(r["embedding"], dtype=np.float64)
-        n = np.linalg.norm(v)
-        vhat = v / n if n > 0 else v
-        for j in range(m):
-            sub = vhat[j * dsub : (j + 1) * dsub]
+        q = np.array(r["_q"], dtype=np.int64)
+        for j in range(8):
+            sub = q[j * (DIM // 8) : (j + 1) * (DIM // 8)]
             want = int(np.argmin(((books[j] - sub) ** 2).sum(axis=1)))
-            assert r["codes"][j] == want, (r["vec_id"], j)
+            assert r["_codes"][j] == want, (r["vec_id"], j)
 
 
 def test_pq_distortion_is_bounded(emb, pq_books):
@@ -205,24 +186,34 @@ def test_pq_distortion_is_bounded(emb, pq_books):
         .agg(F.avg("mse").alias("avg"), F.max("mse").alias("mx"))
         .collect()[0]
     )
-    # normalized vectors have per-dim energy 1/dim ≈ 0.0156; the PQ decode
-    # must capture most of it
+    # unit-norm vectors have per-dim energy 1/dim ≈ 0.0156; the decode
+    # of the fixed-point codebooks must capture most of it
     assert row["avg"] < 0.02
     assert row["mx"] < 0.05
 
 
 def test_semantic_dedup_prunes_planted_duplicate(spark):
     """A true duplicate (identical vector) must be pruned in favor of the
-    smaller id; dissimilar vectors must all be kept."""
+    smaller id; dissimilar vectors must all be kept.  Both cell sources
+    of the one SemDeDup function — the inline assignment frame and the
+    served c_{iters-1} literals of the same training run — must give
+    the same keep-list."""
     import random
 
-    from hfp_loader_spark.operators.similarity import semantic_dedup
+    from hfp_loader_spark.operators.clustering import (
+        kmeans_fixed_point_trajectory,
+    )
+    from hfp_loader_spark.operators.similarity import semantic_dedup_cells
 
     rng = random.Random(7)
     rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(40)]
     rows.append((100, list(rows[3][1])))  # exact duplicate of vec 3
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    out = {r["vec_id"]: r for r in semantic_dedup(df, 0.95, nlist=2).collect()}
+    assign, cent_prev, _ = kmeans_fixed_point_trajectory(df, 2, 3)
+    out = {
+        r["vec_id"]: r
+        for r in semantic_dedup_cells(df, 0.95, assign).collect()
+    }
     assert len(out) == 41  # one row per input vector
     assert out[100]["kept"] is False  # duplicate pruned...
     assert out[3]["kept"] is True  # ...in favor of the smaller id
@@ -230,21 +221,11 @@ def test_semantic_dedup_prunes_planted_duplicate(spark):
     kept = [v for v in out.values() if v["kept"]]
     assert len(kept) == 40  # nothing else is near-identical at 0.95
 
-
-def test_semantic_dedup_arrow_matches_expression(spark, sf_dir):
-    """The BLAS per-cell path and the pure-expression join must agree on
-    every keep/prune decision (same centroids → same cells → same pairs)."""
-    from hfp_loader_spark.operators.similarity import (
-        semantic_dedup,
-        train_ivf_centroids,
+    cents = sorted((r["cluster"], list(r["cq"])) for r in cent_prev.collect())
+    served = semantic_dedup_cells(df, 0.95, cents).collect()
+    assert sorted(map(tuple, served)) == sorted(
+        (r["vec_id"], r["cell"], r["kept"]) for r in out.values()
     )
-    from hfp_loader_spark.plans.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_ivf_centroids(emb, 4, fraction=1.0)
-    a = semantic_dedup(emb, 0.35, nlist=4, centroids=cents, use_arrow=True)
-    b = semantic_dedup(emb, 0.35, nlist=4, centroids=cents, use_arrow=False)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 def test_rp_matrix_matches_hashlib_and_projection_is_linear(emb):
@@ -514,15 +495,10 @@ def test_pq_pretrained_serve_equals_inline_training_twin(spark, sf_dir):
 
 
 def test_semdedup_pretrained_blas_equals_expression_twin(spark, sf_dir):
-    """Lock for the r11 full-oracle upgrade of semdedup_keep_list (the
-    last rows-only entry): serve-style cells from memoized c_{iters-1}
-    literals + the BLAS per-cell prune must reproduce the
-    inline-training expression twin bit-for-bit — cells, keep flags,
-    and universe.  Also exercises semantic_dedup_exact_cells(use_arrow)
-    as the inline-training Arrow mode of the same identity."""
-    from hfp_loader_spark.operators.similarity import (
-        semantic_dedup_exact_cells,
-    )
+    """Lock for the full oracle of semdedup_keep_list: serve-style cells
+    from memoized c_{iters-1} literals must reproduce the inline-training
+    twin (semdedup_keep_list_exact) bit-for-bit — cells, keep flags,
+    and universe."""
     from hfp_loader_spark.plans.catalog import REGISTRY
 
     serve = sorted(
@@ -540,19 +516,6 @@ def test_semdedup_pretrained_blas_equals_expression_twin(spark, sf_dir):
         )
     )
     assert serve == twin and len(serve) == 500
-    inline_arrow = sorted(
-        map(
-            tuple,
-            semantic_dedup_exact_cells(
-                spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-                threshold=0.35,
-                nlist=8,
-                iters=3,
-                use_arrow=True,
-            ).collect(),
-        )
-    )
-    assert inline_arrow == twin
 
 
 def test_cell_tag_appends_equal_full_recompute_and_pin_the_model(
