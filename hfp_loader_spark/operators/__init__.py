@@ -70,6 +70,7 @@ from hfp_loader_spark.operators.graph import (  # noqa: F401
     connected_components_alternating,
     label_propagation,
     pagerank,
+    pagerank_state,
 )
 from hfp_loader_spark.operators.sketches import (  # noqa: F401
     bitmap_cardinality,

@@ -1,4 +1,4 @@
-"""Byte-pair-encoding tokenizer TRAINING as unrolled Catalyst plans
+"""Byte-pair-encoding tokenizer TRAINING as one-row Catalyst plans
 (extension tier; the reference has no text surface — SURVEY §2.11).
 
 Classic word-level BPE (Sennrich et al. 2016, the public algorithm every
@@ -9,16 +9,23 @@ times (a) count adjacent symbol pairs weighted by word frequency,
 within each word.  The learned artifact is the ordered MERGE TABLE —
 apply it in order and you have the tokenizer.
 
-Spark shape: the corpus is touched ONCE (tokenize → word counts); all N
-merge rounds run over the bounded (distinct-word, freq, symbols) vocab
-frame — the same corpus-once/iterate-on-bounded-state shape as the
-fixed-point k-means trilogy.  Each round is: one explode+aggregate for
-pair counts, one ``TakeOrderedAndProject`` argmax (count desc, pair
-asc — fully deterministic ties), and one expression-only greedy rebuild
-of every word's symbol array (an ``F.aggregate`` fold — no UDF, no
-shuffle).  The argmax row is LEFT-joined back (a 1-row broadcast), so a
-corpus that runs out of pairs degrades to fewer merges, never to an
-annihilated vocab.
+Spark shape: the corpus is touched ONCE (tokenize → word counts), and
+one global aggregate gathers the word counts into ONE row ``V`` of
+``(word, freq, syms)`` structs sorted by word.  Every merge round is
+then a projection of that row — no join, no exchange, no pin, so the
+whole training is one lazy plan whose first action runs it: the pairs
+of every word, weighted by its frequency, are flattened into one
+sorted array; one ``aggregate`` fold over it sums each (left, right)
+run and keeps the best run (count desc, pair asc — strict ``>`` keeps
+the first of tied runs); and the greedy merge fold rebuilds every
+word's symbols.  A round without pairs yields a NULL best pair, which
+merges nothing and emits no row, so a corpus that runs out of pairs
+degrades to fewer merges.
+
+Scale bound: the vocabulary and each round's pair array live in one
+row on one task.  On the sf0.1 documents corpus that is 31 distinct
+words and 107 weighted pairs in the first round; a vocabulary of
+millions of words needs a blocked layout.
 
 Exactness: every step is integer counts + lexicographic ties, so the
 whole training replays in SQL.  The oracle uses an INDEPENDENT
@@ -36,50 +43,68 @@ this-round merge can never false-positive as ``left`` because
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_MERGE = (
+    "struct<merge_rank:int,pair_left:string,pair_right:string,"
+    "pair_count:bigint>"
+)
 
-def chars_of(word: Column) -> Column:
-    """Split a word into single-character symbols (code-point slices —
-    identical semantics to the oracle's ``word[i:i]``)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.length(word)),
-        lambda i: word.substr(i, F.lit(1)),
+
+def _chars(word: str) -> str:
+    """SQL text: a word split into single-character symbols (code-point
+    slices — identical semantics to the oracle's ``word[i:i]``)."""
+    return (
+        f"transform(sequence(1, length({word})), i -> substr({word}, i, 1))"
     )
 
 
-def _greedy_merge(syms: Column, left: Column, right: Column) -> Column:
-    """Greedy left-to-right merge of the (left, right) pair inside one
-    symbol array — an expression-only fold; NULL left/right (no pair
-    survived this round) is the identity."""
-    step = lambda out, x: F.when(  # noqa: E731 — local fold step
-        (F.size(out) > 0)
-        & (F.element_at(out, -1) == left)
-        & (x == right),
-        F.concat(
-            F.slice(out, 1, F.size(out) - 1),
-            F.array(F.concat(left, right)),
-        ),
-    ).otherwise(F.concat(out, F.array(x)))
-    return F.aggregate(
-        syms, F.array().cast("array<string>"), step
+def _greedy_merge(syms: str, left: str, right: str) -> str:
+    """SQL text: greedy left-to-right merge of the (left, right) pair
+    inside one symbol array — an expression-only fold; a NULL pair (no
+    pair survived the round) is the identity."""
+    return (
+        f"aggregate({syms}, CAST(array() AS array<string>), (o, x) -> "
+        f"IF(size(o) > 0 AND element_at(o, -1) = {left} AND x = {right}, "
+        f"concat(slice(o, 1, size(o) - 1), array(concat({left}, {right}))),"
+        " concat(o, array(x))))"
     )
 
 
-def _adjacent_pairs(syms: Column) -> Column:
-    """array<struct<l,r2>> of adjacent symbol pairs (empty for 1-symbol
-    words — guarded against F.sequence's descending-range surprise)."""
-    return F.when(
-        F.size(syms) > 1,
-        F.transform(
-            F.sequence(F.lit(1), F.size(syms) - 1),
-            lambda i: F.struct(
-                F.element_at(syms, i).alias("l"),
-                F.element_at(syms, i + 1).alias("r2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<l:string,r2:string>>"))
+# SQL text over the state row: every word's adjacent symbol pairs with
+# the word's frequency, as one array sorted by (l, r2)
+_PAIRS = (
+    "array_sort(flatten(transform(V, w -> zip_with("
+    "slice(w.syms, 1, size(w.syms) - 1), slice(w.syms, 2, size(w.syms)), "
+    "(x, y) -> struct(x AS l, y AS r2, w.freq AS c)))))"
+)
+
+# SQL text: the best (l, r2, c) run of the sorted pair array, NULL when
+# it is empty — one fold whose accumulator carries the current run and
+# the best finished run; strict ``>`` keeps the first of tied runs
+_NO_RUN = (
+    "struct(CAST(NULL AS STRING) AS l, CAST(NULL AS STRING) AS r2, "
+    "0L AS c)"
+)
+_BEST = (
+    f"aggregate({_PAIRS}, struct({_NO_RUN} AS cur, {_NO_RUN} AS best), "
+    "(a, p) -> IF(p.l = a.cur.l AND p.r2 = a.cur.r2, "
+    "struct(struct(p.l AS l, p.r2 AS r2, a.cur.c + p.c AS c) AS cur, "
+    "a.best AS best), "
+    "struct(p AS cur, IF(a.cur.c > a.best.c, a.cur, a.best) AS best)), "
+    "a -> IF(a.cur.c > a.best.c, a.cur, IF(a.best.c > 0, a.best, NULL)))"
+)
+
+# SQL text: every word's symbols after merging the round's best pair
+# ``B``, bound once outside the per-word lambda — the optimizer inlines
+# the projection that made ``B`` (it counts references, not lambda
+# calls), which per word would redo the round's pair fold
+_APPLY = (
+    "transform(array(B), top -> transform(V, w -> struct(w.word AS word, "
+    "w.freq AS freq, "
+    f"{_greedy_merge('w.syms', 'top.l', 'top.r2')} AS syms)))[0]"
+)
 
 
 def bpe_train(
@@ -92,76 +117,32 @@ def bpe_train(
     ``(merge_rank, pair_left, pair_right, pair_count)`` — ≤ n_merges
     rows (fewer iff the vocabulary runs out of pairs).
 
-    Scale: the corpus contributes one tokenize+count pass; rounds
-    iterate on the distinct-word frame (vocab-bounded, lazily
-    localCheckpointed ONCE per round so plan depth stays linear).
-    Optimization r17: the winning pair rides the vocab checkpoint as
-    three constant columns instead of being checkpointed separately —
-    r16's two pins per round meant two sequential plan-finalization
-    barriers on the driver (each ``localCheckpoint`` materializes its
-    AQE stages), and the bench showed the 6-merge entry spending most
-    of its wall there; one pin per round halves the barriers while
-    keeping exactly ONE pair-count aggregate per round (recomputing
-    ``best`` for the output would have doubled the vocab-sized pass at
-    scale).  The merge row is recovered from any vocab row (the joined
-    pair columns are identical on every row); a pair-less round leaves
-    them NULL on every row, so the rank degrades to no output row
-    exactly as before."""
-    from hfp_loader_spark.operators.relational import global_top_k
+    The plan is the word-count aggregate, one global aggregate into the
+    state row and ``n_merges`` rounds of projections of that row:
+    building it runs no job (see the module docstring for its scale
+    bound)."""
     from hfp_loader_spark.operators.text import tokens
 
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
-    words = (
+    st = (
         docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("freq"))
+        .selectExpr(
+            "array_sort(collect_list(struct(word, freq, "
+            f"{_chars('word')} AS syms))) AS V",
+            f"CAST(array() AS array<{_MERGE}>) AS M",
+        )
     )
-    vocab = words.select(
-        "word", "freq", chars_of(F.col("word")).alias("syms")
-    ).localCheckpoint(eager=False)
-
-    merge_frames = []
     for rank in range(1, n_merges + 1):
-        pairs = (
-            vocab.select(
-                "freq", F.explode(_adjacent_pairs(F.col("syms"))).alias("p")
-            )
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r2").alias("r2"))
-            .agg(F.sum("freq").alias("cnt"))
+        st = st.selectExpr("V", "M", f"{_BEST} AS B").selectExpr(
+            f"{_APPLY} AS V",
+            "concat(M, array(IF(B IS NULL, NULL, struct("
+            f"{rank} AS merge_rank, B.l AS pair_left, B.r2 AS pair_right, "
+            "B.c AS pair_count)))) AS M",
         )
-        best = global_top_k(
-            pairs, [F.desc("cnt"), F.asc("l"), F.asc("r2")], 1
-        )
-        vocab = (
-            vocab.join(F.broadcast(best), F.lit(True), "left")
-            .select(
-                "word",
-                "freq",
-                _greedy_merge(
-                    F.col("syms"), F.col("l"), F.col("r2")
-                ).alias("syms"),
-                "l",
-                "r2",
-                "cnt",
-            )
-            .localCheckpoint(eager=False)
-        )
-        merge_frames.append(
-            vocab.where(F.col("l").isNotNull())
-            .limit(1)
-            .select(
-                F.lit(rank).alias("merge_rank"),
-                F.col("l").alias("pair_left"),
-                F.col("r2").alias("pair_right"),
-                F.col("cnt").alias("pair_count"),
-            )
-        )
-        vocab = vocab.select("word", "freq", "syms")
-    out = merge_frames[0]
-    for mf in merge_frames[1:]:
-        out = out.unionByName(mf)
-    return out
+    return st.selectExpr("inline(filter(M, e -> e IS NOT NULL))")
 
 
 def bpe_segment(
@@ -172,14 +153,24 @@ def bpe_segment(
 ) -> DataFrame:
     """APPLY a learned merge table: segment each word into subword
     pieces by replaying the merges IN RANK ORDER (the defining
-    tokenizer semantics) — each merge is the same expression-only
-    greedy fold training used, with the pair as plan literals, so
-    segmenting is one narrow no-shuffle projection however many rows
-    stream through.  ``merges`` is the ordered
-    ``[(pair_left, pair_right), …]`` list (collect the bounded
-    :func:`bpe_train` output — the tokenizer model is driver-sized by
-    definition)."""
-    syms = chars_of(F.col(word_col))
-    for left, right in merges:
-        syms = _greedy_merge(syms, F.lit(left), F.lit(right))
-    return words.withColumn(out_col, syms)
+    tokenizer semantics) — one fold over the table, as a literal array,
+    of the same greedy merge training uses, so segmenting is one narrow
+    no-shuffle projection however many rows stream through.  ``merges``
+    is the ordered ``[(pair_left, pair_right), …]`` list (collect the
+    bounded :func:`bpe_train` output — the tokenizer model is
+    driver-sized by definition)."""
+    table = F.array(
+        *(
+            F.struct(F.lit(left).alias("l"), F.lit(right).alias("r2"))
+            for left, right in merges
+        )
+    ).cast("array<struct<l:string,r2:string>>")
+    pieces = (
+        f"aggregate(_merges, {_chars(f'`{word_col}`')}, (s, m) -> "
+        f"{_greedy_merge('s', 'm.l', 'm.r2')})"
+    )
+    return (
+        words.withColumn("_merges", table)
+        .withColumn(out_col, F.expr(pieces))
+        .drop("_merges")
+    )

@@ -22,13 +22,17 @@ Scale design:
   in MapReduce and Beyond", SoCC'14) at O(log n) rounds with the same
   per-round primitives — the catalog's clustering queries run on it;
   both produce identical labels (property-tested).
+
+PageRank iterates differently: :func:`pagerank_state` gathers the graph
+into ONE row of array state, and every :func:`pagerank` round is a
+projection of that row — no join, no exchange, no pin per round.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -95,127 +99,86 @@ def connected_components(
     )
 
 
-def prepare_pagerank_edges(
+def pagerank_state(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """The reusable (and PERSISTABLE) half of :func:`pagerank`: distinct
-    directed edges annotated with the source's outdegree.  The degree
-    is a ``groupBy(e_src).count()`` joined back onto the edges rather
-    than a per-src count window — measured identical at sf0.1 (1.2 s
-    both), but the aggregate gets MAP-SIDE partial combining and the
-    join gets AQE skew splitting, while a window must buffer a hub
-    vertex's entire edge group in one task: at 10⁹ edges with a
-    power-law degree distribution the window shape is an OOM, the
-    agg+join shape degrades gracefully (the degree table is
-    vertex-sized, so the join typically broadcasts).  Callers that mine
-    edges from a large join can commit this frame as a stamped snapshot
-    (``versioned.stamped_snapshot``) and hand it back via
-    ``pagerank(..., prepared=True)`` — the edge-with-degree list is a
-    graph INDEX artifact, built once per corpus generation and served
-    many times."""
+    """The graph of :func:`pagerank` as ONE row: column ``G``, every
+    vertex of the distinct directed edges sorted by id, each a struct
+    ``(k, id, ins)`` with ``k`` its 0-based dense index (a
+    single-partition ``row_number`` over the sorted ids, so ``G[k]`` is
+    vertex ``k``) and ``ins`` its in-edges as ``(s, _deg)`` structs — the
+    source's index and out-degree — sorted by ``s``.  The degree is a
+    ``groupBy(src).count()`` joined back onto the edges, which
+    map-side-combines where a per-src window would buffer a hub's whole
+    edge group.  The state is a graph INDEX artifact: callers that mine
+    edges from a large join can commit it as a stamped snapshot and
+    serve it back to :func:`pagerank` as a one-row parquet scan.  An
+    empty edge list gives ``G = []``."""
     e = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
+        F.col(src).alias("e_src"), F.col(dst).alias("id")
     ).distinct()
     deg = e.groupBy("e_src").agg(F.count("*").alias("_deg"))
-    return e.join(deg, "e_src")
+    idx = (
+        e.select(F.explode(F.array("e_src", "id")).alias("id"))
+        .distinct()
+        .select(
+            "id", (F.row_number().over(Window.orderBy("id")) - 1).alias("k")
+        )
+    )
+    ins = (
+        e.join(deg, "e_src")
+        .join(idx.selectExpr("id AS e_src", "k AS s"), "e_src")
+        .groupBy("id")
+        .agg(
+            F.array_sort(F.collect_list(F.struct("s", "_deg"))).alias("ins")
+        )
+    )
+    return idx.join(ins, "id", "left").selectExpr(
+        "array_sort(collect_list(struct(k, id, coalesce(ins, "
+        "CAST(array() AS array<struct<s:int,_deg:bigint>>)) AS ins))) AS G"
+    )
 
 
 def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
+    state: DataFrame,
     n_iter: int = 5,
     damping: float = 0.85,
-    checkpoint_interval: int = 8,
-    prepared: bool = False,
-    nodes: DataFrame | None = None,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list (simplified:
-    dangling mass is dropped, the standard power-iteration shortcut).
+    """Fixed-iteration PageRank over a :func:`pagerank_state` row
+    (simplified: dangling mass is dropped, the standard power-iteration
+    shortcut).  Returns ``(id, rank)``, one row per vertex.
 
     rank_{i+1}(v) = (1-d)/N + d · Σ_{u→v} rank_i(u) / outdeg(u)
 
-    Each iteration is one join + one aggregate + one left join.  The
-    edge-with-outdegree frame is built ONCE
-    (:func:`prepare_pagerank_edges` — r16, outdeg was re-joined per
-    round), and the rounds chain LAZILY into one
-    declarative plan: for a fixed small
-    ``n_iter``, per-round ``localCheckpoint`` materialization cost ~2×
-    the whole computation at sf0.1 (measured 3.26 s → 1.56 s), whereas
-    the single 5-round DAG lets Catalyst/AQE pick one strategy per
-    stage (the rank frame is vertex-sized, so the per-round join
-    typically broadcasts).  ``checkpoint_interval`` guards deep
-    iteration counts: every that-many rounds the rank frame is
-    localCheckpoint'ed to truncate lineage — at the default 8, a
-    5-round call never checkpoints, a 50-round call stays
-    plan-size-bounded.  N is a single driver-side ``count()`` of the
-    vertex set — a scalar constant folded into the expression, not a
-    data collect.  Fixed ``n_iter`` (rather than convergence-check)
-    keeps the result engine-reproducible, which is what the
-    unrolled-CTE oracle replays.
+    The ranks are one array ``R`` beside ``G`` (``R[k]`` is vertex
+    ``k``'s rank, N = ``size(G)``), and each iteration is one projection
+    of the row: every vertex sums its in-edges' ``R[s] / _deg`` in
+    array order.  The plan adds no join, no exchange and no pin to the
+    state's, and the sums run in one fixed order, so every action over
+    the returned frame sees bitwise-identical ranks.  Fixed ``n_iter``
+    (rather than convergence-check) keeps the result
+    engine-reproducible, which is what the unrolled-CTE oracle replays.
+    An empty graph yields no rows.
 
-    ``prepared=True`` declares ``edges`` is ALREADY the output of
-    :func:`prepare_pagerank_edges` (distinct ``(e_src, e_dst)`` rows
-    carrying ``_deg``) AND cheap to iterate on — served from a
-    committed snapshot or already checkpointed — so the distinct+degree
-    pass AND the checkpoint are both skipped: the n_iter rounds scan
-    the caller's frame as-is.  A non-distinct or wrongly-degreed
-    prepared frame is the caller's correctness bug, exactly like any
-    other index-artifact contract.  ``nodes`` (single ``id`` column,
-    distinct, same materialization contract) optionally skips the
-    vertex-set derivation too — callers persisting the edge index can
-    persist the vertex list beside it and serve both from one scan."""
-    if checkpoint_interval < 1:
-        raise ValueError("checkpoint_interval must be >= 1")
-    # outdeg rides each edge row from the start, so the rounds join ONE
-    # pre-materialized (e_src, e_dst, _deg) frame against the current
-    # ranks instead of re-joining outdeg every round.
-    ew = (
-        edges.select("e_src", "e_dst", "_deg")
-        if prepared
-        else prepare_pagerank_edges(edges, src, dst).localCheckpoint()
+    Scale bound: the state row — every vertex and every edge — lives
+    on one task.  The sf0.1 customer→supplier shipment graph is 15,999
+    vertices and 586,871 edges; a graph of hundreds of millions of
+    edges needs a blocked layout."""
+    d = f"{float(damping)!r}D"
+    # R bound once outside the per-vertex lambda: the optimizer inlines
+    # the projection that made R (it counts references, not lambda
+    # calls), which per in-edge would recompute the previous iteration
+    step = (
+        "transform(array(R), r -> transform(G, v -> "
+        f"{float(1.0 - damping)!r}D / size(G) + {d} * aggregate(v.ins, "
+        "0.0D, (acc, e) -> acc + r[e.s] / e._deg)))[0]"
     )
-    # every vertex appears in ew (a src row carries its own edges; a
-    # sink appears as some row's dst), so the vertex set derives from
-    # the checkpointed frame — no second pass over the raw edges
-    nodes = (
-        nodes.select("id")
-        if nodes is not None
-        else ew.select(
-            F.explode(F.array("e_src", "e_dst")).alias("id")
-        )
-        .distinct()
-        .localCheckpoint()
+    st = state.selectExpr("G", "transform(G, v -> 1.0D / size(G)) AS R")
+    for _ in range(n_iter):
+        st = st.selectExpr("G", f"{step} AS R")
+    return st.selectExpr(
+        "inline(zip_with(G, R, (v, x) -> struct(v.id AS id, x AS rank)))"
     )
-    n = nodes.count()
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        contribs = (
-            ew.join(ranks, ew.e_src == ranks.id)
-            .groupBy(F.col("e_dst").alias("id"))
-            .agg(F.sum(F.col("rank") / F.col("_deg")).alias("_in"))
-        )
-        ranks = nodes.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit((1.0 - damping) / n)
-                + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if (i + 1) % checkpoint_interval == 0 and i != n_iter - 1:
-            ranks = ranks.localCheckpoint()
-    # LAZY checkpoint of the returned frame: the first action
-    # materializes the rounds exactly once and pins the values, so a
-    # consumer running several actions (count + collect, a retry) never
-    # recomputes — and never observes bitwise-different ranks from a
-    # different task-completion order of the double sums (the float
-    # drift class the cross-engine determinism notes guard against).
-    # The frame is vertex-sized.  Not free at build time: under AQE a
-    # lazy localCheckpoint runs every exchange stage of the pinned
-    # subtree when it is called (only the final collect waits for an
-    # action), so the rounds' shuffles run inside the builder.
-    return ranks.localCheckpoint(eager=False)
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -1212,12 +1212,13 @@ def _cell_pagerank_oracle() -> str:
     "(distinct consecutive coarse-cell pairs per vehicle — one lag "
     "window on the shared vehicle-key exchange, then DISTINCT). The "
     "cross-tier composition: trajectory operators feed the iterative "
-    "graph tier; cell ids are already longs, so the rounds hash 8-byte "
-    "keys. Oracle: the power iteration unrolled into 5 chained CTEs "
-    "behind the trajectory/edge derivation.",
+    "graph tier, which gathers the edges into one row of array state "
+    "(operators.graph.pagerank_state) so each of the 5 rounds is a "
+    "projection of that row. Oracle: the power iteration unrolled into "
+    "5 chained CTEs behind the trajectory/edge derivation.",
 )
 def geo_cell_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hfp_loader_spark.operators.graph import pagerank
+    from hfp_loader_spark.operators.graph import pagerank, pagerank_state
 
     tr = _traj(spark, sf_dir)
     w = Window.partitionBy("vehicle_id").orderBy("rn")
@@ -1239,7 +1240,7 @@ def geo_cell_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ranks = pagerank(
-        edges, n_iter=_CELL_PR_ITER, damping=_CELL_PR_DAMP
+        pagerank_state(edges), n_iter=_CELL_PR_ITER, damping=_CELL_PR_DAMP
     )
     return ranks.select(
         F.col("id").alias("node"), F.round("rank", 9).alias("rank")

@@ -1634,16 +1634,17 @@ def _bpe_oracle(n_merges: int) -> str:
 @defquery(
     "text_bpe_merges",
     _bpe_oracle(_BPE_MERGES),
-    doc="BPE tokenizer TRAINING as unrolled Catalyst plans "
-    "(operators.bpe.bpe_train; r12): classic word-level byte-pair "
-    "encoding — corpus tokenized and word-counted ONCE, then 6 merge "
-    "rounds iterate on the bounded distinct-word vocab frame (the "
-    "corpus-once/iterate-on-bounded-state shape of the k-means "
-    "trilogy): pair counts via one explode+aggregate, argmax via "
-    "TakeOrderedAndProject with lexicographic ties, greedy "
-    "left-to-right merge as an expression-only F.aggregate fold (no "
-    "UDF, no shuffle), 1-row LEFT-joined argmax so a pair-less corpus "
-    "degrades to fewer merges instead of an annihilated vocab. Output "
+    doc="BPE tokenizer TRAINING as one lazy plan "
+    "(operators.bpe.bpe_train): classic word-level byte-pair "
+    "encoding — corpus tokenized and word-counted ONCE, then one "
+    "global aggregate gathers the distinct-word vocab into ONE row of "
+    "(word, freq, symbols) structs, and each of the 6 merge rounds is "
+    "a projection of that row (no join, no exchange, no pin): the "
+    "freq-weighted adjacent pairs flattened into one sorted array, one "
+    "fold over it for the best run (count desc, pair asc), and the "
+    "greedy left-to-right merge fold over every word; a pair-less "
+    "round merges nothing and emits no row, so a corpus that runs out "
+    "of pairs degrades to fewer merges. Output "
     "= the ordered merge table — THE tokenizer artifact. FULL oracle "
     "via an INDEPENDENT greedy formulation (gaps-and-islands parity "
     "over exploded symbol positions), so two distinct derivations of "

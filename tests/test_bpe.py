@@ -87,3 +87,29 @@ def test_bpe_train_degrades_when_pairs_run_out(spark):
         [(1, "a b c a b")], "doc_id long, text string"
     )
     assert bpe_train(docs, 5).count() == 0
+
+
+def test_bpe_train_on_empty_documents_has_no_rows(spark):
+    """An all-empty ``documents`` table gathers an empty vocabulary:
+    every round finds no pair, so the merge table is empty."""
+    from hfp_loader_spark.operators.bpe import bpe_train
+
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    assert bpe_train(docs, 6).collect() == []
+
+
+def test_bpe_round_best_pair_is_bound_once_per_round(spark):
+    """Each round binds its best pair outside the per-word lambda, so
+    the fold over the round's pair array runs once per round, not once
+    per word."""
+    from plan_text import call_bodies, optimized_plan
+
+    from hfp_loader_spark.operators.bpe import bpe_train
+
+    docs = spark.createDataFrame(
+        [(1, "low lower newest widest")], "doc_id long, text string"
+    )
+    plan = optimized_plan(bpe_train(docs, 3))
+    words = call_bodies(plan, "transform(V#")
+    assert words and "array_sort(flatten(" in plan
+    assert not [w for w in words if "array_sort(flatten(" in w]

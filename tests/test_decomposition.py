@@ -14,6 +14,7 @@ from hfp_loader_spark.operators.decomposition import (
     project_pc1,
     scatter_stats,
 )
+from plan_text import call_bodies, optimized_plan
 
 VECS = [
     (1, [0.5, -0.25, 0.125]),
@@ -89,21 +90,6 @@ def test_power_iteration_matches_replica(emb):
     assert rows[0]["eigenvalue"] == pytest.approx(eig_exp, abs=0)
 
 
-def _call_bodies(plan: str, head: str) -> list[str]:
-    """Each ``head…)`` call in a plan string, parentheses balanced."""
-    out = []
-    start = plan.find(head)
-    while start >= 0:
-        depth = 0
-        for k in range(plan.index("(", start), len(plan)):
-            depth += {"(": 1, ")": -1}.get(plan[k], 0)
-            if depth == 0:
-                break
-        out.append(plan[start : k + 1])
-        start = plan.find(head, start + 1)
-    return out
-
-
 def test_power_steps_normalize_once_per_step(emb):
     """The optimizer folds each step's normalization into the next
     step's matvec projection.  The matvec binds the vector outside its
@@ -112,8 +98,8 @@ def test_power_steps_normalize_once_per_step(emb):
     st = power_iterate(
         centered_scatter(scatter_stats(emb, scale=SCALE)), 3, VSCALE
     )
-    plan = st._jdf.queryExecution().optimizedPlan().toString()
-    rows = _call_bodies(plan, "transform(A#")
+    plan = optimized_plan(st)
+    rows = call_bodies(plan, "transform(A#")
     assert rows and "_m#" in plan
     assert not [r for r in rows if "_m#" in r]
 

@@ -72,26 +72,62 @@ PCA_ENTRIES = [
 ]
 
 
-@pytest.mark.parametrize("name", PCA_ENTRIES)
-def test_pca_builders_start_no_job(spark, sf_dir, name):
-    """The PCA entries are one lazy plan each: building one (after a
-    first build has cached the table schema) starts no Spark job."""
+def _builder_jobs(spark, sf_dir, name: str) -> int:
+    """Jobs a warm call of ``name``'s builder starts (a first build has
+    cached the table schema and any served artifact)."""
     from hfp_loader_spark.plans.catalog import REGISTRY
 
     build = REGISTRY[name].builder
     build(spark, sf_dir)
     j0 = _next_job(spark)
     build(spark, sf_dir)
-    assert _next_job(spark) == j0
+    return _next_job(spark) - j0
+
+
+def _write_jobs(spark, sf_dir, name: str) -> int:
+    """Jobs a warm build plus one noop write of ``name`` runs."""
+    from hfp_loader_spark.plans.catalog import REGISTRY
+
+    build = REGISTRY[name].builder
+    build(spark, sf_dir)
+    j0 = _next_job(spark)
+    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return _next_job(spark) - j0
+
+
+@pytest.mark.parametrize("name", PCA_ENTRIES)
+def test_pca_builders_start_no_job(spark, sf_dir, name):
+    """The PCA entries are one lazy plan each: building one (after a
+    first build has cached the table schema) starts no Spark job."""
+    assert _builder_jobs(spark, sf_dir, name) == 0
 
 
 def test_pc1_write_runs_at_most_four_jobs(spark, sf_dir):
     """One noop write of pc1: the stats aggregate, the one-row
     aggregate and the result stage (23 jobs with a pin per step)."""
-    from hfp_loader_spark.plans.catalog import REGISTRY
+    assert _write_jobs(spark, sf_dir, "emb_power_iteration_pc1") <= 4
 
-    build = REGISTRY["emb_power_iteration_pc1"].builder
-    build(spark, sf_dir)
-    j0 = _next_job(spark)
-    build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    assert _next_job(spark) - j0 <= 4
+
+ROUND_STATE_ENTRIES = [
+    "text_bpe_merges",
+    "graph_pagerank_cust_supp",
+    "geo_cell_pagerank",
+]
+
+
+@pytest.mark.parametrize("name", ROUND_STATE_ENTRIES)
+def test_round_state_builders_start_no_job(spark, sf_dir, name):
+    """BPE merges and PageRank iterate over one row of array state, so
+    their rounds are projections: a warm build starts no Spark job (13,
+    16 and 23 jobs with a pin per round)."""
+    assert _builder_jobs(spark, sf_dir, name) == 0
+
+
+@pytest.mark.parametrize(
+    "name, cap", [("text_bpe_merges", 3), ("graph_pagerank_cust_supp", 2)]
+)
+def test_round_state_write_jobs(spark, sf_dir, name, cap):
+    """One noop write: for BPE the word-count aggregate, the one-row
+    aggregate and the result stage (20 jobs with a pin per round); for
+    PageRank the read of the served one-row state (17 jobs)."""
+    assert _write_jobs(spark, sf_dir, name) <= cap

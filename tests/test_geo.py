@@ -543,7 +543,7 @@ def test_position_log_lifecycle_append_compact_rematerialize(
 #: claims each entry's docstring makes: one vehicle-key exchange for
 #: the window family, literal-argmin (not join) for nearest-stop (was
 #: 10 before the rewrite, now 4), blocked equi-join (never cartesian)
-#: for close contacts, lazily-chained fixed rounds for pagerank (r16).
+#: for close contacts, one-row state for pagerank.
 GEO_PLAN_CAPS = {
     "geo_leg_speed_profile": dict(max_exchanges=4, bnlj=0),
     "geo_grid_density": dict(max_exchanges=6, bnlj=0),
@@ -558,11 +558,11 @@ GEO_PLAN_CAPS = {
     "geo_geofence_counts": dict(max_exchanges=6, bnlj=0),
     "geo_close_contacts": dict(max_exchanges=5, bnlj=0),
     "geo_trip_summaries": dict(max_exchanges=4, bnlj=0),
-    # r16: pagerank rounds chain lazily into one plan (per-round
-    # localCheckpoint cost ~2x the computation), so the final plan
-    # carries every round's join+agg exchange — same cap rationale as
-    # graph_pagerank_cust_supp in test_plan_audit.py
-    "geo_cell_pagerank": dict(max_exchanges=32, bnlj=0),
+    # the trajectory edges and the one-row state build (degree, dense
+    # index, in-edge lists, one global aggregate) carry every exchange;
+    # the 5 rounds are projections of that row and add none (measured
+    # 19)
+    "geo_cell_pagerank": dict(max_exchanges=21, bnlj=0),
     "geo_geofence_crossings": dict(max_exchanges=4, bnlj=0),
     "geo_heading_octants": dict(max_exchanges=6, bnlj=0),
     # Arrow applyInPandas walk (FlatMapGroupsInPandas counts under

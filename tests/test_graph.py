@@ -4,7 +4,12 @@ from __future__ import annotations
 
 import pytest
 
-from hfp_loader_spark.operators.graph import connected_components
+from hfp_loader_spark.operators.graph import (
+    connected_components,
+    pagerank,
+    pagerank_state,
+)
+from plan_text import call_bodies, optimized_plan
 
 
 def _components(spark, edges, **kw):
@@ -162,35 +167,46 @@ def test_cluster_keepers_excludes_null_scores(spark):
     assert out == {1: (3, 2, 0.7)}
 
 
-def test_pagerank_prepared_path_is_byte_identical(spark):
-    """The prepared/served contract (r16): handing pagerank a
-    pre-materialized prepare_pagerank_edges frame (plus an explicit
-    vertex frame, as the stamped-snapshot serve path does) must produce
-    byte-identical ranks to the self-mining path — the warm-serve
-    rewrite can never drift the arithmetic."""
-    from hfp_loader_spark.operators.graph import (
-        pagerank,
-        prepare_pagerank_edges,
-    )
-
-    edges = spark.createDataFrame(
+def _edges(spark):
+    return spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 1), (4, 1), (2, 3)],  # incl. dup edge
         "src long, dst long",
     )
-    base = {
-        r["id"]: r["rank"] for r in pagerank(edges, n_iter=5).collect()
-    }
 
-    ew = prepare_pagerank_edges(edges).localCheckpoint()
-    nodes = (
-        ew.selectExpr("explode(array(e_src, e_dst)) AS id")
-        .distinct()
-        .localCheckpoint()
-    )
-    served = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            ew, n_iter=5, prepared=True, nodes=nodes
-        ).collect()
-    }
-    assert served == base  # exact float equality: same plan arithmetic
+
+def _ranks(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_pagerank_parquet_state_is_byte_identical(spark, tmp_path):
+    """The served contract: a ``pagerank_state`` row committed to
+    parquet and read back gives bit-identical ranks to the inline state
+    — the warm-serve path can never drift the arithmetic."""
+    state = pagerank_state(_edges(spark))
+    path = str(tmp_path / "state")
+    state.write.parquet(path)
+    served = pagerank(spark.read.parquet(path), n_iter=5)
+    assert _ranks(served) == _ranks(pagerank(state, n_iter=5))
+
+
+def test_pagerank_unpinned_collects_are_bit_identical(spark):
+    """No pin holds the ranks: every in-edge sum runs in array order,
+    so two actions over one frame see the same doubles."""
+    ranks = pagerank(pagerank_state(_edges(spark)), n_iter=5)
+    assert "LocalCheckpoint" not in optimized_plan(ranks)
+    assert _ranks(ranks) == _ranks(ranks)
+
+
+def test_pagerank_empty_graph_has_no_rows(spark):
+    """The DuckDB oracles return no rows for an empty edge list."""
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert pagerank(pagerank_state(edges), n_iter=5).collect() == []
+
+
+def test_pagerank_iterate_is_bound_once_per_step(spark):
+    """Each step binds the previous ranks outside its per-vertex
+    lambda, so no step's vertex loop recomputes the step before it."""
+    plan = optimized_plan(pagerank(pagerank_state(_edges(spark)), n_iter=5))
+    steps = call_bodies(plan, "transform(G#")
+    assert len(steps) >= 5
+    assert not [b for b in steps if b.count("transform(G#") > 1]

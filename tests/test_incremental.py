@@ -7,7 +7,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from hfp_loader_spark.operators.graph import pagerank
+from hfp_loader_spark.operators.graph import pagerank, pagerank_state
 from hfp_loader_spark.operators.relational import merge_upsert, scd2_intervals
 
 
@@ -83,7 +83,8 @@ def _py_pagerank(edges, n_iter=5, d=0.85):
 )
 def test_pagerank_matches_reference_power_iteration(spark, edges):
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=5).collect()}
+    ranks = pagerank(pagerank_state(df), n_iter=5)
+    got = {r["id"]: r["rank"] for r in ranks.collect()}
     want = _py_pagerank(edges, n_iter=5)
     assert set(got) == set(want)
     for v in want:
@@ -95,7 +96,8 @@ def test_pagerank_duplicate_edges_collapse(spark):
     df = spark.createDataFrame(
         [("a", "b"), ("a", "b"), ("b", "a")], ["src", "dst"]
     )
-    got = {r["id"]: r["rank"] for r in pagerank(df, n_iter=3).collect()}
+    ranks = pagerank(pagerank_state(df), n_iter=3)
+    got = {r["id"]: r["rank"] for r in ranks.collect()}
     want = _py_pagerank([("a", "b"), ("b", "a")], n_iter=3)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-12)

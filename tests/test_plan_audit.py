@@ -131,11 +131,10 @@ HEADLINE_INVARIANTS = {
     "events_funnel_windowed": dict(max_exchanges=4, bnlj=0),
     "dedup_duplicate_clusters": dict(max_exchanges=6, bnlj=0),
     "graph_khop_reachability": dict(max_exchanges=2, bnlj=0),
-    # r16: the 5 pagerank rounds chain LAZILY into one declarative plan
-    # (per-round localCheckpoint cost ~2× the computation at sf0.1), so
-    # the final plan carries every round's join+agg exchange: ~6 per
-    # round off the two checkpointed inputs. 32 caps 5 rounds with slack.
-    "graph_pagerank_cust_supp": dict(max_exchanges=32, bnlj=0),
+    # One-row state: the rounds are projections of the served
+    # one-row graph snapshot, so the plan is a parquet scan and no
+    # exchange (measured 0 at sf0.001; +2 margin).
+    "graph_pagerank_cust_supp": dict(max_exchanges=2, bnlj=0),
     "semdedup_keep_list": dict(max_exchanges=4, bnlj=0),
     "decontaminate_ngram_overlap": dict(max_exchanges=10, bnlj=0),
     "sample_dsir_importance": dict(
@@ -171,11 +170,11 @@ HEADLINE_INVARIANTS = {
     "sim_ann_ivf_exact_cells": dict(max_exchanges=55, bnlj=16),
     "sim_ann_pq_exact_codes": dict(max_exchanges=72, bnlj=0),
     "emb_kmeans_by_label": dict(max_exchanges=33, bnlj=0),
-    # r12: BPE training — the returned frame unions the per-round
-    # checkpointed argmax rows (the training rounds execute inside the
-    # checkpoint materializations, like ivfpq's ADC stage), so the
-    # final plan must stay trivially bounded; the per-round training
-    # shape is pinned by the oracle equality + test_bpe.py.
+    # One-row state: the word-count aggregate's hash exchange and the
+    # one global aggregate into the state row, then every merge round
+    # is a projection of that row (measured 2 at sf0.001, the plan
+    # string double-printing one exchange); the training arithmetic is
+    # pinned by the oracle equality + test_bpe.py.
     "text_bpe_merges": dict(max_exchanges=2, bnlj=0),
     # r12: trajectory tier — the whole per-vehicle window family
     # (row_number + 5 lags + aggregate) on ONE vehicle-key exchange
